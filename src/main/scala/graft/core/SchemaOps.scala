@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -64,7 +66,12 @@ object SchemaOps {
 
   /** Build a raw grid DataFrame from driver-side rows of strings, with
     * positional columns c0..cN and an explicit `_row_idx`. This is the shape
-    * every Excel-like source must deliver (FIXTURES.md). */
+    * every Excel-like source must deliver (FIXTURES.md).
+    *
+    * The rows are already a driver `Seq`, so the grid is a `LocalRelation`:
+    * Catalyst folds filters and projections over it on the driver, and a
+    * collect of such a plan (e.g. [[promoteHeaders]]' header row) starts no
+    * Spark job. */
   def gridFromRows(spark: org.apache.spark.sql.SparkSession,
                    rows: Seq[Seq[String]]): DataFrame = {
     val width = if (rows.isEmpty) 0 else rows.map(_.size).max
@@ -74,8 +81,17 @@ object SchemaOps {
     val data = rows.zipWithIndex.map { case (r, i) =>
       Row.fromSeq(i.toLong +: (0 until width).map(j => if (j < r.size) r(j) else null))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toList), schema)
+    spark.createDataFrame(data.asJava, schema)
+  }
+
+  /** Rename columns by position in one projection: `renames` pairs an
+    * existing column with its new name, every other column keeps its name.
+    * Unlike a `withColumnRenamed` fold, a new name that equals a column
+    * still to be renamed (header text "c2" landing on `c0`) renames only
+    * the column it was meant for. */
+  def renameColumns(df: DataFrame, renames: Seq[(String, String)]): DataFrame = {
+    val to = renames.toMap
+    df.select(df.columns.toIndexedSeq.map(c => qcol(c).as(to.getOrElse(c, c))): _*)
   }
 
   /** P1/P2 header promotion: the row at `_row_idx == headerIdx` becomes the
@@ -87,13 +103,10 @@ object SchemaOps {
     val hdrRow = grid.where(col(RowIdx) === headerIdx).collect()
       .headOption.getOrElse(throw new IllegalArgumentException(
         s"no row at $RowIdx=$headerIdx"))
-    val dataCols = grid.columns.filter(_ != RowIdx)
+    val dataCols = grid.columns.filter(_ != RowIdx).toIndexedSeq
     val names = dedupeHeaders(
-      dataCols.toIndexedSeq.map(c => cleanHeader(Option(hdrRow.getAs[String](c)).getOrElse(""))))
-    val renamed = dataCols.zip(names).foldLeft(grid) {
-      case (df, (old, nw)) => df.withColumnRenamed(old, nw)
-    }
-    renamed.where(col(RowIdx) > headerIdx)
+      dataCols.map(c => cleanHeader(Option(hdrRow.getAs[String](c)).getOrElse(""))))
+    renameColumns(grid, dataCols.zip(names)).where(col(RowIdx) > headerIdx)
   }
 
   /** P3 marker trims — pure column-list slicing. */

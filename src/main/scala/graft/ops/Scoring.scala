@@ -279,7 +279,9 @@ object Scoring {
     * multi-hundred-epoch fits). n enters in-plan as a broadcast one-row
     * count, never a driver constant.
     *
-    * `labelCol` must be 0/1. Output: (bucket BIGINT — −1 is the
+    * `labelCol` must be 0/1; NULL-label docs are dropped up front on
+    * both the local and the distributed path (no label, no gradient, not
+    * counted in n). Output: (bucket BIGINT — −1 is the
     * intercept, weight_u BIGINT micro-units); serve by feeding
     * weight_u/10⁶ per bucket ≥ 0 as [[hashedLinearScore]]'s weight table
     * and the −1 row as its intercept. */
@@ -301,7 +303,7 @@ object Scoring {
     require(epochs > 0, "hashedLinearFit: epochs must be positive")
     require(lrPpm > 0 && lrPpm <= 1000000L,
       "hashedLinearFit: lrPpm must be in (0, 1e6]")
-    val toks = docs.repartition(col(idCol))
+    val toks = docs.where(col(labelCol).isNotNull).repartition(col(idCol))
       .select(col(idCol).as("_id"),
         ((col(labelCol).cast("long") * 2 - 1) * 1000000L).as("_yu"),
         explode_outer(split(lower(trim(col(textCol))), "\\s+")).as("_tok"))

@@ -101,10 +101,8 @@ object FlipsPipeline {
     val rows = body.tail
       .filter(r => Option(r.headOption.orNull).exists(_.trim.nonEmpty))
       .map(r => cut.map(i => r.lift(i).orNull))
-    val grid = SchemaOps.gridFromRows(spark, rows)
-    keptNames.zipWithIndex.foldLeft(grid) { case (df, (n, i)) =>
-      df.withColumnRenamed(s"c$i", n)
-    }
+    SchemaOps.renameColumns(SchemaOps.gridFromRows(spark, rows),
+      keptNames.indices.map(i => s"c$i" -> keptNames(i)))
   }
 
   /** U4+A3: melt branch columns (all but Item / Lot #), parse any number in
@@ -181,10 +179,8 @@ object FlipsPipeline {
     // rename 3rd column DESC
     val finalNames = if (names1.size >= 3) names1.updated(2, "DESC") else names1
     val rows = babyRows.tail.map(r => keptIdx.map(i => r.lift(i).orNull))
-    val grid = SchemaOps.gridFromRows(spark, rows)
-    var df = finalNames.zipWithIndex.foldLeft(grid) { case (d, (n, i)) =>
-      d.withColumnRenamed(s"c$i", n)
-    }
+    var df = SchemaOps.renameColumns(SchemaOps.gridFromRows(spark, rows),
+      finalNames.indices.map(i => s"c$i" -> finalNames(i)))
     // NA cell normalize everywhere
     df = finalNames.foldLeft(df)((d, c) => d.withColumn(c, Na.naNormalize(SchemaOps.qcol(c))))
     // drop NA Item rows, drop NA Lot rows

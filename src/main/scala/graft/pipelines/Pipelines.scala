@@ -2,6 +2,7 @@ package graft.pipelines
 
 import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.core.{Na, SchemaOps}
 import graft.core.SchemaOps.RowIdx
@@ -40,7 +41,16 @@ object Canonical {
 
   /** E3 reindex + E4 type coercion: missing columns null-filled, Branch/Item/
     * Distro -> long (0-fill), XDCK/FOB -> nullable double, EDD -> date, text
-    * columns null -> "". Sorted Branch, Item, Distro Size. */
+    * columns null -> "". Sorted Branch, Item, Distro Size.
+    *
+    * When every leaf of `df`'s plan is a `LocalRelation` (a spreadsheet grid
+    * from [[SchemaOps.gridFromRows]], plus driver-built dimensions), the
+    * sorted result is executed once here and returned as a `LocalRelation`,
+    * so the sinks that read it (the Mega-Script workbook, the ADPO macros)
+    * start no further jobs and never re-run the plan. That collect is
+    * bounded: the input already sat on the driver, and these are the rows
+    * the Mega-Script sink collects anyway. Any other input, such as a grid
+    * derived from a table scan, keeps the lazy plan. */
   def conform(df: DataFrame, cols: Seq[String] = Cols,
               extraIntCols: Set[String] = Set.empty): DataFrame = {
     val intCols = IntCols ++ extraIntCols
@@ -58,7 +68,11 @@ object Canonical {
         else coalesce(trim(base), lit(""))
       typed.as(c)
     }: _*)
-    out.orderBy(col("Branch").asc, col("Item").asc, col("Distro Size").asc)
+    val sorted = out.orderBy(col("Branch").asc, col("Item").asc, col("Distro Size").asc)
+    val driverLocal = df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    if (driverLocal) df.sparkSession.createDataFrame(sorted.collectAsList(), sorted.schema)
+    else sorted
   }
 
   /** E1 constant-column append over (Branch, Item, Distro Size) rows. */

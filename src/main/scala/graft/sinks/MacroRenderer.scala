@@ -1,18 +1,19 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.Exprs
 
 /** K3–K5 terminal-macro sinks (SURVEY.md §2.9): keystroke scripts rendered
   * from the canonical output tables.
   *
-  * Spark-first shape: rows are rendered per group with
-  * `groupByKey(branch).mapGroups` (distributed, rows sorted inside the
-  * group by an explicit key — partition order is never trusted), group
-  * blocks are then ordered by the numeric branch key and concatenated on
-  * the driver, because the sink is ONE ordered text file. At 100 TB the
-  * same mapGroups scales out; only the final tiny concat is driver-side.
+  * Shape: the sink is ONE ordered text file on the driver, so each renderer
+  * selects the typed fields it needs, collects those rows, and groups, sorts
+  * and renders them on the driver. The typed rows are several times smaller
+  * than the text rendered from them, so collecting them costs less than
+  * rendering on executors and collecting the text. Row order is always an
+  * explicit sort key — partition order is never trusted. The inputs are the
+  * post-aggregation canonical tables (10¹–10³ rows in the reference), the
+  * same rows the Mega-Script sink collects.
   *
   * Templates follow /root/reference/247/tools/allocation_tool.py:230-336
   * (ADPO X), /root/reference/Flips/tools/adpo_I_tool.py:73-288 (ADPO I),
@@ -34,9 +35,10 @@ object MacroRenderer {
     (n, b)
   }
 
-  /** Canonical DataFrame -> typed rows (branch/item/qty/edd/xdck/fob).
-    * EDD: real DATE columns render MM/dd/yy (F14); strings pass through. */
-  private def adpoRows(df: DataFrame)(implicit spark: SparkSession): Dataset[AdpoRow] = {
+  /** Canonical DataFrame -> collected typed rows (branch/item/qty/edd/xdck/
+    * fob). EDD: real DATE columns render MM/dd/yy (F14); strings pass
+    * through. */
+  private def adpoRows(df: DataFrame)(implicit spark: SparkSession): Seq[AdpoRow] = {
     import spark.implicits._
     val eddIsDate = df.schema("Expected Delivery Date").dataType
       .isInstanceOf[org.apache.spark.sql.types.DateType]
@@ -50,23 +52,19 @@ object MacroRenderer {
         coalesce(eddCol, lit("")).as("edd"),
         coalesce(col("XDCK").cast("string"), lit("")).as("xdck"),
         coalesce(col("FOB").cast("string"), lit("")).as("fob"))
-      .as[AdpoRow]
+      .as[AdpoRow].collect().toSeq
   }
 
-  /** Group blocks rendered distributed, ordered by numeric branch, joined. */
-  private def renderGrouped(rows: Dataset[AdpoRow])(
-      render: (String, Seq[AdpoRow]) => Seq[String])(
-      implicit spark: SparkSession): String = {
-    import spark.implicits._
-    val blocks = rows.groupByKey(_.branch)
-      .mapGroups { (branch, it) =>
-        val sorted = it.toSeq.sortBy(r => (r.item, r.qty))
-        (branch, render(branch, sorted).mkString("\n"))
-      }
-      .collect()
+  /** Group blocks ordered by numeric branch, rows inside a group by
+    * (item, qty), each group rendered and the blocks joined. */
+  private def renderGrouped(rows: Seq[AdpoRow])(
+      render: (String, Seq[AdpoRow]) => Seq[String]): String =
+    rows.groupBy(_.branch).toSeq
       .sortBy { case (b, _) => branchSortKey(b) }
-    blocks.map(_._2).mkString("\n")
-  }
+      .map { case (branch, rs) =>
+        render(branch, rs.sortBy(r => (r.item, r.qty))).mkString("\n")
+      }
+      .mkString("\n")
 
   // ── K3: ADPO X ─────────────────────────────────────────────────────────
 
@@ -170,31 +168,29 @@ object MacroRenderer {
 
   // ── K5: DLPM (per-row template) ────────────────────────────────────────
 
-  /** Per-ROW 31-line template over (Store#, Item#, Vendor#, Cost). Rendering
-    * is a distributed map; ordering key = (Store#, Item#). */
-  def dlpm(df: DataFrame, initials: String, dateText: String)(
-      implicit spark: SparkSession): String = {
-    import spark.implicits._
+  /** Per-ROW 31-line template over (Store#, Item#, Vendor#, Cost): the
+    * typed rows are collected, ordered by (Store#, Item#) and rendered on
+    * the driver. */
+  def dlpm(df: DataFrame, initials: String, dateText: String): String = {
     val rows = df.select(
-        col("Store#").cast("string").as("store"),
-        col("Item#").cast("string").as("item"),
-        col("Vendor#").cast("string").as("vendor"),
-        format_string("%.2f", col("Cost").cast("double")).as("cost"))
-      .as[(String, String, String, String)]
-      .map { case (store, item, vendor, cost) =>
-        val block = Seq(
-          "Key Tab", s"Type $store-${itemCode7(item)}", "Key Tab",
-          "Key Delete", "Type H", "Key Tab", "Type A", "Key Enter",
-          s"Type $dateText", "Key Tab", "Key Tab", "Key Tab",
-          s"Type $initials", "Key Tab", "Key Tab", "Key Tab", "Key Tab",
-          s"Type $vendor", "Key Tab", "Key Tab", "Key Tab", "Key Tab",
-          "Key Tab", s"Type $cost", "Key Enter", "Type n", "Key Enter",
-          "Key Enter", "Key Enter", "Key Enter", "Key Enter", "Key Enter")
-        (store, item, block.mkString("\n"))
-      }
+        col("Store#").cast("string"),
+        col("Item#").cast("string"),
+        col("Vendor#").cast("string"),
+        format_string("%.2f", col("Cost").cast("double")))
       .collect()
-      .sortBy { case (s, i, _) => (branchSortKey(s), i) }
-    rows.map(_._3).mkString("\n")
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+      .sortBy { case (store, item, _, _) => (branchSortKey(store), item) }
+    rows.map { case (store, item, vendor, cost) =>
+      Seq(
+        "Key Tab", s"Type $store-${itemCode7(item)}", "Key Tab",
+        "Key Delete", "Type H", "Key Tab", "Type A", "Key Enter",
+        s"Type $dateText", "Key Tab", "Key Tab", "Key Tab",
+        s"Type $initials", "Key Tab", "Key Tab", "Key Tab", "Key Tab",
+        s"Type $vendor", "Key Tab", "Key Tab", "Key Tab", "Key Tab",
+        "Key Tab", s"Type $cost", "Key Enter", "Type n", "Key Enter",
+        "Key Enter", "Key Enter", "Key Enter", "Key Enter", "Key Enter"
+      ).mkString("\n")
+    }.mkString("\n")
   }
 
   def dlpmFileName(dateFile: String): String = s"$dateFile 247DLPM.txt"

@@ -21,6 +21,16 @@ class SchemaOpsSpec extends SparkSpec {
     assert(df.where(s"${SchemaOps.RowIdx} <= 1").count() == 0)
   }
 
+  test("promoteHeaders renames by position: a header reading like a later " +
+      "positional name renames only its own column") {
+    val grid = SchemaOps.gridFromRows(spark, Seq(
+      Seq("c2", "C1", "qty"),
+      Seq("a", "b", "7")))
+    val df = SchemaOps.promoteHeaders(grid)
+    assert(df.columns.toSeq == Seq(SchemaOps.RowIdx, "c2", "C1", "qty"))
+    assert(rows(df.drop(SchemaOps.RowIdx)) == Seq(Seq("a", "b", "7")))
+  }
+
   test("P7 cleanHeader: strip trailing .0/.00 only from numeric-looking names") {
     assert(SchemaOps.cleanHeader("114.0") == "114")
     assert(SchemaOps.cleanHeader("114.00") == "114")

@@ -230,6 +230,25 @@ class ScoringSpec extends SparkSpec {
     assert(modelOf(true) == modelOf(false))
   }
 
+  test("hashedLinearFit: NULL-label docs are dropped on both paths, so " +
+      "local == distributed == the fit without them") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "good good fine", Some(1)),
+      (2L, "bad poor bad", Some(0)),
+      (3L, "good bad", None),
+      (4L, "fine fine good", Some(1)),
+      (5L, "poor", None)).toDF("doc_id", "text", "label")
+    def fit(in: org.apache.spark.sql.DataFrame, local: Boolean) =
+      Scoring.hashedLinearFitImpl(in, "doc_id", "text", "label",
+          buckets = 32, epochs = 3, lrPpm = 250000L, checkpointDir = None,
+          allowLocal = local)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val labeled = fit(docs.where(col("label").isNotNull), local = false)
+    assert(fit(docs, local = true) == labeled)
+    assert(fit(docs, local = false) == labeled)
+  }
+
   test("bradleyTerry: the driver-local MM replay equals the distributed " +
       "loop bit-for-bit") {
     import spark.implicits._
