@@ -45,6 +45,7 @@ object AbBench {
     SparkEntry.entry(spark).count()
 
     def isolate(): Unit = {
+      graft.core.Caches.release()
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

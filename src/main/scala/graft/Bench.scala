@@ -262,6 +262,7 @@ object Bench {
       * heap, so one run's persists/garbage/cleanup-IO can't distort the
       * next run. */
     def isolate(): Unit = {
+      graft.core.Caches.release()
       spark.sharedState.cacheManager.clearCache()
       // clearCache() drops SQL-level cache entries but block eviction is
       // async; unpersist the underlying RDDs BLOCKING so run N's block-

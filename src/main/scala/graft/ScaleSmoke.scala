@@ -250,7 +250,7 @@ object ScaleSmoke {
       .head().getLong(0)
     println(f"pii_redact_100k: hits=$npii " +
       f"time=${(System.nanoTime()-tpi)/1e9}%.1f s")
-    graft.ops.Dedup.releaseCaches()
+    graft.core.Caches.release()
     // ── Adversarial boilerplate corpus (round 9): ONE viral block in 20%
     // of the 100k docs (df ≈ 20k — the license-header shape) plus 50
     // near-pure-boilerplate shard docs. The shards' rarest-first PREFIXES
@@ -290,7 +290,7 @@ object ScaleSmoke {
       shingleN = 8, threshold = 0.9, maxDf = Int.MaxValue).count()
     println(f"containment_boiler_100k_unguarded: pairs=$nu time=${(System.nanoTime()-tu)/1e9}%.1f s")
     assert(ng == nu, s"salt guard changed the pair count: $ng vs $nu")
-    graft.ops.Dedup.releaseCaches()
+    graft.core.Caches.release()
     // Incremental cluster maintenance (round 15): the 90k corpus's
     // assignment round-trips parquet (build cost outside the timer —
     // it's the one-time full dedup), then a 10k crawl batch's cross +
@@ -305,7 +305,7 @@ object ScaleSmoke {
           shingleN = 8, k = 64, bands = 16, rows = 4, threshold = 0.8))
       .select(col("doc_id"), col("cluster_id"))
       .write.mode("overwrite").parquet(s"$tmpBase/scale_clusters")
-    graft.ops.Dedup.releaseCaches()
+    graft.core.Caches.release()
     val tca = System.nanoTime()
     val crossP = graft.ops.Dedup.minHashLshPairsAgainst(batch10, corpus90,
         "doc_id", "text", shingleN = 8, k = 64, bands = 16, rows = 4,
@@ -340,7 +340,7 @@ object ScaleSmoke {
       m = 2, maxCluster = 4096).count()
     println(f"positive_pairs_100k_viral: pairs=$npp " +
       f"time=${(System.nanoTime()-tpp)/1e9}%.1f s")
-    graft.ops.Dedup.releaseCaches()
+    graft.core.Caches.release()
     }
 
     if (sections("vectors")) {
@@ -575,10 +575,9 @@ object ScaleSmoke {
         s.toIndexedSeq
       }
       import spark.implicits._
-      val bigDocs = (0L until sz(100000)).map { i =>
+      val bigDocs = graft.core.Caches.pin((0L until sz(100000)).map { i =>
         (i, Seq.fill(12)(pool(rnd.nextInt(pool.size))).mkString(" "))
-      }.toDF("doc_id", "text").repartition(32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.toDF("doc_id", "text").repartition(32))
       bigDocs.count()
       val tbl = System.nanoTime()
       val bigMerges = graft.ops.Export.bpeLearn(bigDocs, "text",
@@ -591,7 +590,7 @@ object ScaleSmoke {
         bigMerges, bigVocab, oovBuckets = 4096).count()
       println(f"bpe_encode_100k_${bigMerges.size}merges: rows=$nbe " +
         f"time=${(System.nanoTime()-tbe)/1e9}%.1f s")
-      bigDocs.unpersist()
+      graft.core.Caches.unpin(bigDocs)
     }
 
     if (sections("graph")) {
@@ -774,7 +773,7 @@ object ScaleSmoke {
         f"time=${(System.nanoTime()-tsa)/1e9}%.1f s")
       spark.sql("DROP TABLE IF EXISTS smoke_spine_edges")
       spark.sql("DROP TABLE IF EXISTS smoke_spine_adj")
-      graft.ops.Dedup.releaseCaches()
+      graft.core.Caches.release()
     }
 
     if (sections("sketches")) {

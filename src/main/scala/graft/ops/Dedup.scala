@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Caches
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -30,50 +31,9 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  // ── Cache lifecycle ────────────────────────────────────────────────────
-
-  /** Close handle over the persisted intermediates of ONE dedup-op
-    * invocation. `close()` unpersists them; call it AFTER consuming
-    * (materializing) the op's result — the result frame stays valid
-    * afterwards but recomputes its lineage from scratch on later actions.
-    * The `*WithCleanup` op variants return one of these; the plain ops
-    * register theirs in a library-wide list drained by [[releaseCaches]]. */
-  final class CacheHandle private[ops] (cleanups: Seq[() => Unit]) {
-    private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def close(): Unit = if (closed.compareAndSet(false, true)) cleanups.foreach(_())
-  }
-  private[ops] object CacheHandle {
-    val empty = new CacheHandle(Nil)
-    def of(frames: DataFrame*): CacheHandle =
-      new CacheHandle(frames.map(f => () => { f.unpersist(blocking = false); () }))
-  }
-
-  private val openHandles =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[CacheHandle]())
-
-  private def tracked(result: DataFrame, handle: CacheHandle): DataFrame = {
-    openHandles.add(handle); result
-  }
-
-  /** Register a handle in the library-wide [[releaseCaches]] registry —
-    * for sibling ops (e.g. [[Text]]) that persist intermediates under the
-    * same lifecycle contract. */
-  private[ops] def register(handle: CacheHandle): Unit = {
-    openHandles.add(handle); ()
-  }
-
-  /** Unpersist every intermediate the plain (non-`WithCleanup`) dedup ops
-    * have persisted so far — the library-embedding contract: a long-lived
-    * service calls this after each batch of dedup work instead of
-    * accumulating storage blocks until session end. Results already
-    * materialized stay valid (they recompute without caches if re-run). */
-  def releaseCaches(): Unit = {
-    val drained = openHandles.synchronized {
-      val c = new java.util.ArrayList[CacheHandle](openHandles)
-      openHandles.clear(); c
-    }
-    drained.forEach(_.close())
-  }
+  /** Drop every intermediate the engine has pinned so far — a forward to
+    * [[Caches.release]], kept for embedders that call it by this name. */
+  def releaseCaches(): Unit = Caches.release()
 
   // ── MinHash ────────────────────────────────────────────────────────────
 
@@ -141,23 +101,11 @@ object Dedup {
                       bands: Int = 16, rows: Int = 4,
                       threshold: Double = 0.8,
                       maxBucket: Int = 1000): DataFrame = {
-    val (r, h) = minHashLshPairsWithCleanup(docs, idCol, textCol, shingleN, k,
-      bands, rows, threshold, maxBucket)
-    tracked(r, h)
-  }
-
-  /** [[minHashLshPairs]] plus a close handle over its persisted
-    * intermediates — the embedding-friendly variant (see [[CacheHandle]]). */
-  def minHashLshPairsWithCleanup(docs: DataFrame, idCol: String, textCol: String,
-                                 shingleN: Int = 8, k: Int = 64,
-                                 bands: Int = 16, rows: Int = 4,
-                                 threshold: Double = 0.8,
-                                 maxBucket: Int = 1000): (DataFrame, CacheHandle) = {
     // The per-doc signature table is referenced three times below (banding +
-    // both verify joins); persist it so the shingle explode + groupBy runs
+    // both verify joins); pin it so the shingle explode + groupBy runs
     // once. It is the compressed working set — ~100× smaller than the text.
-    val perDoc = minHashPerDoc(shingleHashes(docs, idCol, textCol, shingleN), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val perDoc = Caches.pin(
+      minHashPerDoc(shingleHashes(docs, idCol, textCol, shingleN), k))
     // Banding runs on (id, band, bucket) rows — 24 bytes, no arrays.
     val banded = perDoc.select(col("_id"),
       posexplode(bandHashes(col("_sig"), bands, rows)).as(Seq("_band", "_bh")))
@@ -177,7 +125,7 @@ object Dedup {
     // Exact verification: hash sets joined back in only for candidates,
     // intersection computed once.
     val sets = perDoc.select(col("_id"), col("_n"), col("_hs"))
-    (verifyPairs(cand, sets, threshold), CacheHandle.of(perDoc))
+    verifyPairs(cand, sets, threshold)
   }
 
   /** The per-doc MinHash SIGNATURE TABLE — (_id, _n, _hs, _sig): set size,
@@ -205,12 +153,10 @@ object Dedup {
                              bands: Int = 16, rows: Int = 4,
                              threshold: Double = 0.8,
                              maxBucket: Int = 1000): DataFrame = {
-    val corPer = minHashPerDoc(shingleHashes(corpus, idCol, textCol, shingleN), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (r, h) = pairsAgainstSignatures(newDocs, corPer, idCol, textCol,
+    val corPer = Caches.pin(
+      minHashPerDoc(shingleHashes(corpus, idCol, textCol, shingleN), k))
+    minHashLshPairsAgainstSignatures(newDocs, corPer, idCol, textCol,
       shingleN, k, bands, rows, threshold, maxBucket)
-    tracked(r, new CacheHandle(Seq(
-      () => { corPer.unpersist(blocking = false); () }, () => h.close())))
   }
 
   /** The persisted-signature batch path: join a new batch (text) against a
@@ -224,24 +170,13 @@ object Dedup {
                                        bands: Int = 16, rows: Int = 4,
                                        threshold: Double = 0.8,
                                        maxBucket: Int = 1000): DataFrame = {
-    val (r, h) = pairsAgainstSignatures(newDocs, corpusSigs, idCol, textCol,
-      shingleN, k, bands, rows, threshold, maxBucket)
-    tracked(r, h)
-  }
-
-  private def pairsAgainstSignatures(newDocs: DataFrame, corPer: DataFrame,
-                                     idCol: String, textCol: String,
-                                     shingleN: Int, k: Int,
-                                     bands: Int, rows: Int,
-                                     threshold: Double,
-                                     maxBucket: Int): (DataFrame, CacheHandle) = {
-    val newPer = minHashPerDoc(shingleHashes(newDocs, idCol, textCol, shingleN), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newPer = Caches.pin(
+      minHashPerDoc(shingleHashes(newDocs, idCol, textCol, shingleN), k))
     def band(df: DataFrame) = df.select(col("_id"),
       posexplode(bandHashes(col("_sig"), bands, rows)).as(Seq("_band", "_bh")))
     // Hot-bucket guard on the CORPUS side (the big one): a degenerate
     // bucket there multiplies against every colliding new doc.
-    val corBanded = band(corPer)
+    val corBanded = band(corpusSigs)
     val oversized = corBanded.groupBy(col("_band"), col("_bh"))
       .agg(count(lit(1)).as("_bsz")).where(col("_bsz") > maxBucket)
       .select(col("_band"), col("_bh"))
@@ -250,11 +185,10 @@ object Dedup {
       .select(col("x._id").as("doc_a"), col("y._id").as("doc_b"))
       .distinct()
     val sets = newPer.select(col("_id"), col("_n"), col("_hs"))
-      .unionByName(corPer.select(col("_id"), col("_n"), col("_hs")))
-    val out = verifyPairs(cand, sets, threshold)
+      .unionByName(corpusSigs.select(col("_id"), col("_n"), col("_hs")))
+    verifyPairs(cand, sets, threshold)
       .select(col("doc_a").as("new_id"), col("doc_b").as("corpus_id"),
         col("jaccard"))
-    (out, CacheHandle.of(newPer))
   }
 
   /** Exact-Jaccard verification of candidate (doc_a, doc_b) pairs against
@@ -290,20 +224,10 @@ object Dedup {
     * to genuinely-rare shared shingles. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 8, threshold: Double = 0.8): DataFrame = {
-    val (r, h) = ngramJaccardPairsWithCleanup(docs, idCol, textCol, shingleN, threshold)
-    tracked(r, h)
-  }
-
-  /** [[ngramJaccardPairs]] plus a close handle over its persisted
-    * intermediates — the embedding-friendly variant (see [[CacheHandle]]). */
-  def ngramJaccardPairsWithCleanup(docs: DataFrame, idCol: String, textCol: String,
-                                   shingleN: Int = 8,
-                                   threshold: Double = 0.8): (DataFrame, CacheHandle) = {
     // Evaluated three times (document-frequency aggregation, the prefix
-    // ranking, the verify sets); persist so the text is shingled and
+    // ranking, the verify sets); pin so the text is shingled and
     // hashed once.
-    val sh = shingleHashes(docs, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.pin(shingleHashes(docs, idCol, textCol, shingleN))
     // Only hashes appearing in >= 2 docs need an explicit df — the long
     // tail of unique shingles (the bulk of the corpus) defaults to df=1 via
     // the left join + coalesce. That shrinks the join's build side from
@@ -333,18 +257,17 @@ object Dedup {
     // realistic corpus the unique tail dominates the prefix, so the
     // persisted frame and the join both shrink by most of their rows.
     // (Ranks/sizes are computed BEFORE the filter, over the full sets.)
-    val pre = sh.join(df, Seq("_h"), "left")
+    // Referenced by both sides of the candidate self-join: pin the
+    // shared-hash prefix rows so the df join + ranking windows run once,
+    // not once per side.
+    val pre = Caches.pin(sh.join(df, Seq("_h"), "left")
       .withColumn("_df", coalesce(col("_df0"), lit(1L))).drop("_df0")
       .withColumn("_rk", row_number().over(wRank))
       .withColumn("_n", count(lit(1)).over(wDoc))
       .where(col("_rk") <=
         (col("_n") - ceil(col("_n") * lit(threshold) - lit(Eps)) + 1).cast("int") &&
         col("_df") > 1)
-      .select(col("_id"), col("_n"), col("_h"), col("_rk"))
-      // Referenced by both sides of the candidate self-join: persist the
-      // shared-hash prefix rows so the df join + ranking windows run once,
-      // not once per side.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("_id"), col("_n"), col("_h"), col("_rk")))
     // PPJoin positional filter on top of the prefix match: a doc's
     // rank-_rk shingle has only n - _rk shingles after it in the global
     // (df, hash) order, and every common shingle of a candidate pair sits
@@ -364,10 +287,9 @@ object Dedup {
       .distinct()
     // Verification merge input: ascending hash sets, primitive-long sort.
     // Referenced by both verify joins.
-    val sets = sh.groupBy(col("_id")).agg(count(lit(1)).as("_n"),
-        sort_array(collect_list(col("_h"))).as("_hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (verifyPairs(cand, sets, threshold), CacheHandle.of(sh, pre, sets))
+    val sets = Caches.pin(sh.groupBy(col("_id")).agg(count(lit(1)).as("_n"),
+        sort_array(collect_list(col("_h"))).as("_hs")))
+    verifyPairs(cand, sets, threshold)
   }
 
   /** CONTAINMENT near-dup pairs — |A∩B| / min(|A|,|B|) >= threshold — the
@@ -404,18 +326,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 8, threshold: Double = 0.9,
                        maxDf: Int = 100000): DataFrame = {
-    val (r, h) = containmentPairsWithCleanup(docs, idCol, textCol, shingleN,
-      threshold, maxDf)
-    tracked(r, h)
-  }
-
-  /** [[containmentPairs]] plus a close handle over its persisted
-    * intermediates — the embedding-friendly variant (see [[CacheHandle]]). */
-  def containmentPairsWithCleanup(docs: DataFrame, idCol: String, textCol: String,
-                                  shingleN: Int = 8, threshold: Double = 0.9,
-                                  maxDf: Int = 100000): (DataFrame, CacheHandle) = {
-    val sh = shingleHashes(docs, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.pin(shingleHashes(docs, idCol, textCol, shingleN))
     val df = sh.groupBy(col("_h")).agg(count(lit(1)).as("_df0"))
       .where(col("_df0") > 1)
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("_id"))
@@ -428,13 +339,12 @@ object Dedup {
     // whose hash is SHARED (df > 1): a df=1 hash joins no other doc, so
     // dropping those rows from both sides is exact — and on a realistic
     // corpus the unique tail is the bulk of the shingle table.
-    val ranked = sh.join(df, Seq("_h"), "left")
+    val ranked = Caches.pin(sh.join(df, Seq("_h"), "left")
       .withColumn("_df", coalesce(col("_df0"), lit(1L))).drop("_df0")
       .withColumn("_rk", row_number().over(wRank))
       .withColumn("_n", count(lit(1)).over(wDoc))
       .where(col("_df") > 1)
-      .select(col("_id"), col("_n"), col("_h"), col("_rk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("_id"), col("_n"), col("_h"), col("_rk")))
     val pre = ranked.where(col("_rk") <=
       (col("_n") - ceil(col("_n") * lit(threshold) - lit(Eps)) + 1).cast("int"))
     // Hot-hash salt map: df > maxDf → spread across ⌈df/maxDf⌉ sub-keys.
@@ -477,11 +387,10 @@ object Dedup {
       .select(least(col("x._id"), col("y._id")).as("doc_a"),
         greatest(col("x._id"), col("y._id")).as("doc_b"))
       .distinct()
-    // Referenced by both verify joins: persist so the hash sets build once.
-    val sets = sh.groupBy(col("_id")).agg(count(lit(1)).as("_n"),
-        sort_array(collect_list(col("_h"))).as("_hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = cand
+    // Referenced by both verify joins: pin so the hash sets build once.
+    val sets = Caches.pin(sh.groupBy(col("_id")).agg(count(lit(1)).as("_n"),
+        sort_array(collect_list(col("_h"))).as("_hs")))
+    cand
       .join(sets.select(col("_id").as("doc_a"), col("_n").as("_na"), col("_hs").as("_ha")), "doc_a")
       .join(sets.select(col("_id").as("doc_b"), col("_n").as("_nb"), col("_hs").as("_hb")), "doc_b")
       .withColumn("_c",
@@ -490,7 +399,6 @@ object Dedup {
         col("_c").cast("double") / least(col("_na"), col("_nb")).cast("double"))
       .where(col("containment") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("containment"))
-    (out, CacheHandle.of(sh, ranked, sets))
   }
 
   // ── Near-dup clustering (connected components) ─────────────────────────
@@ -512,9 +420,12 @@ object Dedup {
     *
     * Scale shape: edges stay 2 longs/row; every pass is a map-side-combined
     * min() aggregate plus an equi-join on a long key; each iteration's
-    * result is persisted and the logical plan is re-rooted on the
-    * materialized RDD (constant-size plan per round — no O(rounds)
-    * Catalyst re-analysis, no lineage blowup). Convergence is detected by
+    * result is an eager local checkpoint ([[Caches.checkpoint]]), so the
+    * logical plan is re-rooted on the materialized round (constant-size
+    * plan per round — no O(rounds) Catalyst re-analysis, no lineage
+    * blowup) and the superseded round is unpinned once the next one is
+    * materialized. The returned frame reads the FINAL round's checkpoint:
+    * consume it before [[Caches.release]]. Convergence is detected by
     * an order-insensitive edge-set signature (count + sum of per-edge
     * xxhash64) — one tiny aggregate per round, no except()/anti-join.
     *
@@ -535,11 +446,11 @@ object Dedup {
     * to force the distributed path.
     *
     * `checkpointDir`: when set, each round's edge set is written to that
-    * directory (reliable storage) and read back instead of persisted to
-    * executor memory/disk — TRUNCATING LINEAGE every round. That is the
-    * 100 TB configuration: a billion-edge pair graph iterated 10+ rounds
-    * on a real cluster must not carry a 10-round recompute lineage through
-    * executor loss, and MEMORY_AND_DISK blocks die with their executor.
+    * directory (reliable storage) and read back instead of checkpointed
+    * to executor storage. That is the 100 TB configuration: a
+    * billion-edge pair graph iterated 10+ rounds on a real cluster must
+    * survive executor loss, and local-checkpoint blocks die with their
+    * executor.
     * Superseded round files are deleted as the loop advances; the FINAL
     * round's files remain (the returned frame reads them), so the caller
     * owns deleting the directory after consuming the result. */
@@ -548,7 +459,6 @@ object Dedup {
                           localThreshold: Long = 1L << 20,
                           checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // Canonical storage: (_u, _v) with _u < _v, deduped, self-loops gone.
     val canon = pairs
@@ -580,10 +490,8 @@ object Dedup {
       case _ => None
     }
     if (localOrd.isDefined && localThreshold > 0) {
-      val head = canon.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt).collect()
-      if (head.length <= localThreshold) {
-        return localComponents(spark, head, idType, localOrd.get)
-      }
+      val head = Caches.collectAtMost(canon, localThreshold)
+      if (head.isDefined) return localComponents(spark, head.get, idType, localOrd.get)
       // Over budget: fall through to the distributed loop (the collected
       // prefix is discarded — one bounded probe, not corpus-sized).
     }
@@ -628,42 +536,37 @@ object Dedup {
       (r.getLong(0), BigDecimal(r.getDecimal(1)))
     }
 
-    // Materialize + re-root each round. Default path: persist the row RDD
-    // and createDataFrame over it — keeps the recompute path (RDD lineage)
-    // but gives Catalyst a constant-size plan. The cleanup THUNK is
-    // returned alongside the frame because `df.rdd` on the re-rooted frame
-    // builds a FRESH deserializer RDD — unpersisting that would be a no-op
-    // and every round's edge blocks would leak until session end.
-    // Checkpoint path: write the round to reliable storage and read it
-    // back — lineage truncated, blocks survive executor loss; cleanup
-    // deletes the superseded round's files.
-    var round = 0
-    def materialize(e: DataFrame): (DataFrame, () => Unit) = checkpointDir match {
-      case Some(dir) =>
-        val path = s"$dir/round_$round"; round += 1
-        e.write.mode("overwrite").parquet(path)
-        val p = new org.apache.hadoop.fs.Path(path)
-        (spark.read.parquet(path), () => {
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true); ()
-        })
-      case None =>
-        val rdd = e.rdd.persist(MEMORY_AND_DISK)
-        (spark.createDataFrame(rdd, e.schema), () => { rdd.unpersist(blocking = false); () })
-    }
+    // Materialize + re-root each round: an eager local checkpoint, or
+    // with `checkpointDir` a write to reliable storage read back. Round
+    // `r` is dropped (blocks unpinned, or files deleted) once round r + 1
+    // is materialized and compared against it.
+    def roundPath(r: Int) = new org.apache.hadoop.fs.Path(s"${checkpointDir.get}/round_$r")
+    def materialize(e: DataFrame, r: Int): DataFrame =
+      if (checkpointDir.isEmpty) Caches.checkpoint(e)
+      else {
+        e.write.mode("overwrite").parquet(roundPath(r).toString)
+        spark.read.parquet(roundPath(r).toString)
+      }
+    def dropRound(e: DataFrame, r: Int): Unit =
+      if (checkpointDir.isEmpty) Caches.unpin(e)
+      else {
+        val p = roundPath(r)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
 
-    var (cur, curCleanup) = materialize(canon)
+    var cur = materialize(canon, 0)
     var curSig = sig(cur)
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      val (next, nextCleanup) = materialize(smallStar(largeStar(cur)))
-      val nextSig = sig(next) // materializes `next` (reads `cur`) before the cleanup below
+      val next = materialize(smallStar(largeStar(cur)), it + 1)
+      val nextSig = sig(next)
       // Signature match is the cheap trigger; confirm with the airtight
       // set check so a ~2⁻⁶⁴ signature collision can't end the loop early
       // with a non-fixpoint (silently wrong) edge set.
       converged = nextSig == curSig && next.exceptAll(cur).isEmpty
-      curCleanup() // drop the superseded round's blocks/files
-      cur = next; curCleanup = nextCleanup; curSig = nextSig; it += 1
+      dropRound(cur, it)
+      cur = next; curSig = nextSig; it += 1
     }
     // A non-fixpoint edge set is NOT a component map — fail loudly rather
     // than return silently-wrong clusters. (Star rounds converge in
@@ -671,14 +574,6 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter rounds")
-    // The FINAL round's blocks back the returned frame; register them with
-    // the library cache registry (persist path only — checkpoint files are
-    // the caller's to delete, and removing them would break the result
-    // rather than trigger an RDD-lineage recompute).
-    if (checkpointDir.isEmpty) {
-      val finalCleanup = curCleanup
-      openHandles.add(new CacheHandle(Seq(finalCleanup)))
-    }
     // Fixpoint edges are stars (componentMin, member); the center itself is
     // a member of its own component.
     cur.select(col("_v").as("id"), col("_u").as("component"))
@@ -962,21 +857,23 @@ object Dedup {
     }
     val existing = spark.read.parquet(sigDir)
       .select(col("_id"), col("_sig").as("_stored_sig"))
-    // batch-sized after the join; checkpointed once, probed twice
-    val joined = sigs.join(existing, Seq("_id"), "left").localCheckpoint()
-    if (onConflict == "error") {
-      val clash = joined
-        .where(col("_stored_sig").isNotNull && col("_stored_sig") =!= col("_sig"))
-        .select(col("_id")).take(5)
-      if (clash.nonEmpty) throw new IllegalStateException(
-        "signatureIndexAppend: re-crawled id(s) arrived with CHANGED content " +
-          s"(stored signature differs): ${clash.map(_.get(0)).mkString(", ")}" +
-          " ... — an append-only store cannot update in place; compact the " +
-          "store without these ids and re-append, or pass onConflict=\"ignore\"" +
-          " to keep the stale signatures knowingly.")
+    Caches.scoped {
+      // batch-sized after the join; checkpointed once, probed twice
+      val joined = Caches.checkpoint(sigs.join(existing, Seq("_id"), "left"))
+      if (onConflict == "error") {
+        val clash = joined
+          .where(col("_stored_sig").isNotNull && col("_stored_sig") =!= col("_sig"))
+          .select(col("_id")).take(5)
+        if (clash.nonEmpty) throw new IllegalStateException(
+          "signatureIndexAppend: re-crawled id(s) arrived with CHANGED content " +
+            s"(stored signature differs): ${clash.map(_.get(0)).mkString(", ")}" +
+            " ... — an append-only store cannot update in place; compact the " +
+            "store without these ids and re-append, or pass onConflict=\"ignore\"" +
+            " to keep the stale signatures knowingly.")
+      }
+      val delta = joined.where(col("_stored_sig").isNull).drop("_stored_sig")
+      delta.write.mode("append").parquet(sigDir)
     }
-    val delta = joined.where(col("_stored_sig").isNull).drop("_stored_sig")
-    delta.write.mode("append").parquet(sigDir)
   }
 
   /** Incremental CLUSTER maintenance — the third leg of the recurring
@@ -1019,16 +916,15 @@ object Dedup {
     // produce (LSH band join + exact verify): it feeds both the endpoint
     // set and the contracted edges below, so pin it once (r21) — without
     // this the whole pair generation ran twice per append.
-    val p = pairs.select(col(aCol), col(bCol)).localCheckpoint()
+    val p = Caches.checkpoint(pairs.select(col(aCol), col(bCol)))
     val ends = p.select(col(aCol).as("_e"))
       .unionAll(p.select(col(bCol).as("_e"))).distinct()
     // stored rows touched by the delta (batch-sized; ONE streamed pass
     // over the store), materialized so the two contraction joins below
     // don't each rescan the store
-    val touched = clusters
+    val touched = Caches.checkpoint(clusters
       .join(broadcast(ends), clusters(idCol) === col("_e"))
-      .select(col(idCol).as("_tid"), col("cluster_id").as("_tcl"))
-      .localCheckpoint()
+      .select(col(idCol).as("_tid"), col("cluster_id").as("_tcl")))
     def contractSide(df: DataFrame, side: String, out: String): DataFrame = {
       val t = touched.select(col("_tid").as(s"_tid$out"),
         col("_tcl").as(s"_tcl$out"))
@@ -1143,27 +1039,16 @@ object Dedup {
     * the shuffle key stays 2 bytes + chunk index. */
   def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
-                   tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val (r, h) = simHashPairsWithCleanup(docs, idCol, textCol, maxHamming, tokenHash)
-    tracked(r, h)
-  }
-
-  /** [[simHashPairs]] plus a close handle over its persisted intermediate
-    * — the embedding-friendly variant (see [[CacheHandle]]). */
-  def simHashPairsWithCleanup(docs: DataFrame, idCol: String, textCol: String,
-                              maxHamming: Int = 3,
-                              tokenHash: Column => Column = xxhash64(_)): (DataFrame, CacheHandle) = {
-    // Referenced by both sides of the chunk self-join.
-    val sigd = simHashPerDoc(docs, idCol, textCol, tokenHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (hammingBandPairs(sigd, maxHamming), CacheHandle.of(sigd))
-  }
+                   tokenHash: Column => Column = xxhash64(_)): DataFrame =
+    // Pinned: referenced by both sides of the chunk self-join.
+    hammingBandPairs(Caches.pin(simHashPerDoc(docs, idCol, textCol, tokenHash)),
+      maxHamming)
 
   /** Near-dup pairs from ANY per-item 64-bit signature table (_id, _sig) —
     * the banding engine shared by [[simHashPairs]] (text) and
     * [[Multimodal.perceptualHashPairs]] (media): four 16-bit chunks,
     * Hamming <= 3 implies >= 1 identical chunk by pigeonhole, so chunk
-    * equality has recall 1.0 at that radius. Callers persist `sigd` (it is
+    * equality has recall 1.0 at that radius. Callers pin `sigd` (it is
     * referenced by both sides of the self-join). */
   private[ops] def hammingBandPairs(sigd: DataFrame, maxHamming: Int): DataFrame = {
     val chunked = sigd.select(col("_id"), col("_sig"),
@@ -1225,9 +1110,4 @@ object Dedup {
       .where(col("dist") >= 0)
       .select(col("key_a"), col("key_b"), col("dist").cast("int").as("dist"))
   }
-
-  /** Register op-internal persisted frames with the library cache registry
-    * (for sibling ops and query definitions, e.g. [[Multimodal]], q113). */
-  private[graft] def registerCaches(frames: DataFrame*): Unit =
-    openHandles.add(CacheHandle.of(frames.toIndexedSeq: _*))
 }

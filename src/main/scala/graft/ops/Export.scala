@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -80,13 +81,12 @@ object Export {
       spark.sessionState.conf.numShufflePartitions,
       spark.sparkContext.defaultParallelism)
     val ord = Seq(col(scoreCol).desc, col(idCol).asc)
-    // Pinned partition count + persist + pid-from-_mid-as-data: the same
+    // Pinned partition count + pin + pid-from-_mid-as-data: the same
     // correctness triad as globalRowNumber (see the graveyard notes there —
     // sibling-branch range exchanges do NOT bucket identically).
-    val ranked = df.repartitionByRange(parts, ord: _*)
+    val ranked = Caches.pin(df.repartitionByRange(parts, ord: _*)
       .sortWithinPartitions(ord: _*)
-      .withColumn("_mid", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_mid", monotonically_increasing_id()))
     val sums = ranked
       .groupBy(shiftrightunsigned(col("_mid"), 33).as("_pid"))
       .agg(sum(col(tokensCol)).as("_ptok"))
@@ -300,7 +300,7 @@ object Export {
     * (InMemoryRelation embeds its child tree), and by a few dozen rounds
     * the plan string alone OOMs the driver. A per-round checkpoint of a
     * vocab-sized table is cheap at any corpus scale; the previous round's
-    * checkpoint RDD is unpersisted once the next is materialized.
+    * checkpoint is unpinned once the next is materialized.
     * `minPairCount` stops learning when the best pair is rarer than the
     * floor (default 2 — merging hapax pairs adds vocab entries that can
     * never generalize).
@@ -326,10 +326,6 @@ object Export {
     require(numMerges >= 0, "numMerges must be >= 0")
     require(sampleFraction > 0.0 && sampleFraction <= 1.0,
       "sampleFraction must be in (0, 1]")
-    def checkpointedRdd(df: DataFrame) =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
     val base =
       if (sampleFraction >= 1.0) docs
       else docs.where(pmod(Dedup.md5Hash60(col(textCol)), lit(1000000L)) <
@@ -348,17 +344,14 @@ object Export {
     // below stays the web-scale path (a 10⁸-distinct-word multilingual
     // corpus exceeds any driver). Pass localThreshold = 0 to force it.
     if (localThreshold > 0) {
-      val head = wordCounts
-        .limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt).collect()
-      if (head.length <= localThreshold) {
-        return bpeLearnLocal(
-          head.map(r => (r.getString(0), r.getLong(1))).toSeq,
-          numMerges, minPairCount)
-      }
+      val head = Caches.collectAtMost(wordCounts, localThreshold)
+      if (head.isDefined) return bpeLearnLocal(
+        head.get.map(r => (r.getString(0), r.getLong(1))).toSeq,
+        numMerges, minPairCount)
       // Over budget: fall through (the probe is bounded, not corpus-sized).
     }
     val words = wordCounts.select(bpeInitSeq(col("_w")).as("_seq"), col("_c"))
-    var cur = words.localCheckpoint(eager = true)
+    var cur = Caches.checkpoint(words)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var round = 0
     var exhausted = false
@@ -379,15 +372,14 @@ object Export {
         val x = parts(0).substring(1, parts(0).length - 1)
         val y = parts(1).substring(1, parts(1).length - 1)
         merges += ((x, y))
-        val next = cur.withColumn("_seq",
-            replace(col("_seq"), lit(pairStr), lit(s"$BpeSep$x$y$BpeSep")))
-          .localCheckpoint(eager = true)
-        checkpointedRdd(cur).foreach(_.unpersist(blocking = false))
+        val next = Caches.checkpoint(cur.withColumn("_seq",
+            replace(col("_seq"), lit(pairStr), lit(s"$BpeSep$x$y$BpeSep"))))
+        Caches.unpin(cur)
         cur = next
         round += 1
       }
     }
-    checkpointedRdd(cur).foreach(_.unpersist(blocking = false))
+    Caches.unpin(cur)
     merges.toSeq
   }
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -110,11 +111,11 @@ object Graph {
     * self-join would generate 10¹⁶ pairs from that one node). All three
     * stages are plain shuffle joins/aggregations: AQE handles residual
     * skew, map-side combine shrinks the final count. The canonical edge
-    * table, the degree table and the oriented edge table are persisted
-    * (MEMORY_AND_DISK, freed by the ContextCleaner when the result is
-    * dropped): the oriented table feeds THREE plan branches (both wedge
-    * legs + the closing-edge probe) and per-branch filter pushdown makes
-    * the subtrees physically distinct, so without materialization Spark
+    * table, the degree table and the oriented edge table are pinned
+    * ([[Caches.pin]], dropped by [[Caches.release]]): the oriented table
+    * feeds THREE plan branches (both wedge legs + the closing-edge probe)
+    * and per-branch filter pushdown makes the subtrees physically
+    * distinct, so without materialization Spark
     * re-derives the whole canonicalize→degree→orient pipeline once per
     * branch — measured as a 3× blowup of the pair-generation join.
     *
@@ -126,16 +127,13 @@ object Graph {
     * Output: (node: String, triangles: Long) — one row per node of the
     * canonicalized graph, zero-count nodes included. */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = canonicalUndirected(edges, aCol, bCol)
-      .persist(MEMORY_AND_DISK)
-    val deg = und.select(col("u").as("node"))
+    val und = Caches.pin(canonicalUndirected(edges, aCol, bCol))
+    val deg = Caches.pin(und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .persist(MEMORY_AND_DISK)
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     val uLower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = und
+    val oriented = Caches.pin(und
       .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
       .select(
@@ -143,9 +141,7 @@ object Graph {
         when(uLower, col("v")).otherwise(col("u")).as("dst"),
         // the dst endpoint's degree rides along so the wedge self-join can
         // order its two legs without another deg lookup
-        when(uLower, col("dv")).otherwise(col("du")).as("dd"))
-      .persist(MEMORY_AND_DISK)
-    Dedup.register(Dedup.CacheHandle.of(und, deg, oriented))
+        when(uLower, col("dv")).otherwise(col("du")).as("dd")))
     val e1 = oriented.select(col("src"), col("dst").as("x"), col("dd").as("dx"))
     val e2 = oriented.select(col("src"), col("dst").as("y"), col("dd").as("dy"))
     val wedges = e1.join(e2, Seq("src"))
@@ -191,12 +187,9 @@ object Graph {
                        checkpointEvery: Int = 8,
                        checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // directed adjacency, each undirected edge once per direction; a
     // neighbor votes once however many parallel edges the input held
-    val adj = directedAdjacency(canonicalUndirected(edges, aCol, bCol))
-      .persist(MEMORY_AND_DISK)
-    Dedup.register(Dedup.CacheHandle.of(adj))
+    val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
     lpFromAdj(adj, seeds, seedNodeCol, seedLabelCol, iters, checkpointEvery,
       checkpointDir)
   }
@@ -205,17 +198,13 @@ object Graph {
                         seedNodeCol: String, seedLabelCol: String,
                         iters: Int, checkpointEvery: Int,
                         checkpointDir: Option[String]): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val seedTab = seeds.select(
         col(seedNodeCol).cast("string").as("node"),
         col(seedLabelCol).cast("string").as("_seed"))
       .where(col("node").isNotNull && col("_seed").isNotNull)
       .groupBy("node").agg(min(col("_seed")).as("_seed")) // dedupe, det.
-    val nodes = adj.select(col("node")).distinct()
-      .join(seedTab, Seq("node"), "left")
-      .persist(MEMORY_AND_DISK)
-
-    Dedup.register(Dedup.CacheHandle.of(nodes))
+    val nodes = Caches.pin(adj.select(col("node")).distinct()
+      .join(seedTab, Seq("node"), "left"))
     val store = new RoundStore(checkpointDir, "labels")
     var labels = nodes.select(col("node"), col("_seed").as("label"))
     var round = 0
@@ -306,10 +295,7 @@ object Graph {
                            walkLen: Int, checkpointEvery: Int,
                            checkpointDir: Option[String]): DataFrame = {
     require(walksPerNode >= 1 && walkLen >= 0, "need walks >= 1, len >= 0")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adjl = adjLists.persist(MEMORY_AND_DISK)
-
-    Dedup.register(Dedup.CacheHandle.of(adjl))
+    val adjl = Caches.pin(adjLists)
     val fStore = new RoundStore(checkpointDir, "walk_frontier")
     val hStore = new RoundStore(checkpointDir, "walk_hops",
       keepHistory = true)
@@ -326,13 +312,12 @@ object Graph {
     while (t < walkLen) {
       val key = concat(col("start"), lit(":"), col("walk").cast("string"),
         lit(":"), lit(t.toString), lit(":"), col("cur"))
-      val stepped = frontier
+      val stepped = Caches.pin(frontier
         .join(adjl.select(col("node").as("cur"), col("nbrs")), Seq("cur"))
         .select(col("start"), col("walk"),
           element_at(col("nbrs"),
             (pmod(Dedup.md5Hash60(key), size(col("nbrs")).cast("long")) + 1)
-              .cast("int")).as("cur"))
-        .persist(MEMORY_AND_DISK)
+              .cast("int")).as("cur")))
       stepCaches += stepped
       segment = segment.unionAll(stepped.select(col("start"), col("walk"),
         lit(t + 1).as("t"), col("cur").as("node")))
@@ -342,11 +327,10 @@ object Graph {
         frontier = fStore.truncate(stepped)
         segment = frontier.limit(0).select(col("start"), col("walk"),
           lit(0).as("t"), col("cur").as("node")) // empty, same schema
-        stepCaches.foreach(_.unpersist(blocking = false))
+        stepCaches.foreach(Caches.unpin)
         stepCaches.clear()
       } else frontier = stepped
     }
-    Dedup.register(Dedup.CacheHandle.of(stepCaches.toSeq: _*))
     val hops = (sealedSegs :+ segment).reduce(_ unionAll _)
     // One shuffle carries each hop row exactly once; t is unique within a
     // (start, walk) group, so the struct sort is a total order and the
@@ -434,10 +418,7 @@ object Graph {
     * Output: (node_a, node_b, common: Long) with node_a < node_b. */
   def commonNeighborPairs(edges: DataFrame, aCol: String, bCol: String,
                           maxDeg: Int, minCommon: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adj = directedAdjacency(canonicalUndirected(edges, aCol, bCol))
-      .persist(MEMORY_AND_DISK)
-    Dedup.register(Dedup.CacheHandle.of(adj))
+    val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
     commonNeighborsFromAdj(adj, maxDeg, minCommon)
   }
 
@@ -480,15 +461,12 @@ object Graph {
     * see the same bucketing, so repeated graph queries amortize the
     * canonicalization shuffle to zero — the q73/q94 storage contract. */
   def graphIndex(edges: DataFrame, aCol: String, bCol: String,
-                 tablePrefix: String, buckets: Int = 32): Unit = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val canon = canonicalUndirected(edges, aCol, bCol).persist(MEMORY_AND_DISK)
+                 tablePrefix: String, buckets: Int = 32): Unit = Caches.scoped {
+    val canon = Caches.pin(canonicalUndirected(edges, aCol, bCol))
     graft.sources.Bucketed.writeBucketed(canon, s"${tablePrefix}_edges",
       "u", buckets, Seq("u", "v"))
     graft.sources.Bucketed.writeBucketed(directedAdjacency(canon),
       s"${tablePrefix}_adj", "node", buckets, Seq("node", "nbr"))
-    canon.unpersist(blocking = false)
-    ()
   }
 
   /** Merge NEW edges into an existing spine WITHOUT a full rebuild — the
@@ -522,14 +500,6 @@ object Graph {
       .bucketSpec
       .getOrElse(throw new IllegalArgumentException(
         s"graphIndexAppend: $edgesTable has no bucket spec — not a graphIndex spine"))
-    // The canonical delta is CHECKPOINTED (not persisted): each append
-    // below invalidates every cached plan that reads the appended table,
-    // so a cached anti-join would silently recompute against the
-    // already-updated spine (= empty) for the second write. Each table
-    // then dedups against ITSELF, which also makes the append idempotent
-    // — a crash between the two writes repairs on re-run (whichever
-    // table is behind receives exactly its missing rows).
-    val canon = canonicalUndirected(newEdges, aCol, bCol).localCheckpoint()
     def appendBucketed(df: DataFrame, table: String, key: String,
                        sortCols: Seq[String]): Unit =
       df.repartition(spec.numBuckets, df(key)).write.mode("append")
@@ -537,13 +507,23 @@ object Graph {
         .sortBy(sortCols.head, sortCols.tail: _*)
         .format("parquet")
         .saveAsTable(table)
-    appendBucketed(
-      canon.join(spark.table(edgesTable), Seq("u", "v"), "left_anti"),
-      edgesTable, "u", Seq("u", "v"))
-    appendBucketed(
-      directedAdjacency(canon)
-        .join(spark.table(adjTable), Seq("node", "nbr"), "left_anti"),
-      adjTable, "node", Seq("node", "nbr"))
+    // The canonical delta is CHECKPOINTED (not persisted): each append
+    // below invalidates every cached plan that reads the appended table,
+    // so a cached anti-join would silently recompute against the
+    // already-updated spine (= empty) for the second write. Each table
+    // then dedups against ITSELF, which also makes the append idempotent
+    // — a crash between the two writes repairs on re-run (whichever
+    // table is behind receives exactly its missing rows).
+    Caches.scoped {
+      val canon = Caches.checkpoint(canonicalUndirected(newEdges, aCol, bCol))
+      appendBucketed(
+        canon.join(spark.table(edgesTable), Seq("u", "v"), "left_anti"),
+        edgesTable, "u", Seq("u", "v"))
+      appendBucketed(
+        directedAdjacency(canon)
+          .join(spark.table(adjTable), Seq("node", "nbr"), "left_anti"),
+        adjTable, "node", Seq("node", "nbr"))
+    }
   }
 
   /** Fixed-point PageRank over a persisted spine: each canonical
@@ -640,25 +620,21 @@ object Graph {
     require(iters >= 0, "iters must be >= 0")
     require(scale > 0 && dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need scale > 0 and 0 <= dampNum <= dampDen")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    val e = edges.select(
+    val e = Caches.pin(edges.select(
         col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"),
         col(wCol).cast("long").as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .persist(MEMORY_AND_DISK)
+      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0))
 
     // (node, wout, _seed) — wout null marks a dangling node. Built once,
     // reused every round (it is the join spine of the whole loop).
     val outw = e.groupBy("src").agg(sum("w").as("wout"))
-    val nodes = e.select(col("src").as("node"))
+    val nodes = Caches.pin(e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct()
       .join(outw.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .withColumn("_seed", seedPred.getOrElse(lit(true)))
-      .persist(MEMORY_AND_DISK)
-    Dedup.register(Dedup.CacheHandle.of(e, nodes))
+      .withColumn("_seed", seedPred.getOrElse(lit(true))))
 
     // Two O(1)-result agg jobs on the persisted spine — the only driver
     // scalars in the loop.
@@ -666,7 +642,7 @@ object Graph {
       coalesce(sum(when(col("_seed"), 1L).otherwise(0L)), lit(0L))).head()
     val (n, nSeed) = (cnt.getLong(0), cnt.getLong(1))
     if (n == 0) {
-      e.unpersist(); nodes.unpersist()
+      Caches.unpin(e); Caches.unpin(nodes)
       return edges.sparkSession.createDataFrame(
         edges.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -711,17 +687,18 @@ object Graph {
   }
 
   /** Lineage truncation for the iterative loops. Default (`dir` = None):
-    * eager `localCheckpoint` — fast, but the truncated lineage CANNOT be
-    * recomputed after executor loss, so it is a local[N]/interactive
+    * eager [[Caches.checkpoint]] — fast, but the truncated lineage CANNOT
+    * be recomputed after executor loss, so it is a local[N]/interactive
     * configuration. With `dir` set: each truncation is written to that
     * directory (reliable storage — HDFS/S3 on a real cluster) and read
     * back, so a 1000-executor 50-iteration job survives preemption and
     * resumes from the last written round. Superseded truncations are
-    * deleted as the loop advances; the FINAL truncation's files back the
-    * returned frame, so the caller owns deleting the directory after
-    * consuming the result — the same contract as
-    * [[Dedup.connectedComponents]]'s `checkpointDir`. `keepHistory`
-    * disables the superseded-round deletion for stores whose EVERY
+    * dropped as the loop advances (checkpoints unpinned, round files
+    * deleted); the FINAL truncation backs the returned frame — its
+    * checkpoint lives until [[Caches.release]], and with `dir` the caller
+    * owns deleting the directory after consuming the result, the same
+    * contract as [[Dedup.connectedComponents]]'s `checkpointDir`.
+    * `keepHistory` keeps every truncation, for stores whose EVERY
     * truncation stays live (the walk loop's sealed hop segments all back
     * the final union). */
   /** Process-wide instance counter: two concurrent loops of the SAME op
@@ -739,22 +716,27 @@ object Graph {
                                  keepHistory: Boolean = false) {
     private val inst = RoundStore.ids.getAndIncrement()
     private var round = 0
-    private var prev: Option[org.apache.hadoop.fs.Path] = None
-    def truncate(df: DataFrame): DataFrame = dir match {
-      case Some(d) =>
-        val spark = df.sparkSession
-        val path = s"$d/${tag}_i${inst}_$round"; round += 1
-        df.write.mode("overwrite").parquet(path)
-        val out = spark.read.parquet(path)
-        // The new round is fully written (it was computed FROM the prior
-        // round during the write above), so the superseded files can go.
-        if (!keepHistory) {
-          prev.foreach(p => p.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).delete(p, true))
-          prev = Some(new org.apache.hadoop.fs.Path(path))
+    private var prev: Option[(DataFrame, Option[org.apache.hadoop.fs.Path])] = None
+    def truncate(df: DataFrame): DataFrame = {
+      val path = dir.map(d => new org.apache.hadoop.fs.Path(s"$d/${tag}_i${inst}_$round"))
+      round += 1
+      val out = path match {
+        case Some(p) =>
+          df.write.mode("overwrite").parquet(p.toString)
+          df.sparkSession.read.parquet(p.toString)
+        case None => Caches.checkpoint(df)
+      }
+      // The new round is fully materialized (it was computed FROM the
+      // prior round above), so the superseded round can go.
+      if (!keepHistory) {
+        prev.foreach {
+          case (_, Some(p)) =>
+            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+          case (f, None) => Caches.unpin(f)
         }
-        out
-      case None => df.localCheckpoint()
+        prev = Some((out, path))
+      }
+      out
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -301,9 +302,7 @@ object Multimodal {
         (id, perceptualHashAudio64(blob))
       })
       .toDF("_id", "_sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.registerCaches(sigs)
-    Dedup.hammingBandPairs(sigs, maxHamming)
+    Dedup.hammingBandPairs(Caches.pin(sigs), maxHamming)
   }
 
   /** Media near-dup pairs: perceptual signature + the same 16-bit-chunk
@@ -315,9 +314,7 @@ object Multimodal {
   def perceptualHashPairs(df: DataFrame, idCol: String, blobCol: String,
                           maxHamming: Int = 3, decodeImages: Boolean = false)(
       implicit spark: SparkSession): DataFrame = {
-    val sigs = perceptualHashes(df, idCol, blobCol, decodeImages)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.registerCaches(sigs)
-    Dedup.hammingBandPairs(sigs, maxHamming)
+    Dedup.hammingBandPairs(
+      Caches.pin(perceptualHashes(df, idCol, blobCol, decodeImages)), maxHamming)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Exprs
@@ -139,7 +140,7 @@ object Ops {
     //    30 352 of 60 000) while a pinned-count retry produced duplicate
     //    ranks instead. Deterministic-seed reasoning does not rescue any
     //    two-exchange design.
-    // With persist(), both the counts read and the final output read
+    // With Caches.pin, both the counts read and the final output read
     // resolve to the SAME InMemoryRelation: one sort, one materialization,
     // and the pid space is definitionally consistent because _mid is data
     // in the cached blocks (eviction recompute re-runs the deterministic
@@ -152,9 +153,8 @@ object Ops {
     val shuffled = proj.repartitionByRange(parts, matOrder: _*)
     // monotonically_increasing_id after the in-partition sort encodes
     // (partition id << 33 | 0-based ordinal in sorted order).
-    val ranked = shuffled.sortWithinPartitions(matOrder: _*)
-      .withColumn("_mid", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = Caches.pin(shuffled.sortWithinPartitions(matOrder: _*)
+      .withColumn("_mid", monotonically_increasing_id()))
     val counts = ranked
       .groupBy(shiftrightunsigned(col("_mid"), 33).as("_pid"))
       .agg(count(lit(1)).as("_cnt"))

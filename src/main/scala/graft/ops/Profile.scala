@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -101,9 +102,11 @@ object Profile {
     val newTerms = toks.groupBy(col("_tok")).agg(min(col("_id")).as("_first"))
       .groupBy(expr(s"_first div ${bucketSize}L").as("bucket"))
       .agg(count(lit(1)).as("new_terms"))
-    val joined = perBucket.join(newTerms, Seq("bucket"), "left")
+    // Pinned: both the coarse running total and the per-bucket output
+    // read it, so the corpus tokenize + aggregates run once.
+    val joined = Caches.pin(perBucket.join(newTerms, Seq("bucket"), "left")
       .withColumn("new_terms", coalesce(col("new_terms"), lit(0L)))
-      .withColumn("_g", expr("bucket div 65536L"))
+      .withColumn("_g", expr("bucket div 65536L")))
     val wBefore = Window.orderBy(col("_g"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val coarseCum = joined.groupBy(col("_g"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -269,15 +270,17 @@ object Scoring {
     * lr ≤ 0.25 (lrPpm 250000) strictly decreases the loss until the
     * micro-unit floor; the spec proves the decrease on a fixture.
     *
-    * Scale shape: tokenize/hash ONCE into a compact persisted
+    * Scale shape: tokenize/hash ONCE into a compact pinned
     * (doc, bucket, cnt, d, yᵤ) frame (text never re-scanned across
-    * epochs); each epoch is two joins against that frame — the weight
+    * epochs, released when the fit returns); each epoch is two joins against that frame — the weight
     * table is `buckets`-bounded and BROADCAST, the margin aggregate runs
     * in place on the id-partitioned frame, the gradient aggregate is
     * map-side-combined to `buckets` rows — and per-epoch lineage is
     * truncated ([[Graph.RoundStore]]; pass `checkpointDir` for
     * multi-hundred-epoch fits). n enters in-plan as a broadcast one-row
-    * count, never a driver constant.
+    * count, never a driver constant. The learned weights — `buckets`
+    * rows, the table every epoch broadcasts — come back to the driver on
+    * both paths, so the result is a local relation that reads no pin.
     *
     * `labelCol` must be 0/1; NULL-label docs are dropped up front on
     * both the local and the distributed path (no label, no gradient, not
@@ -317,30 +320,28 @@ object Scoring {
     // the intercept feature (cnt = d = 1) without a div-by-zero branch
     val dframe = toks.groupBy(col("_id"), col("_yu"))
       .agg(greatest(count(col("_tok")), lit(1L)).as("_d"))
-    val feats = counts.join(dframe, Seq("_id"))
-        .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_yu"))
-      .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
-        col("_d").as("_cnt"), col("_d"), col("_yu")))
-      .persist()
-    try {
+    val out = Caches.scoped {
+      val feats = Caches.pin(counts.join(dframe, Seq("_id"))
+          .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_yu"))
+        .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
+          col("_d").as("_cnt"), col("_d"), col("_yu"))))
       val localRows =
-        if (allowLocal) boundedCollect(feats) else None
+        if (allowLocal) Caches.collectAtMost(feats, LocalFitMaxRows) else None
       localRows match {
         case Some(rows) =>
           val lf = parseLocalFeats(rows)
           val yuDoc = lf.payloadDoc.map(_.asInstanceOf[Long])
           val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
-          val out = lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
-          val sp = docs.sparkSession
-          import sp.implicits._
-          out.toDF("bucket", "weight_u")
+          lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
         case None =>
           val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
           val store = new Graph.RoundStore(checkpointDir, "linfit")
-          linFitLoop(feats, nd, epochs, lrPpm, store)
-            .select(col("_bkt").as("bucket"), col("_wu").as("weight_u"))
+          collectWeights(linFitLoop(feats, nd, epochs, lrPpm, store))
       }
-    } finally feats.unpersist()
+    }
+    val sp = docs.sparkSession
+    import sp.implicits._
+    out.toDF("bucket", "weight_u")
   }
 
   /** Driver budget for the local integer-GD path: feature frames at or
@@ -350,14 +351,12 @@ object Scoring {
     * discipline the r20 advisory asked for). */
   private[ops] val LocalFitMaxRows = 524288
 
-  /** Collect `feats` iff it fits [[LocalFitMaxRows]]: one job either way
-    * (the distributed path pays a materializing count/collect anyway);
-    * returns None past the ceiling without shipping the overflow. */
-  private def boundedCollect(feats: DataFrame)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    val rows = feats.limit(LocalFitMaxRows + 1).collect()
-    if (rows.length <= LocalFitMaxRows) Some(rows) else None
-  }
+  /** The distributed loop's final (_bkt, _wu) weights on the driver —
+    * `buckets`-bounded, the table every epoch already broadcasts — so a
+    * fit's result outlives the scope that pinned its features. */
+  private def collectWeights(w: DataFrame): Seq[(Long, Long)] =
+    w.select(col("_bkt"), col("_wu")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   /** The collected feature frame in columnar driver form: per ROW the doc
     * slot, bucket slot and count; per DOC its token total `d` and the
@@ -455,7 +454,7 @@ object Scoring {
   }
 
   /** The epoch loop shared by [[hashedLinearFit]] and [[langIdFit]]:
-    * `feats` is the persisted (_id, _bkt, _cnt, _d, _yu) feature frame
+    * `feats` is the pinned (_id, _bkt, _cnt, _d, _yu) feature frame
     * (bucket −1 = the intercept feature), `nd` the broadcast one-row doc
     * count. Returns the (_bkt, _wu) weight vector after `epochs` exact
     * integer-GD rounds (the q195 arithmetic, verbatim). */
@@ -498,7 +497,7 @@ object Scoring {
     * spec pins the equality), so the whole model is a pure function of
     * (corpus, labels, buckets, epochs, lrPpm).
     *
-    * Scale shape: the corpus is tokenized/hashed ONCE into one persisted
+    * Scale shape: the corpus is tokenized/hashed ONCE into one pinned
     * feature frame shared by every class (the text is never re-scanned
     * per class — K re-reads of raw text would dominate at 100 TB); per
     * class the cost is [[hashedLinearFit]]'s two-joins-per-epoch against
@@ -535,14 +534,13 @@ object Scoring {
       .groupBy(col("_id"), col("_bkt")).agg(count(lit(1)).as("_cnt"))
     val dframe = base.groupBy(col("_id"), col("_lab"))
       .agg(greatest(count(col("_tok")), lit(1L)).as("_d"))
-    val shared = counts.join(dframe, Seq("_id"))
-        .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_lab"))
-      .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
-        col("_d").as("_cnt"), col("_d"), col("_lab")))
-      .persist()
-    try {
+    val out = Caches.scoped {
+      val shared = Caches.pin(counts.join(dframe, Seq("_id"))
+          .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_lab"))
+        .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
+          col("_d").as("_cnt"), col("_d"), col("_lab"))))
       val localRows =
-        if (allowLocal) boundedCollect(shared) else None
+        if (allowLocal) Caches.collectAtMost(shared, LocalFitMaxRows) else None
       localRows match {
         case Some(rows) =>
           // One parse serves every class: only yu (a function of _lab vs
@@ -553,14 +551,11 @@ object Scoring {
           require(classes.nonEmpty,
             "langIdFit: no non-NULL class values to fit (empty.reduce " +
               "would otherwise throw far from the cause)")
-          val out = classes.flatMap { c =>
+          classes.flatMap { c =>
             val yuDoc = labDoc.map(l => if (l == c) 1000000L else -1000000L)
             val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
             lf.bktOfSlot.indices.map(i => (c, lf.bktOfSlot(i), w(i)))
           }
-          val sp = docs.sparkSession
-          import sp.implicits._
-          out.toDF("lang", "bucket", "weight_u")
         case None =>
           shared.count() // materialize before the per-class loops fan out
           val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
@@ -569,20 +564,18 @@ object Scoring {
           require(classes.nonEmpty,
             "langIdFit: no non-NULL class values to fit (empty.reduce " +
               "would otherwise throw far from the cause)")
-          classes.map { c =>
+          classes.flatMap { c =>
             val feats = shared.withColumn("_yu",
               (when(col("_lab") === c, 1L).otherwise(-1L) * 1000000L))
             val store = new Graph.RoundStore(checkpointDir, s"linfit_$c")
-            linFitLoop(feats, nd, epochs, lrPpm, store)
-              .select(lit(c).as("lang"), col("_bkt").as("bucket"),
-                col("_wu").as("weight_u"))
-              // per-class weights are buckets-bounded: pin them NOW so the
-              // stacked union does not re-run K epoch chains lazily against
-              // an unpersisted cache after the finally
-              .localCheckpoint()
-          }.reduce(_ unionByName _)
+            collectWeights(linFitLoop(feats, nd, epochs, lrPpm, store))
+              .map { case (b, w) => (c, b, w) }
+          }
       }
-    } finally shared.unpersist()
+    }
+    val sp = docs.sparkSession
+    import sp.implicits._
+    out.toDF("lang", "bucket", "weight_u")
   }
 
   /** Multiclass hashed language identification — the fastText-LID shape
@@ -1183,9 +1176,8 @@ object Scoring {
     val dec = "decimal(38,0)"
     val joined = a.select(col(idCol), col(aCol).as("_a"))
       .join(b.select(col(idCol), col(bCol).as("_b")), Seq(idCol))
-    val cont = joined.groupBy(col("_a"), col("_b"))
-      .agg(count(lit(1)).as("_nij"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cont = Caches.pin(joined.groupBy(col("_a"), col("_b"))
+      .agg(count(lit(1)).as("_nij")))
     // Materialize NOW: six independent broadcast subtrees (marginals,
     // S-sums, MI, entropies) all derive from `cont` and otherwise START
     // concurrently against a still-lazy cache, each racing to recompute
@@ -1265,7 +1257,7 @@ object Scoring {
     * trajectory.) The max(·,1) divisor guard covers the measure-zero
     * case of two strengths truncating to 0 micro-units.
     *
-    * Scale shape: items/games tables are persisted once; each round is
+    * Scale shape: items/games tables are pinned once; each round is
     * ONE join of games against the strength vector on both endpoints +
     * one map-side-combined groupBy + a one-row normalization aggregate
     * broadcast back — the PageRank 2-shuffle round shape over the
@@ -1300,7 +1292,6 @@ object Scoring {
       iters: Int, checkpointDir: Option[String],
       allowLocal: Boolean): DataFrame = {
     require(iters > 0, "bradleyTerry: iters must be positive")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val po = outcomes.select(col(winnerCol).cast("string").as("_w"),
         col(loserCol).cast("string").as("_l"))
       .where(col("_w").isNotNull && col("_l").isNotNull &&
@@ -1310,18 +1301,16 @@ object Scoring {
     // item²-bounded, and games/wins both derive from it exactly —
     // games(i,j) = dg(i,j)+dg(j,i), wins(i) = Σ_l dg(i,l). The previous
     // shape scanned `po` three times (two union arms + the win count).
-    val dg = po.groupBy(col("_w"), col("_l")).agg(count(lit(1)).as("_n"))
-      .persist(MEMORY_AND_DISK)
-    val games = dg.select(col("_w").as("_i"), col("_l").as("_j"), col("_n"))
-      .unionAll(dg.select(col("_l").as("_i"), col("_w").as("_j"), col("_n")))
-      .groupBy(col("_i"), col("_j")).agg(sum(col("_n")).as("_n"))
-      .persist(MEMORY_AND_DISK)
+    val dg = Caches.pin(po.groupBy(col("_w"), col("_l")).agg(count(lit(1)).as("_n")))
+    val games = Caches.pin(
+      dg.select(col("_w").as("_i"), col("_l").as("_j"), col("_n"))
+        .unionAll(dg.select(col("_l").as("_i"), col("_w").as("_j"), col("_n")))
+        .groupBy(col("_i"), col("_j")).agg(sum(col("_n")).as("_n")))
     val wins = dg.groupBy(col("_w").as("_i")).agg(sum(col("_n")).as("_wins"))
-    val base = games.groupBy(col("_i")).agg(sum(col("_n")).as("_games"))
+    val base = Caches.pin(games.groupBy(col("_i")).agg(sum(col("_n")).as("_games"))
       .join(wins, Seq("_i"), "left")
       .select(col("_i"), col("_games"),
-        coalesce(col("_wins"), lit(0L)).as("_wins"))
-      .persist(MEMORY_AND_DISK)
+        coalesce(col("_wins"), lit(0L)).as("_wins")))
     // Driver-local MM replay (the linFit treatment): the iterate loop's
     // per-round cost at bench scale was three joins + two aggregates +
     // a lineage truncation of pure schedule latency over an item²-bounded
@@ -1331,10 +1320,7 @@ object Scoring {
     // and a zero total raises in both paths. Spec-pinned local ==
     // distributed.
     val localPairs =
-      if (allowLocal) {
-        val rows = games.limit(LocalBtMaxPairs + 1).collect()
-        if (rows.length <= LocalBtMaxPairs) Some(rows) else None
-      } else None
+      if (allowLocal) Caches.collectAtMost(games, LocalBtMaxPairs) else None
     localPairs match {
       case Some(gRows) =>
         val bRows = base.collect()

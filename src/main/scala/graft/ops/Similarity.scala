@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -92,10 +93,9 @@ object Similarity {
                       maxBucket: Int = 10000): DataFrame = {
     val mask = (1L << planesPerTable) - 1
     // Referenced three times (banding + both verify joins).
-    val base = vectors.select(col("id"), col("vec"),
+    val base = Caches.pin(vectors.select(col("id"), col("vec"),
         norm(col("vec")).as("_n"),
-        srpBucket(col("vec"), dim, planesPerTable * tables).as("_sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        srpBucket(col("vec"), dim, planesPerTable * tables).as("_sig")))
     val banded = base.select(col("id"),
         explode(array((0 until tables).map(t => struct(
           lit(t).as("_t"),
@@ -211,8 +211,8 @@ object Similarity {
                    maxSample: Int = 0): Seq[(Int, Seq[Double])] = {
     if (maxSample > 0 && numericId(corpus))
       return fitCentroidsLocal(corpus, k, iters, maxSample)
-    val (fit, cached) = fitSample(corpus, maxSample)
-    try {
+    Caches.scoped {
+        val fit = fitSample(corpus, maxSample)
         var cents = fit.select(col("id"), col("vec")).orderBy(col("id")).limit(k)
           .collect().zipWithIndex
           .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
@@ -228,7 +228,7 @@ object Similarity {
           cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
         }
         cents
-      } finally cached.foreach(_.unpersist())
+      }
     }
 
     /** The BOUNDED fit, run driver-local (r20 optimization round — guide
@@ -331,20 +331,15 @@ object Similarity {
       * unchanged: codebooks/centroids only decide who pays the exact
       * re-rank, and the one full-corpus ASSIGNMENT pass stays exact. The
       * sample runs as one distributed TakeOrdered (no global sort) and is
-      * persisted across the fit's rounds; maxSample <= 0 keeps the
+      * pinned across the fit's rounds; maxSample <= 0 keeps the
       * full-corpus fit, and maxSample >= |corpus| is byte-identical to it
       * (same set, same seeding order). */
-    private def fitSample(corpus: DataFrame,
-                          maxSample: Int): (DataFrame, Option[DataFrame]) =
-      if (maxSample <= 0) (corpus, None)
-      else {
-        val s = corpus
-          .orderBy(Dedup.md5Hash60(col("id").cast("string")), col("id"))
-          .limit(maxSample)
-          .select(col("id"), col("vec"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (s, Some(s))
-      }
+    private def fitSample(corpus: DataFrame, maxSample: Int): DataFrame =
+      if (maxSample <= 0) corpus
+      else Caches.pin(corpus
+        .orderBy(Dedup.md5Hash60(col("id").cast("string")), col("id"))
+        .limit(maxSample)
+        .select(col("id"), col("vec")))
 
     /** IVF top-k: assign every corpus vector to its nearest centroid cell
       * (map-only), have each query probe its `nprobe` nearest cells, and
@@ -412,11 +407,11 @@ object Similarity {
       * lake-hygiene contract). */
     def ivfIndexAppend(spark: org.apache.spark.sql.SparkSession,
                        newCorpus: DataFrame, cents: Seq[(Int, Seq[Double])],
-                       indexDir: String): Unit = {
-      val fresh = ivfIndex(newCorpus.where(col("id").isNotNull), cents)
-        .join(spark.read.parquet(indexDir).select(col("id")),
-          Seq("id"), "left_anti")
-        .localCheckpoint()
+                       indexDir: String): Unit = Caches.scoped {
+      val fresh = Caches.checkpoint(
+        ivfIndex(newCorpus.where(col("id").isNotNull), cents)
+          .join(spark.read.parquet(indexDir).select(col("id")),
+            Seq("id"), "left_anti"))
       fresh.write.mode("append").partitionBy("_cell").parquet(indexDir)
     }
 
@@ -432,15 +427,14 @@ object Similarity {
                       books: Seq[(Int, Int, Seq[Double])],
                       cents: Seq[(Int, Seq[Double])],
                       indexDir: String,
-                      residual: Boolean = false): Unit = {
+                      residual: Boolean = false): Unit = Caches.scoped {
       val assigned = ivfIndex(newCorpus.where(col("id").isNotNull), cents)
       val enc =
         if (residual) pqIndexResidual(assigned, dim, m, books, cents)
         else pqIndex(assigned, dim, m, books)
-      val fresh = enc
+      val fresh = Caches.checkpoint(enc
         .join(spark.read.parquet(indexDir).select(col("id")),
-          Seq("id"), "left_anti")
-        .localCheckpoint()
+          Seq("id"), "left_anti"))
       fresh.write.mode("append").partitionBy("_cell").parquet(indexDir)
     }
 
@@ -540,17 +534,16 @@ object Similarity {
                            indexDir: String,
                            cents: Seq[(Int, Seq[Double])],
                            driftPpm: Long)
-        : (Seq[(Int, Seq[Double])], Seq[Int]) = {
+        : (Seq[(Int, Seq[Double])], Seq[Int]) = Caches.scoped {
       require(cents.nonEmpty, "ivfCentroidRefresh: need centroids")
       val idx = spark.read.parquet(indexDir)
       val (newCents, driftedIds) = refreshPlan(idx, cents, driftPpm)
       if (driftedIds.isEmpty) (cents, Nil)
       else {
-        val moved = idx
+        val moved = Caches.checkpoint(idx
           .where(col("_cell").isin(driftedIds.map(Integer.valueOf): _*))
           .select(col("id"), col("vec"), col("_n"))
-          .withColumn("_cell", ivfCell(col("vec"), newCents))
-          .localCheckpoint()
+          .withColumn("_cell", ivfCell(col("vec"), newCents)))
         rewriteCells(spark, indexDir, driftedIds, moved)
         (newCents, driftedIds)
       }
@@ -585,7 +578,7 @@ object Similarity {
       * audit scan). */
     def ivfCompact(spark: org.apache.spark.sql.SparkSession,
                    indexDir: String,
-                   cents: Seq[(Int, Seq[Double])]): Seq[Int] = {
+                   cents: Seq[(Int, Seq[Double])]): Seq[Int] = Caches.scoped {
       require(cents.nonEmpty, "ivfCompact: need centroids")
       val idx = spark.read.parquet(indexDir)
         .withColumn("_newCell", ivfCell(col("vec"), cents))
@@ -601,11 +594,10 @@ object Similarity {
         // rows leaving an affected cell land at their new cell; rows
         // STAYING in an affected cell must ride along because the whole
         // partition is deleted
-        val rewrite = idx
+        val rewrite = Caches.checkpoint(idx
           .where(col("_cell").isin(affected: _*))
           .select(col("id"), col("vec"), col("_n"),
-            col("_newCell").as("_cell"))
-          .localCheckpoint()
+            col("_newCell").as("_cell")))
         rewriteCells(spark, indexDir, losing, rewrite)
         losing.sorted
       }
@@ -633,7 +625,7 @@ object Similarity {
                   dim: Int, m: Int,
                   books: Seq[(Int, Int, Seq[Double])],
                   cents: Seq[(Int, Seq[Double])],
-                  residual: Boolean = false): Seq[Int] = {
+                  residual: Boolean = false): Seq[Int] = Caches.scoped {
       require(cents.nonEmpty, "pqCompact: need centroids")
       val assigned = ivfIndex(corpus.where(col("id").isNotNull), cents)
         .select(col("id"), col("vec"), col("_n"),
@@ -660,7 +652,7 @@ object Similarity {
         val keepers = stored
           .where(col("_cell").isin(affected: _*))
           .join(movers.select(col("id")), Seq("id"), "left_anti")
-        val rewrite = keepers.unionByName(enc).localCheckpoint()
+        val rewrite = Caches.checkpoint(keepers.unionByName(enc))
         rewriteCells(spark, indexDir, losing, rewrite)
         losing.sorted
       }
@@ -679,7 +671,7 @@ object Similarity {
       // (≤ k rows), so pin it eagerly and feed BOTH the drift audit and
       // the mean collect from it — the previous shape ran the full
       // explode+decimal-sum aggregate twice (r21, guide §1.2).
-      val cellMv = cellMeans(idx, dim).localCheckpoint()
+      val cellMv = Caches.checkpoint(cellMeans(idx, dim))
       val flagged = ivfCellDriftFromMeans(cellMv, cents, driftPpm)
         .where(col("refit") === 1).select(col("cell"))
       val means = cellMv
@@ -745,7 +737,7 @@ object Similarity {
                           cents: Seq[(Int, Seq[Double])],
                           driftPpm: Long,
                           residual: Boolean = false)
-        : (Seq[(Int, Seq[Double])], Seq[Int]) = {
+        : (Seq[(Int, Seq[Double])], Seq[Int]) = Caches.scoped {
       require(cents.nonEmpty, "pqCentroidRefresh: need centroids")
       val assigned = ivfIndex(corpus.where(col("id").isNotNull), cents)
       val (newCents, driftedIds) = refreshPlan(assigned, cents, driftPpm)
@@ -786,10 +778,9 @@ object Similarity {
           .join(storedIds, Seq("id"), "left_semi")
           .select(col("id"), col("vec"), col("_n"))
           .withColumn("_cell", ivfCell(col("vec"), newCents))
-        val moved =
-          (if (residual) pqIndexResidual(movedFull, dim, m, books, newCents)
-           else pqIndex(movedFull, dim, m, books))
-            .localCheckpoint()
+        val moved = Caches.checkpoint(
+          if (residual) pqIndexResidual(movedFull, dim, m, books, newCents)
+          else pqIndex(movedFull, dim, m, books))
         rewriteCells(spark, indexDir, driftedIds, moved)
         (newCents, driftedIds)
       }
@@ -827,7 +818,8 @@ object Similarity {
       if (maxSample > 0 && numericId(corpus))
         return pqFitCodebooksLocal(corpus, dim, m, ksub, iters, maxSample)
       val dsub = dim / m
-      val (fit, cached) = fitSample(corpus, maxSample)
+      Caches.scoped {
+      val fit = fitSample(corpus, maxSample)
       // Fail loudly on malformed input: a vec shorter than dim makes
       // PqEncode yield null codes (its documented refuse-to-guess contract),
       // which would otherwise surface as an opaque NPE at the driver-side
@@ -835,7 +827,6 @@ object Similarity {
       // propagate silently. The guard is one codegen'd `size` per row.
       val checked = fit.select(col("id"),
         vecChecked(col("vec"), dim, "pqFitCodebooks").as("vec"))
-      try {
       // Seed codewords from the lowest-id vectors (reproducible), but take
       // the first ksub DISTINCT subvectors per subspace: duplicate seeds
       // collapse the k-means to one effective codeword (the strict-< argmin
@@ -878,7 +869,7 @@ object Similarity {
         }
       }
       books
-    } finally cached.foreach(_.unpersist())
+    }
   }
 
   /** The BOUNDED codebook fit, driver-local — [[fitCentroidsLocal]]'s

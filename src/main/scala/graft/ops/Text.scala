@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -463,12 +464,10 @@ object Text {
   def matchingSpansBloom(docs: DataFrame, idCol: String, textCol: String,
                          reference: DataFrame, refTextCol: String,
                          n: Int = 50, fpp: Double = 0.01): DataFrame = {
-    val refHashes = reference
+    val refHashes = Caches.pin(reference
       .where(F.length(col(refTextCol)) >= 1)
       .select(explode(graft.plans.ShingleHashPos64(col(refTextCol), n)).as("_h"))
-      .distinct()
-      .persist()
-    Dedup.register(Dedup.CacheHandle.of(refHashes))
+      .distinct())
     val nRef = math.max(1L, refHashes.count())
     val bloom = refHashes.stat.bloomFilter("_h", nRef, fpp)
     val base = windowHashes(docs, idCol, textCol, n)
@@ -515,15 +514,12 @@ object Text {
   def dropRepeatedParagraphs(docs: DataFrame, idCol: String, textCol: String,
                              minDf: Long, sep: String = "\n"): DataFrame = {
     require(minDf >= 2, "minDf must be >= 2 (1 would drop every paragraph)")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val paras = docs
+    val paras = Caches.pin(docs
       .select(col(idCol),
         F.posexplode(F.split(col(textCol), java.util.regex.Pattern.quote(sep)))
           .as(Seq("p_idx", "para")))
       .withColumn("_blank", F.trim(col("para")) === "")
-      .withColumn("_h", Dedup.md5Hash120(col("para")))
-      .persist(MEMORY_AND_DISK)
-    Dedup.registerCaches(paras)
+      .withColumn("_h", Dedup.md5Hash120(col("para"))))
     val hot = paras.where(!col("_blank"))
       .groupBy("_h")
       .agg(F.countDistinct(col(idCol)).as("_df"))

@@ -126,7 +126,9 @@ object AllocationPipeline {
   }
 
   /** Long-form pivot: (Branch, Item, Distro Size), zeros dropped, Branch
-    * sorted numerically then lexically. */
+    * sorted numerically then lexically. Shared with
+    * [[SouthernCrossPipeline]]: the item header resolves as `Item#` or
+    * `Item` alike ([[SchemaOps.normHeader]] drops `#`). */
   def pivot(cleaned: DataFrame): DataFrame = {
     val itemCol = SchemaOps.resolveColumnOrFail(cleaned, "Item#")
     val branchCols = cleaned.columns.filter(c => c != RowIdx && c != itemCol).toSeq
@@ -298,24 +300,8 @@ object SouthernCrossPipeline {
     noZero.select((RowIdx +: ordered).map(SchemaOps.qcol): _*)
   }
 
-  def pivot(cleaned: DataFrame): DataFrame = {
-    val itemCol = SchemaOps.resolveColumnOrFail(cleaned, "Item")
-    val branchCols = cleaned.columns.filter(c => c != RowIdx && c != itemCol).toSeq
-    val long = Ops.meltToLong(
-        cleaned.select((itemCol +: branchCols).map(SchemaOps.qcol): _*),
-        Seq(itemCol), branchCols, "Branch", "Distro Size")
-      .withColumn("Branch", Exprs.stripTrailingDotZero(col("Branch")))
-      .withColumn("Distro Size",
-        coalesce(Exprs.tryDouble(col("Distro Size")).cast("long"), lit(0L)))
-    val agg = long.groupBy(col("Branch"), col(itemCol))
-      .agg(sum(col("Distro Size")).as("Distro Size"))
-      .where(col("Distro Size") =!= 0)
-      .select(col("Branch"), col(itemCol).as("Item"), col("Distro Size"))
-    Ops.numericAwareSort(agg, "Branch")
-  }
-
   def run(grid: DataFrame, edd: String,
           cfg: VendorConfig = VendorConfig.SouthernCross): DataFrame =
     Canonical.conform(Canonical.withConstants(
-      DockPipeline.fixBranch(pivot(clean(grid))), cfg, edd))
+      DockPipeline.fixBranch(AllocationPipeline.pivot(clean(grid))), cfg, edd))
 }

@@ -1107,15 +1107,13 @@ object AnalyticsQueries {
         | AND q * CAST(n.n AS DOUBLE) <= CAST(cum.cum AS DOUBLE)
         |ORDER BY l_returnflag, q""".stripMargin) { (s, d) =>
       val keys = Seq("l_returnflag")
-      // persisted: the sketch feeds BOTH the cumulative and the per-group
+      // pinned: the sketch feeds BOTH the cumulative and the per-group
       // total branch of the quantile scan — without it the two-pass
       // auto-bounds build runs twice (the q113 multi-branch lesson).
-      val hist = graft.ops.Sketches.histogramAuto(
+      val hist = graft.core.Caches.pin(graft.ops.Sketches.histogramAuto(
           Tables.lineitem(s, d)
             .select(col("l_returnflag"), col("l_extendedprice")),
-          "l_extendedprice", bins = 512, keyCols = keys)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Dedup.registerCaches(hist)
+          "l_extendedprice", bins = 512, keyCols = keys))
       graft.ops.Sketches.histQuantilesAuto(hist, Seq(0.5, 0.9, 0.99),
           keyCols = keys)
         .orderBy("l_returnflag", "q")
@@ -1610,16 +1608,14 @@ object AnalyticsQueries {
         |FROM grid g ASOF LEFT JOIN e
         |  ON g.user_id = e.user_id AND g.day >= e.obs_day
         |ORDER BY g.user_id, g.day""".stripMargin) { (s, d) =>
-      // persisted: the observation table feeds BOTH the span/grid branch
+      // pinned: the observation table feeds BOTH the span/grid branch
       // and the as-of fill side — without it the events scan + per-day
       // aggregate runs twice (the q109 double-scan lesson).
-      val obs = graft.queries.RelationalQueries.eventsNs(s, d)
+      val obs = graft.core.Caches.pin(graft.queries.RelationalQueries.eventsNs(s, d)
         .select(col("user_id"),
           Tables.floorDiv("ts", 86400000000000L).as("obs_day"),
           col("value"))
-        .groupBy("user_id", "obs_day").agg(max("value").as("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Dedup.registerCaches(obs)
+        .groupBy("user_id", "obs_day").agg(max("value").as("v")))
       val grid = obs.groupBy("user_id")
         .agg(min("obs_day").as("lo"), max("obs_day").as("hi"))
         .select(col("user_id"),

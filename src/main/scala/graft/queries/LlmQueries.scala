@@ -1670,14 +1670,12 @@ object LlmQueries {
       val docs = Tables.documents(s, d)
       val kept = Scoring.robustZScores(docs, "lang", "n_chars")
         .where(col("z_ppm").isNotNull && abs(col("z_ppm")) <= 2000000L)
-      // persisted: the token-count frame feeds BOTH the mixture-weight
+      // pinned: the token-count frame feeds BOTH the mixture-weight
       // branch and the epoch plan — without it the robust-z chain (two
       // two-level quantile passes over the corpus) runs twice (the q113
       // double-scan lesson).
-      val avail = kept.select(col("source"),
-          graft.functions.TextFunctions.tokenCountWs(col("text")).as("n_tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Dedup.registerCaches(avail)
+      val avail = graft.core.Caches.pin(kept.select(col("source"),
+          graft.functions.TextFunctions.tokenCountWs(col("text")).as("n_tok")))
       val stats = avail.groupBy(col("source"))
         .agg(sum(col("n_tok").cast("long")).as("available_tokens"))
         .select(col("source"),
@@ -3813,15 +3811,13 @@ object LlmQueries {
       val content = graft.ops.Html.mainContent(
         Tables.documents(s, d).select(col("doc_id"), WebPage.as("html")),
         "doc_id", "html", minChars = 60, maxLinkPpm = 300000L)
-      // persisted: the cleaned corpus feeds BOTH the LM-score branch and
+      // pinned: the cleaned corpus feeds BOTH the LM-score branch and
       // the sampling branch — without it the HTML parse + paragraph-dedup
       // chain (the pipeline's expensive half) runs twice (the q113
       // double-scan lesson).
-      val cleaned = graft.ops.Text.dropRepeatedParagraphs(
+      val cleaned = graft.core.Caches.pin(graft.ops.Text.dropRepeatedParagraphs(
           content.select(col("doc_id"), col("content").as("text")),
-          "doc_id", "text", minDf = 20L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.ops.Dedup.registerCaches(cleaned)
+          "doc_id", "text", minDf = 20L))
       val lm = Scoring.bigramLmScore(
         cleaned.select(col("doc_id"), col("clean_text").as("text")),
         "doc_id", "text")

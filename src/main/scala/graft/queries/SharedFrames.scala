@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
 import graft.ops.{Dedup, Similarity}
 
 /** Process-level, per-fixture memo of the audit tier's SHARED frames —
@@ -104,16 +105,15 @@ object SharedFrames {
     val (path, schema) = memo.computeIfAbsent(s"$name:$dir", { _ =>
       val p = root.resolve(
         name + "-" + Integer.toHexString(dir.hashCode)).toString
-      val w = build.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(p)
       // The parquet write is terminal: every intermediate the build
-      // persisted (shingle tables, CC rounds) is now dead weight — drain
-      // the library cache registry so the one-shot build doesn't leak
-      // block-manager memory into the serving process. Safe here because
-      // SharedFrames sits at the TOP of query bodies (nothing upstream
-      // has live registered caches when a frame first materializes).
-      graft.ops.Dedup.releaseCaches()
+      // pinned (shingle tables, CC rounds) is dead weight once it is
+      // written, so the one-shot build runs in its own scope and leaks no
+      // block-manager memory into the serving process.
+      Caches.scoped {
+        val w = build.write.mode("overwrite")
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(p)
+      }
       // Memoize the frame's inferred schema with its path: consumers read
       // the frame on every invocation, and schema re-inference is ~100 ms
       // of driver latency per read (the Tables.load memo rationale). The

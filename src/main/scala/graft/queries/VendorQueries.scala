@@ -233,7 +233,7 @@ object VendorQueries {
         |  ROW_NUMBER() OVER (ORDER BY TRY_CAST(store AS DOUBLE),
         |    COALESCE(TRY_CAST(right(list_extract(regexp_extract_all(lot, '\d+'), -1), 4)
         |                      AS BIGINT), 1000000000),
-        |    l_orderkey, l_linenumber) AS rn
+        |    l_orderkey, l_linenumber, lot NULLS LAST) AS rn
         |FROM keyed
         |ORDER BY rn""".stripMargin) { (s, d) =>
       val lot = when($"l_partkey" % 9 === 0, lit("NO LOT"))
@@ -244,10 +244,12 @@ object VendorQueries {
       // globalRowNumber's output is already globally ordered by rn (range
       // partitions in key order, sorted within) — a trailing orderBy(rn)
       // would re-sample and re-shuffle the whole result for nothing.
+      // `lot` closes the order: (l_orderkey, l_linenumber) can repeat, and
+      // globalRowNumber needs a total order.
       Ops.globalRowNumber(keyed, Seq(
           Exprs.numericSortKey($"store").asc_nulls_last,
           coalesce(Exprs.lotLast4($"lot"), lit(1000000000L)).asc,
-          $"l_orderkey".asc, $"l_linenumber".asc), "rn")
+          $"l_orderkey".asc, $"l_linenumber".asc, $"lot".asc_nulls_last), "rn")
     },
 
     // ── A8/F18: parse-rate aggregate driving majority-vote numeric cast ──

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -209,16 +210,20 @@ object EventStream {
     * batch plus the signature table — corpus TEXT is never read, exactly
     * like the batch ingestion path (q55), so the same signature table
     * serves scheduled batches and a continuous stream without a code fork.
-    * `sink` receives (survivors, batchId); a production sink appends
-    * survivors to the corpus and their signatures to the signature table —
+    * `sink` receives (survivors, batchId) and must consume them before it
+    * returns; a production sink appends survivors to the corpus and their
+    * signatures to the signature table —
     * [[streamingNearDedupSelfExtending]] packages exactly that loop. */
   def streamingNearDedup(batches: DataFrame, corpusSigs: DataFrame,
                          idCol: String, textCol: String,
                          shingleN: Int = 8, threshold: Double = 0.8)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     batches.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(dedupBatch(batch, corpusSigs, idCol, textCol, shingleN, threshold),
-        batchId)
+      // Everything the micro-batch pins is released when the sink returns.
+      Caches.scoped {
+        sink(dedupBatch(batch, corpusSigs, idCol, textCol, shingleN, threshold),
+          batchId)
+      }
     }
 
   /** The SELF-EXTENDING streaming ingestion loop: like
@@ -253,24 +258,26 @@ object EventStream {
                                       threshold: Double = 0.8)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     batches.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val sigs = spark.read.parquet(sigDir)
-      // Eager localCheckpoint, not persist: it SEVERS the plan's lineage,
-      // which still reads sigDir through the anti-join — Spark (rightly)
-      // refuses a write to a path the same plan reads. Materialized once,
-      // it also serves both consumers (signature append + sink); batch
-      // survivors are micro-batch-sized, well within executor storage.
-      val survivors = dedupBatch(batch, sigs, idCol, textCol, shingleN,
-        threshold, k).localCheckpoint()
-      // Row-idempotent append (replay guard 2): a signature already in the
-      // table is never written again. The anti-join must also sever its
-      // sigDir lineage (localCheckpoint) — it reads the path it writes.
-      graft.ops.Dedup.minHashSignatures(survivors, idCol, textCol,
-          shingleN, k)
-        .join(sigs.select(col("_id")), Seq("_id"), "left_anti")
-        .localCheckpoint()
-        .write.mode("append").parquet(sigDir)
-      sink(survivors, batchId)
+      // Everything the micro-batch pins is released when it ends.
+      Caches.scoped {
+        val spark = batch.sparkSession
+        val sigs = spark.read.parquet(sigDir)
+        // Eager local checkpoint, not a pin: it SEVERS the plan's lineage,
+        // which still reads sigDir through the anti-join — Spark (rightly)
+        // refuses a write to a path the same plan reads. Materialized once,
+        // it also serves both consumers (signature append + sink); batch
+        // survivors are micro-batch-sized, well within executor storage.
+        val survivors = Caches.checkpoint(dedupBatch(batch, sigs, idCol,
+          textCol, shingleN, threshold, k))
+        // Row-idempotent append (replay guard 2): a signature already in the
+        // table is never written again. The anti-join must also sever its
+        // sigDir lineage (a checkpoint) — it reads the path it writes.
+        Caches.checkpoint(graft.ops.Dedup.minHashSignatures(survivors, idCol,
+            textCol, shingleN, k)
+          .join(sigs.select(col("_id")), Seq("_id"), "left_anti"))
+          .write.mode("append").parquet(sigDir)
+        sink(survivors, batchId)
+      }
     }
 
   /** One micro-batch's dedup: corpus anti-join, then cluster-correct

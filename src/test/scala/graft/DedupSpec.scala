@@ -510,7 +510,8 @@ class DedupSpec extends SparkSpec {
     clearAllCaches()
     assert(sc.getPersistentRDDs.isEmpty)
     // One op per family that persists intermediates, each fully consumed.
-    assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 8, 0.5).count() == 1)
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 8, 0.5)
+    assert(pairs.count() == 1)
     assert(Dedup.minHashLshPairs(docs, "doc_id", "text", threshold = 0.5).count() == 1)
     assert(Dedup.containmentPairs(docs, "doc_id", "text", 8, 0.5).count() >= 1)
     Dedup.simHashPairs(docs, "doc_id", "text").count() // consume; pair count irrelevant
@@ -519,17 +520,6 @@ class DedupSpec extends SparkSpec {
     Dedup.releaseCaches()
     assert(sc.getPersistentRDDs.isEmpty,
       "releaseCaches must drop every registered block")
-  }
-
-  test("WithCleanup variant: close() drops this op's blocks, result stays valid") {
-    val sc = spark.sparkContext
-    clearAllCaches()
-    val (pairs, handle) =
-      Dedup.ngramJaccardPairsWithCleanup(docs, "doc_id", "text", 8, 0.5)
-    assert(pairs.count() == 1)
-    assert(sc.getPersistentRDDs.nonEmpty)
-    handle.close()
-    assert(sc.getPersistentRDDs.isEmpty)
     // The frame survives its caches: later actions recompute from lineage.
     assert(pairs.count() == 1)
   }

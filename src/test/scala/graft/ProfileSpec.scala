@@ -36,6 +36,33 @@ class ProfileSpec extends SparkSpec {
     assert(got.toSeq == Seq((0L, 4L, 3L, 3L), (1L, 3L, 2L, 5L)))
   }
 
+  test("q159: vocabularyGrowth's bucket table is pinned, so the corpus " +
+      "is scanned and tokenized once per aggregate, not once per branch") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val dir = java.nio.file.Files.createTempDirectory("q159-docs").toString
+    (0L until 200L).map(i => (i, s"w$i w${i % 7} common"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val q = SparkEntry.queries("q159_vocab_growth")(spark, dir)
+    assert(q.collect().length == 4) // buckets of 50 doc ids
+    // Parquet scans in the executed plan; a pinned subtree counts once,
+    // however many branches read it (the two token aggregates scan the
+    // corpus once each).
+    val helper = new AdaptiveSparkPlanHelper {}
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def scans(p: SparkPlan): Int = helper.collect(p) {
+      case _: FileSourceScanExec => 1
+      case m: InMemoryTableScanExec if seen.add(m.relation.cacheBuilder) =>
+        scans(m.relation.cachedPlan)
+    }.sum
+    val n = scans(q.queryExecution.executedPlan)
+    graft.core.Caches.release()
+    assert(n == 2, s"q159 scans the corpus $n times")
+  }
+
   test("vocabularyGrowth: two-level running total carries across the " +
       "coarse 2^16-bucket group boundary (r21 bounded-window rework)") {
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (Spark's
@@ -21,8 +22,15 @@ object SparkSpec {
     .getOrCreate()
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Suites share one session and `Caches.release()` drops every engine
+    * pin, so each suite releases its own before the next one starts. */
+  override protected def afterAll(): Unit = {
+    graft.core.Caches.release()
+    super.afterAll()
+  }
   import org.apache.spark.sql.{Column, DataFrame, Row}
 
   /** One-column string DataFrame helper. */
