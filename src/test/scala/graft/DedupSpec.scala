@@ -524,6 +524,28 @@ class DedupSpec extends SparkSpec {
     assert(pairs.count() == 1)
   }
 
+  test("Caches.scoped: drops only this op's blocks, result stays valid") {
+    val sc = spark.sparkContext
+    clearAllCaches()
+    // Pins made outside the scope, which the scope must leave alone.
+    Dedup.simHashPairs(docs, "doc_id", "text").count()
+    val outside = sc.getPersistentRDDs.keySet.toSet
+    assert(outside.nonEmpty, "expected simHashPairs to persist intermediates")
+    val pairs = graft.core.Caches.scoped {
+      val p = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 8, 0.5)
+      assert(p.count() == 1)
+      assert((sc.getPersistentRDDs.keySet.toSet -- outside).nonEmpty,
+        "expected ngramJaccardPairs to persist intermediates")
+      p
+    }
+    assert(sc.getPersistentRDDs.keySet.toSet == outside,
+      "scoped must drop exactly the pins made inside it")
+    // The frame survives its caches: later actions recompute from lineage.
+    assert(pairs.count() == 1)
+    Dedup.releaseCaches()
+    assert(sc.getPersistentRDDs.isEmpty)
+  }
+
   test("editDistancePairs: within-block pairs equal brute force, cross-block missed by contract, dist exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, element_at, split, levenshtein}
