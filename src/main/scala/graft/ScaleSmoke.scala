@@ -723,9 +723,10 @@ object ScaleSmoke {
         checkpointDir = Some(s"$ckDir/kc")).count()
       println(f"kcore_1m_edges_k8_ckpt: core_nodes=$nkcc " +
         f"time=${(System.nanoTime()-tkcc)/1e9}%.1f s")
-      // DeepWalk-length walks with reliable storage: sealed hop segments
-      // + frontier rounds all on disk — the full fault-tolerant walk
-      // configuration (segments keep history; each hop row written once).
+      // DeepWalk-length walks with reliable storage: every
+      // checkpointEvery-th hop frontier is written to disk and kept with
+      // the pinned hops between them — the full fault-tolerant walk
+      // configuration (each hop row computed once).
       val trwc = System.nanoTime()
       val nrwc = graft.ops.Graph.randomWalks(ug, "a", "b",
         walksPerNode = 1, walkLen = 40,

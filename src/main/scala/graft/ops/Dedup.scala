@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Caches
+import graft.core.{Caches, Rounds}
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -419,15 +419,16 @@ object Dedup {
     * (a~b, b~c keeps only a; pair-drop would also delete c's best link).
     *
     * Scale shape: edges stay 2 longs/row; every pass is a map-side-combined
-    * min() aggregate plus an equi-join on a long key; each iteration's
-    * result is an eager local checkpoint ([[Caches.checkpoint]]), so the
-    * logical plan is re-rooted on the materialized round (constant-size
-    * plan per round — no O(rounds) Catalyst re-analysis, no lineage
-    * blowup) and the superseded round is unpinned once the next one is
-    * materialized. The returned frame reads the FINAL round's checkpoint:
-    * consume it before [[Caches.release]]. Convergence is detected by
-    * an order-insensitive edge-set signature (count + sum of per-edge
-    * xxhash64) — one tiny aggregate per round, no except()/anti-join.
+    * min() aggregate plus an equi-join on a long key; in a
+    * [[Rounds.fixpoint]] loop each iteration's result is an eager local
+    * checkpoint, so the logical plan is re-rooted on the materialized
+    * round (constant-size plan per round — no O(rounds) Catalyst
+    * re-analysis, no lineage blowup) and the superseded round is unpinned
+    * once the next one is materialized. The returned frame reads the
+    * FINAL round's checkpoint: consume it before [[Caches.release]].
+    * Convergence is detected by an order-insensitive edge-set signature
+    * (count + sum of per-edge xxhash64) — one tiny aggregate per round,
+    * no except()/anti-join.
     *
     * Input: any DataFrame with two same-typed, orderable id columns; self
     * loops and duplicate/reversed pairs are tolerated. Output:
@@ -453,7 +454,8 @@ object Dedup {
     * executor.
     * Superseded round files are deleted as the loop advances; the FINAL
     * round's files remain (the returned frame reads them), so the caller
-    * owns deleting the directory after consuming the result. */
+    * owns deleting the directory (calls may share one) after consuming
+    * the result. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50,
                           localThreshold: Long = 1L << 20,
@@ -536,44 +538,15 @@ object Dedup {
       (r.getLong(0), BigDecimal(r.getDecimal(1)))
     }
 
-    // Materialize + re-root each round: an eager local checkpoint, or
-    // with `checkpointDir` a write to reliable storage read back. Round
-    // `r` is dropped (blocks unpinned, or files deleted) once round r + 1
-    // is materialized and compared against it.
-    def roundPath(r: Int) = new org.apache.hadoop.fs.Path(s"${checkpointDir.get}/round_$r")
-    def materialize(e: DataFrame, r: Int): DataFrame =
-      if (checkpointDir.isEmpty) Caches.checkpoint(e)
-      else {
-        e.write.mode("overwrite").parquet(roundPath(r).toString)
-        spark.read.parquet(roundPath(r).toString)
-      }
-    def dropRound(e: DataFrame, r: Int): Unit =
-      if (checkpointDir.isEmpty) Caches.unpin(e)
-      else {
-        val p = roundPath(r)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-
-    var cur = materialize(canon, 0)
-    var curSig = sig(cur)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val next = materialize(smallStar(largeStar(cur)), it + 1)
-      val nextSig = sig(next)
-      // Signature match is the cheap trigger; confirm with the airtight
-      // set check so a ~2⁻⁶⁴ signature collision can't end the loop early
-      // with a non-fixpoint (silently wrong) edge set.
-      converged = nextSig == curSig && next.exceptAll(cur).isEmpty
-      dropRound(cur, it)
-      cur = next; curSig = nextSig; it += 1
+    // Signature match is the cheap trigger; the set check confirms it, so
+    // a ~2⁻⁶⁴ collision can't end the loop on a non-fixpoint (silently
+    // wrong) edge set. Running out of rounds throws: star rounds converge
+    // in O(log² n), and a non-fixpoint edge set is NOT a component map.
+    val cur = Rounds.fixpoint(canon, maxIter, "connectedComponents",
+        checkpointDir)(e => smallStar(largeStar(e)))(e => (sig(e), e)) {
+      case ((prevSig, prev), (nextSig, next)) =>
+        nextSig == prevSig && next.exceptAll(prev).isEmpty
     }
-    // A non-fixpoint edge set is NOT a component map — fail loudly rather
-    // than return silently-wrong clusters. (Star rounds converge in
-    // O(log² n); the default budget covers any physically storable graph.)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds")
     // Fixpoint edges are stars (componentMin, member); the center itself is
     // a member of its own component.
     cur.select(col("_v").as("id"), col("_u").as("component"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Caches
+import graft.core.{Caches, Rounds}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -294,7 +294,9 @@ object Export {
     * a per-partition top-1 + driver merge, never a global sort) and one
     * map-only `replace`. The sequential round loop is inherent to BPE
     * (each merge depends on the last); per-round cost is one scan of the
-    * word table. The evolving table is localCheckpointed EVERY round —
+    * word table. The evolving table is localCheckpointed EVERY round (an
+    * [[graft.core.Rounds.upTo]] loop; the last merge's table, which no
+    * round reads, stays lazy) —
     * lineage truncation is mandatory here, not an optimization: a chain
     * of persisted frames nests each round's cached plan inside the next
     * (InMemoryRelation embeds its child tree), and by a few dozen rounds
@@ -351,35 +353,29 @@ object Export {
       // Over budget: fall through (the probe is bounded, not corpus-sized).
     }
     val words = wordCounts.select(bpeInitSeq(col("_w")).as("_seq"), col("_c"))
-    var cur = Caches.checkpoint(words)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = 0
-    var exhausted = false
-    while (round < numMerges && !exhausted) {
-      val syms = split(col("_seq"), " ")
-      val best = cur
-        .select(explode(zip_with(
-          slice(syms, lit(1), size(syms) - 1),
-          slice(syms, lit(2), size(syms) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("_pair"), col("_c"))
-        .groupBy(col("_pair")).agg(sum(col("_c")).as("_n"))
-        .orderBy(col("_n").desc, col("_pair").asc)
-        .limit(1).collect()
-      if (best.isEmpty || best(0).getLong(1) < minPairCount) exhausted = true
-      else {
-        val pairStr = best(0).getString(0)
-        val parts = pairStr.split(" ")
-        val x = parts(0).substring(1, parts(0).length - 1)
-        val y = parts(1).substring(1, parts(1).length - 1)
-        merges += ((x, y))
-        val next = Caches.checkpoint(cur.withColumn("_seq",
-            replace(col("_seq"), lit(pairStr), lit(s"$BpeSep$x$y$BpeSep"))))
-        Caches.unpin(cur)
-        cur = next
-        round += 1
+    Caches.scoped {
+      Rounds.upTo(words, numMerges, "bpe") { cur =>
+        val syms = split(col("_seq"), " ")
+        val best = cur
+          .select(explode(zip_with(
+            slice(syms, lit(1), size(syms) - 1),
+            slice(syms, lit(2), size(syms) - 1),
+            (a, b) => concat(a, lit(" "), b))).as("_pair"), col("_c"))
+          .groupBy(col("_pair")).agg(sum(col("_c")).as("_n"))
+          .orderBy(col("_n").desc, col("_pair").asc)
+          .limit(1).collect()
+        best.headOption.filter(_.getLong(1) >= minPairCount).map { b =>
+          val pairStr = b.getString(0)
+          val parts = pairStr.split(" ")
+          val x = parts(0).substring(1, parts(0).length - 1)
+          val y = parts(1).substring(1, parts(1).length - 1)
+          merges += ((x, y))
+          cur.withColumn("_seq",
+            replace(col("_seq"), lit(pairStr), lit(s"$BpeSep$x$y$BpeSep")))
+        }
       }
     }
-    Caches.unpin(cur)
     merges.toSeq
   }
 

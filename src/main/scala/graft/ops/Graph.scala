@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Caches
+import graft.core.{Caches, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -51,14 +51,14 @@ object Graph {
     * with map-side partial aggregation on the contrib sum. The dangling
     * mass is a one-row aggregate broadcast back (`crossJoin(broadcast)`),
     * never a driver round-trip; N is the only driver scalar (one O(1)
-    * count on the persisted node table). Rank lineage is truncated every
-    * `checkpointEvery` rounds, same contract as the CC loop — without it
-    * a 50-iteration plan tree chokes the analyzer long before data size
-    * matters. `checkpointDir` picks the truncation medium (see
-    * [[RoundStore]]): default `localCheckpoint` (fast, but truncated
-    * lineage dies with a lost executor); set it to reliable storage for
-    * production multi-iteration runs — one preempted executor must not
-    * kill a 50-iteration job.
+    * count on the persisted node table). Each round reads the previous
+    * one twice, so [[Rounds.fixed]] pins it, and truncates rank lineage
+    * every `checkpointEvery` rounds — without it a 50-iteration plan tree
+    * chokes the analyzer long before data size matters. `checkpointDir`
+    * picks the truncation medium: default `localCheckpoint` (fast, but
+    * truncated lineage dies with a lost executor); set it to reliable
+    * storage for production multi-iteration runs — one preempted executor
+    * must not kill a 50-iteration job.
     *
     * Output: (node: String, rank_units: Long) — rank in `scale` units.
     */
@@ -174,10 +174,10 @@ object Graph {
     * built once and persisted; each round is ONE join of the adjacency
     * with the current E-small label table on the neighbor key plus ONE
     * two-level aggregate ((node,label) count, then per-node argmax via
-    * min(struct(-cnt, label)) — map-side combinable, window-free). Label
-    * lineage is truncated every `checkpointEvery` rounds, same contract
-    * (and same `checkpointDir` reliable-storage option) as the PageRank
-    * loop.
+    * min(struct(-cnt, label)) — map-side combinable, window-free). Each
+    * round reads the previous one twice (votes and the carried label),
+    * so rounds are pinned and truncated exactly as in the PageRank loop,
+    * with the same `checkpointEvery` and `checkpointDir` options.
     *
     * Output: (node: String, label: String) — one row per graph node;
     * label null where no seed's influence has reached. */
@@ -186,7 +186,6 @@ object Graph {
                        seedLabelCol: String, iters: Int,
                        checkpointEvery: Int = 8,
                        checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 0, "iters must be >= 0")
     // directed adjacency, each undirected edge once per direction; a
     // neighbor votes once however many parallel edges the input held
     val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
@@ -205,10 +204,8 @@ object Graph {
       .groupBy("node").agg(min(col("_seed")).as("_seed")) // dedupe, det.
     val nodes = Caches.pin(adj.select(col("node")).distinct()
       .join(seedTab, Seq("node"), "left"))
-    val store = new RoundStore(checkpointDir, "labels")
-    var labels = nodes.select(col("node"), col("_seed").as("label"))
-    var round = 0
-    while (round < iters) {
+    Rounds.fixed(nodes.select(col("node"), col("_seed").as("label")),
+        iters, "labels", checkpointEvery, checkpointDir) { (labels, _) =>
       val votes = adj
         .join(labels.where(col("label").isNotNull)
             .select(col("node").as("nbr"), col("label")),
@@ -220,17 +217,13 @@ object Graph {
         .agg(min(struct((-col("_cnt")).as("_nc"), col("label")))
           .as("_best"))
         .select(col("node"), col("_best.label").as("_voted"))
-      val next = nodes
+      nodes
         .join(labels.select(col("node"), col("label").as("_prev")),
           Seq("node"))
         .join(picked, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("_seed"), col("_voted"), col("_prev")).as("label"))
-      round += 1
-      labels = if (round % checkpointEvery == 0 && round < iters)
-        store.truncate(next) else next
     }
-    labels
   }
 
   /** Deterministic uniform random walks (the DeepWalk/node2vec corpus
@@ -251,12 +244,12 @@ object Graph {
     * of dragging a growing path string through every join (which would
     * shuffle O(walkLen²) bytes per walk and inflate frontier-join skew
     * at DeepWalk-scale walk lengths of 40–80); paths are assembled ONCE
-    * at the end by a single groupBy + in-group sort on t. Stepped
-    * frontiers are persisted (each hop's rows are computed exactly once
-    * even though both the next hop and the final assembly read them) and
-    * both the frontier and the hop table are lineage-truncated every
-    * `checkpointEvery` steps — with the same `checkpointDir`
-    * reliable-storage option as the PageRank loop. NOTE for
+    * at the end by a single groupBy + in-group sort on t. Every hop's
+    * frontier is pinned or, every `checkpointEvery` steps, truncated —
+    * with the same `checkpointDir` reliable-storage option as the
+    * PageRank loop — and kept until the result is consumed, so each hop
+    * row is computed exactly once even though both the next hop and the
+    * final assembly read it. NOTE for
     * power-law graphs: the neighbor ARRAY of a celebrity node is held in
     * one row; beyond ~10⁶ neighbors, pre-cap the adjacency (e.g. keep the
     * maxDegree smallest md5-60(nbr) per node — itself deterministic)
@@ -275,67 +268,40 @@ object Graph {
   }
 
   /** Walk loop over a (node, nbr) adjacency reduced to sorted-array lists;
-    * shared by [[randomWalks]] and [[randomWalksAgainstIndex]].
-    *
-    * Hop rows accumulate in SEGMENTS of `checkpointEvery` hops: at each
-    * truncation point only the CURRENT segment is truncated (each hop row
-    * is written exactly once — truncating the full accumulated table
-    * would re-write O(walkLen²/checkpointEvery) rows), sealed segments
-    * keep their storage until the result is consumed (`keepHistory` —
-    * they back the final union), and the ORDER is load-bearing: the
-    * segment truncates BEFORE the frontier, while the frontier round the
-    * segment's lineage may recompute through still exists on disk —
-    * truncating the frontier first would delete that round and strand the
-    * segment's recompute path on executor loss, the exact failure
-    * `checkpointDir` exists to prevent. Superseded per-hop frontier
-    * caches are released at each truncation (the sealed segment and the
-    * truncated frontier replace them), bounding cache footprint at
-    * O(checkpointEvery · frontier) instead of O(walkLen · frontier). */
+    * shared by [[randomWalks]] and [[randomWalksAgainstIndex]]. Hop t's
+    * frontier is round t; `keepHistory` keeps every round the final
+    * assembly reads. */
   private def walksFromAdj(adjLists: DataFrame, walksPerNode: Int,
                            walkLen: Int, checkpointEvery: Int,
                            checkpointDir: Option[String]): DataFrame = {
     require(walksPerNode >= 1 && walkLen >= 0, "need walks >= 1, len >= 0")
     val adjl = Caches.pin(adjLists)
-    val fStore = new RoundStore(checkpointDir, "walk_frontier")
-    val hStore = new RoundStore(checkpointDir, "walk_hops",
-      keepHistory = true)
-    var frontier = adjl.select(col("node").as("start"),
+    val start = adjl.select(col("node").as("start"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("walk"))
       .select(col("start"), col("walk").cast("int").as("walk"),
         col("start").as("cur"))
-    val sealedSegs = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var segment = frontier.select(col("start"), col("walk"),
-      lit(0).as("t"), col("cur").as("node"))
-
-    val stepCaches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var t = 0
-    while (t < walkLen) {
+    val hops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hop(frontier: DataFrame, t: Int): DataFrame =
+      frontier.select(col("start"), col("walk"), lit(t).as("t"),
+        col("cur").as("node"))
+    val last = Rounds.fixed(start, walkLen, "walk", checkpointEvery,
+        checkpointDir, keepHistory = true) { (frontier, r) =>
+      hops += hop(frontier, r - 1)
       val key = concat(col("start"), lit(":"), col("walk").cast("string"),
-        lit(":"), lit(t.toString), lit(":"), col("cur"))
-      val stepped = Caches.pin(frontier
+        lit(":"), lit((r - 1).toString), lit(":"), col("cur"))
+      frontier
         .join(adjl.select(col("node").as("cur"), col("nbrs")), Seq("cur"))
         .select(col("start"), col("walk"),
           element_at(col("nbrs"),
             (pmod(Dedup.md5Hash60(key), size(col("nbrs")).cast("long")) + 1)
-              .cast("int")).as("cur")))
-      stepCaches += stepped
-      segment = segment.unionAll(stepped.select(col("start"), col("walk"),
-        lit(t + 1).as("t"), col("cur").as("node")))
-      t += 1
-      if (t % checkpointEvery == 0 && t < walkLen) {
-        sealedSegs += hStore.truncate(segment) // BEFORE the frontier truncation
-        frontier = fStore.truncate(stepped)
-        segment = frontier.limit(0).select(col("start"), col("walk"),
-          lit(0).as("t"), col("cur").as("node")) // empty, same schema
-        stepCaches.foreach(Caches.unpin)
-        stepCaches.clear()
-      } else frontier = stepped
+              .cast("int")).as("cur"))
     }
-    val hops = (sealedSegs :+ segment).reduce(_ unionAll _)
+    hops += hop(last, walkLen)
     // One shuffle carries each hop row exactly once; t is unique within a
     // (start, walk) group, so the struct sort is a total order and the
     // assembled path is deterministic under any collect_list order.
-    hops.groupBy(col("start"), col("walk"))
+    hops.reduce(_ unionAll _)
+      .groupBy(col("start"), col("walk"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("t"), col("node")))),
           x => x.getField("node")), " ").as("path"))
@@ -354,12 +320,13 @@ object Graph {
     *
     * Scale shape: each round is ONE degree aggregate + one two-sided
     * semi-join of the edge set against surviving nodes; the round's edge
-    * set is eagerly truncated (it is counted anyway for the fixpoint
-    * test; default `localCheckpoint`, reliable `checkpointDir` for
-    * production runs — same contract as the PageRank loop), so plan
-    * depth stays constant however many peels the
-    * fringe cascade takes. Rounds are data-dependent but bounded by the
-    * longest elimination chain — O(peel depth), typically ≪ n.
+    * set is eagerly truncated (a [[Rounds.fixpoint]] loop: it is counted
+    * anyway for the fixpoint test; default `localCheckpoint`, reliable
+    * `checkpointDir` for production runs — same contract as the PageRank
+    * loop), so plan depth stays constant however many peels the fringe
+    * cascade takes. Rounds are data-dependent but bounded by the longest
+    * elimination chain — O(peel depth), typically ≪ n; a run that needs
+    * more than `maxIter` peels throws instead of returning a non-core.
     *
     * Output: (node: String, deg_in_core: Long) — core members with their
     * within-core degrees; empty when no k-core exists. */
@@ -372,31 +339,18 @@ object Graph {
   private def kCoreCanon(canon: DataFrame, k: Int, maxIter: Int,
                          checkpointDir: Option[String]): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val store = new RoundStore(checkpointDir, "kcore")
-    var cur = store.truncate(canon)
-    var prev = -1L
-    var cnt = cur.count()
-    var round = 0
-    while (cnt != prev && cnt > 0 && round < maxIter) {
+    val core = Rounds.fixpoint(canon, maxIter, "kCore", checkpointDir) {
+        cur =>
       val keep = directedAdjacency(cur)
         .groupBy("node").agg(count(lit(1)).as("_deg"))
         .where(col("_deg") >= k)
         .select(col("node"))
-      val nxt = store.truncate(cur
+      cur
         .join(keep.select(col("node").as("u")), Seq("u"))
         .join(keep.select(col("node").as("v")), Seq("v"))
-        .select(col("u"), col("v")))
-      prev = cnt
-      cnt = nxt.count()
-      cur = nxt
-      round += 1
-    }
-    // A silent truncation would report sub-k-degree nodes as core members;
-    // the contract is the TRUE k-core, so non-convergence fails loudly.
-    require(cnt == prev || cnt == 0,
-      s"kCore: no fixpoint after $maxIter rounds ($cnt edges remain); " +
-        "raise maxIter — peel depth equals the longest elimination chain")
-    directedAdjacency(cur)
+        .select(col("u"), col("v"))
+    }(_.count())((before, after) => after == before || after == 0)
+    directedAdjacency(core)
       .groupBy("node").agg(count(lit(1)).as("deg_in_core"))
   }
 
@@ -570,11 +524,9 @@ object Graph {
                                    tablePrefix: String, seeds: DataFrame,
                                    seedNodeCol: String, seedLabelCol: String,
                                    iters: Int, checkpointEvery: Int = 8,
-                                   checkpointDir: Option[String] = None): DataFrame = {
-    require(iters >= 0, "iters must be >= 0")
+                                   checkpointDir: Option[String] = None): DataFrame =
     lpFromAdj(spark.table(s"${tablePrefix}_adj"), seeds, seedNodeCol,
       seedLabelCol, iters, checkpointEvery, checkpointDir)
-  }
 
   /** [[randomWalks]] served from a persisted spine — the sorted
     * neighbor-list build reads the bucketed adjacency exchange-free
@@ -617,7 +569,6 @@ object Graph {
                       scale: Long, dampNum: Long, dampDen: Long,
                       checkpointEvery: Int,
                       checkpointDir: Option[String]): DataFrame = {
-    require(iters >= 0, "iters must be >= 0")
     require(scale > 0 && dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need scale > 0 and 0 <= dampNum <= dampDen")
 
@@ -655,12 +606,11 @@ object Graph {
     val base = ((dampDen - dampNum) * scale) / (dampDen * nSeed)
     val maxW = scala.Long.MaxValue / scale
     val seedBase = when(col("_seed"), lit(base)).otherwise(lit(0L))
-    val r0 = when(col("_seed"), lit(scale / nSeed)).otherwise(lit(0L))
+    val r0 = nodes.select(col("node"), col("wout"), col("_seed"),
+      when(col("_seed"), lit(scale / nSeed)).otherwise(lit(0L)).as("r"))
 
-    val store = new RoundStore(checkpointDir, "pagerank")
-    var r = nodes.select(col("node"), col("wout"), col("_seed"), r0.as("r"))
-    var round = 0
-    while (round < iters) {
+    Rounds.fixed(r0, iters, "pagerank", checkpointEvery, checkpointDir) {
+        (r, _) =>
       val dang = r.where(col("wout").isNull)
         .agg(coalesce(sum("r"), lit(0L)).as("_d"))
       val insum = e
@@ -672,71 +622,13 @@ object Graph {
             "scale*w; lower scale or normalize weights'))) div wout")
             .as("_c"))
         .groupBy("dst").agg(sum("_c").as("_insum"))
-      val next = nodes
+      nodes
         .join(insum.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"), col("wout"), col("_seed"),
           (seedBase +
             expr(s"($dampNum * (coalesce(_insum, 0L) + " +
               s"if(_seed, _d div ${nSeed}L, 0L))) div $dampDen")).as("r"))
-      round += 1
-      r = if (round % checkpointEvery == 0 && round < iters)
-        store.truncate(next) else next
-    }
-    r.select(col("node"), col("r").as("rank_units"))
-  }
-
-  /** Lineage truncation for the iterative loops. Default (`dir` = None):
-    * eager [[Caches.checkpoint]] — fast, but the truncated lineage CANNOT
-    * be recomputed after executor loss, so it is a local[N]/interactive
-    * configuration. With `dir` set: each truncation is written to that
-    * directory (reliable storage — HDFS/S3 on a real cluster) and read
-    * back, so a 1000-executor 50-iteration job survives preemption and
-    * resumes from the last written round. Superseded truncations are
-    * dropped as the loop advances (checkpoints unpinned, round files
-    * deleted); the FINAL truncation backs the returned frame — its
-    * checkpoint lives until [[Caches.release]], and with `dir` the caller
-    * owns deleting the directory after consuming the result, the same
-    * contract as [[Dedup.connectedComponents]]'s `checkpointDir`.
-    * `keepHistory` keeps every truncation, for stores whose EVERY
-    * truncation stays live (the walk loop's sealed hop segments all back
-    * the final union). */
-  /** Process-wide instance counter: two concurrent loops of the SAME op
-    * sharing one checkpointDir (two pageRank calls, a retried driver
-    * program re-entering the loop) must not overwrite / delete each
-    * other's round files — each RoundStore instance salts its paths with
-    * a unique id. Distinct JVMs sharing one directory still need distinct
-    * dirs (the counter is per-process); the tests and ScaleSmoke pass
-    * per-invocation subdirs anyway. */
-  private[ops] object RoundStore {
-    private val ids = new java.util.concurrent.atomic.AtomicInteger(0)
-  }
-
-  private[ops] final class RoundStore(dir: Option[String], tag: String,
-                                 keepHistory: Boolean = false) {
-    private val inst = RoundStore.ids.getAndIncrement()
-    private var round = 0
-    private var prev: Option[(DataFrame, Option[org.apache.hadoop.fs.Path])] = None
-    def truncate(df: DataFrame): DataFrame = {
-      val path = dir.map(d => new org.apache.hadoop.fs.Path(s"$d/${tag}_i${inst}_$round"))
-      round += 1
-      val out = path match {
-        case Some(p) =>
-          df.write.mode("overwrite").parquet(p.toString)
-          df.sparkSession.read.parquet(p.toString)
-        case None => Caches.checkpoint(df)
-      }
-      // The new round is fully materialized (it was computed FROM the
-      // prior round above), so the superseded round can go.
-      if (!keepHistory) {
-        prev.foreach {
-          case (_, Some(p)) =>
-            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-          case (f, None) => Caches.unpin(f)
-        }
-        prev = Some((out, path))
-      }
-      out
-    }
+    }.select(col("node"), col("r").as("rank_units"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Caches
+import graft.core.{Caches, Rounds}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -276,7 +276,7 @@ object Scoring {
     * table is `buckets`-bounded and BROADCAST, the margin aggregate runs
     * in place on the id-partitioned frame, the gradient aggregate is
     * map-side-combined to `buckets` rows — and per-epoch lineage is
-    * truncated ([[Graph.RoundStore]]; pass `checkpointDir` for
+    * truncated ([[graft.core.Rounds]]; pass `checkpointDir` for
     * multi-hundred-epoch fits). n enters in-plan as a broadcast one-row
     * count, never a driver constant. The learned weights — `buckets`
     * rows, the table every epoch broadcasts — come back to the driver on
@@ -335,8 +335,7 @@ object Scoring {
           lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
         case None =>
           val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
-          val store = new Graph.RoundStore(checkpointDir, "linfit")
-          collectWeights(linFitLoop(feats, nd, epochs, lrPpm, store))
+          collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
       }
     }
     val sp = docs.sparkSession
@@ -459,10 +458,11 @@ object Scoring {
     * count. Returns the (_bkt, _wu) weight vector after `epochs` exact
     * integer-GD rounds (the q195 arithmetic, verbatim). */
   private def linFitLoop(feats: DataFrame, nd: DataFrame, epochs: Int,
-                         lrPpm: Long, store: Graph.RoundStore): DataFrame = {
-    var w = feats.select(col("_bkt")).distinct()
-      .select(col("_bkt"), lit(0L).as("_wu"))
-    for (_ <- 1 to epochs) {
+                         lrPpm: Long,
+                         checkpointDir: Option[String]): DataFrame =
+    Rounds.fixed(feats.select(col("_bkt")).distinct()
+        .select(col("_bkt"), lit(0L).as("_wu")),
+        epochs, "linfit", dir = checkpointDir) { (w, _) =>
       val resid = feats.join(broadcast(w), Seq("_bkt"))
         .groupBy(col("_id"), col("_d"), col("_yu"))
         .agg(sum(col("_wu") * col("_cnt")).as("_z"))
@@ -470,14 +470,11 @@ object Scoring {
       val grad = feats.join(resid, Seq("_id"))
         .select(col("_bkt"), expr("(_ru * _cnt) div _d").as("_c"))
         .groupBy(col("_bkt")).agg(sum(col("_c")).as("_g"))
-      w = store.truncate(
-        w.join(grad, Seq("_bkt"), "left").crossJoin(nd)
-          .select(col("_bkt"), (col("_wu") -
-            expr(s"(${lrPpm}L * (coalesce(_g, 0L) div _nd)) div 1000000L"))
-            .as("_wu")))
+      w.join(grad, Seq("_bkt"), "left").crossJoin(nd)
+        .select(col("_bkt"), (col("_wu") -
+          expr(s"(${lrPpm}L * (coalesce(_g, 0L) div _nd)) div 1000000L"))
+          .as("_wu"))
     }
-    w
-  }
 
   /** One-vs-all multiclass FIT for the hashed language-ID model — the
     * training half of [[langIdScore]] (which serves an externally
@@ -567,8 +564,7 @@ object Scoring {
           classes.flatMap { c =>
             val feats = shared.withColumn("_yu",
               (when(col("_lab") === c, 1L).otherwise(-1L) * 1000000L))
-            val store = new Graph.RoundStore(checkpointDir, s"linfit_$c")
-            collectWeights(linFitLoop(feats, nd, epochs, lrPpm, store))
+            collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
               .map { case (b, w) => (c, b, w) }
           }
       }
@@ -1263,9 +1259,10 @@ object Scoring {
     * broadcast back — the PageRank 2-shuffle round shape over the
     * comparison graph. Each round's strength vector is referenced THREE
     * times by the next (both join endpoints + the update), so lineage is
-    * truncated EVERY round (the [[graft.ops.Graph.RoundStore]] contract:
-    * default `localCheckpoint`, `checkpointDir` for reliable storage on a
-    * real cluster) — without truncation the logical plan grows 3^iters
+    * truncated EVERY round but the last, which the caller's action reads
+    * once (the [[graft.core.Rounds]] contract: default `localCheckpoint`,
+    * `checkpointDir` for reliable storage on a real cluster) — without
+    * truncation the logical plan grows 3^iters
     * and analysis time dwarfs the data work. `iters` is small by nature
     * (MM converges geometrically; 3–10 rounds rank-stabilizes real
     * tournaments).
@@ -1353,10 +1350,9 @@ object Scoring {
 
   private def bradleyTerryDistributed(
       games: DataFrame, base: DataFrame, iters: Int,
-      checkpointDir: Option[String]): DataFrame = {
-    val store = new Graph.RoundStore(checkpointDir, "bt")
-    var cur = base.withColumn("_su", lit(1000000L))
-    for (_ <- 1 to iters) {
+      checkpointDir: Option[String]): DataFrame =
+    Rounds.fixed(base.withColumn("_su", lit(1000000L)), iters, "bt",
+        dir = checkpointDir) { (cur, _) =>
       val sj = cur.select(col("_i").as("_j"), col("_su").as("_sju"))
       val den = games
         .join(cur.select(col("_i"), col("_su")), Seq("_i"))
@@ -1373,14 +1369,12 @@ object Scoring {
               |  div (_denu + (cast(2 as decimal(38,0)) * 1000000000000)
               |         div (_su + 1000000L))""".stripMargin).as("_su"))
       val tot = upd.agg(sum(col("_su").cast("decimal(38,0)")).as("_totu"))
-      cur = store.truncate(upd.crossJoin(broadcast(tot))
+      upd.crossJoin(broadcast(tot))
         .select(col("_i"), col("_games"), col("_wins"),
           expr("(cast(_su as decimal(38,0)) * 1000000) div _totu")
-            .as("_su")))
-    }
-    cur.select(col("_i").as("item"), col("_games").as("games"),
+            .as("_su"))
+    }.select(col("_i").as("item"), col("_games").as("games"),
       col("_wins").as("wins"), col("_su").as("strength_ppm"))
-  }
 
   /** Pairwise Cohen's kappa (Cohen 1960) over an annotation table — the
     * inter-annotator QC matrix of a labeling operation: which rater

@@ -464,8 +464,28 @@ class DedupSpec extends SparkSpec {
     // Superseded round files are deleted as the loop advances; only the
     // final round (backing the returned frame) remains.
     val rounds = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("round_"))
+      .filter(_.getName.startsWith("connectedComponents_"))
     assert(rounds.length == 1, rounds.map(_.getName).mkString(","))
+  }
+
+  test("connectedComponents checkpointDir: two calls sharing one directory " +
+      "keep each other's final round") {
+    import spark.implicits._
+    // A's result is consumed only AFTER B ran in the same directory. B is a
+    // longer chain, so it runs more rounds than A: without a per-call salt
+    // on the round files, B overwrites A's final round and then deletes it
+    // as superseded, and A's collect reads missing or foreign parquet.
+    def chain(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-share").toString
+    val a = Dedup.connectedComponents(chain(4), "a", "b", localThreshold = 0L,
+      checkpointDir = Some(dir))
+    val b = Dedup.connectedComponents(chain(200), "a", "b",
+        localThreshold = 0L, checkpointDir = Some(dir))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(b == (1L to 200L).map(_ -> 1L).toMap)
+    val got = a.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 4L).map(_ -> 1L).toMap)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("checkpointDir threads end-to-end through dedupAssign/KeepBest/Filter") {
@@ -476,7 +496,7 @@ class DedupSpec extends SparkSpec {
     val docs = (1L to 3001L).map(i => (i, i % 7)).toDF("doc_id", "quality")
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-ckpt")
     def roundFiles() = new java.io.File(dir.toString).listFiles()
-      .count(_.getName.startsWith("round_"))
+      .count(_.getName.startsWith("connectedComponents_"))
     val assign = Dedup.dedupAssign(docs, "doc_id", pairs,
       checkpointDir = Some(dir.toString), ccLocalThreshold = 0L)
     assert(assign.where(col("cluster_id") === 1L).count() == 3001L)

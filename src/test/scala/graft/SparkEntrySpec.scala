@@ -189,17 +189,23 @@ class SparkEntrySpec extends SparkSpec {
 
   // Leak contract: once a query has run, `Caches.release()` leaves none
   // of the RDDs it persisted or checkpointed in the block manager. The
-  // session is shared, so only RDDs that were not persisted before the
-  // query count. Exempt queries, each with its reason: none.
+  // query is also written in full to the `noop` sink first: `count()`
+  // prunes columns and, for an iterative op, whole rounds, so only a full
+  // write evaluates every output column and materializes every pinned
+  // round the leak check must see. The session is shared, so only RDDs that were not
+  // persisted before the query count. Exempt queries, each with its
+  // reason: none.
   private val leakExempt: Map[String, String] = Map.empty
 
   for (name <- SparkEntry.queries.keys.toSeq.sorted)
     test(s"declared query $name matches its golden row count at sf0.001 (codegen-strict)") {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val n = SparkEntry.queries(name)(strict, "/root/testdata/sf0.001").count()
+      val df = SparkEntry.queries(name)(strict, "/root/testdata/sf0.001")
+      val n = df.count()
       golden.get(name).foreach(exp =>
         assert(n == exp, s"$name returned $n rows, golden says $exp"))
+      df.write.format("noop").mode("overwrite").save()
       graft.core.Caches.release()
       val leaked = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
       assert(leaked.isEmpty || leakExempt.contains(name),
