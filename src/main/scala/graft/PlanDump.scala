@@ -1,40 +1,34 @@
 package graft
 
-/** Plan-audit aid: prints the formatted physical plan of named queries
-  * (all when none given) — the `.explain("formatted")` loop the build
-  * rules demand, runnable per-query without touching the bench.
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
+
+/** Plan-audit aid: prints the physical plan of named queries (all when
+  * none given, or "all") — the `.explain` loop the build rules demand,
+  * runnable per query without touching the bench.
   * Usage: sbt "runMain graft.PlanDump <sfDir> [q01_agg,q02_...] [outDir]"
   * With an `outDir` third argument, each query's FORMATTED plan is also
-  * written to `<outDir>/<name>.txt` (the plans/rNN before/after evidence
+  * written to `<outDir>/<name>.txt` (the plans/ before/after evidence
   * files); stdout keeps the simple mode for eyeballing. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val only: Option[Set[String]] =
-      if (args.length > 1 && args(1).nonEmpty && args(1) != "all")
-        Some(args(1).split(",").toSet)
-      else None
-    val outDir: Option[java.nio.file.Path] =
-      if (args.length > 2) Some(java.nio.file.Paths.get(args(2))) else None
-    outDir.foreach(java.nio.file.Files.createDirectories(_))
-    val spark = GraftSession.build(4, "graft-plandump")
+    val queries = Harness.select(args.lift(1).filter(_ != "all").getOrElse(""))
+    val outDir = args.lift(2).map(Paths.get(_))
+    outDir.foreach(Files.createDirectories(_))
+    val spark = GraftSession.build(Harness.cpus, "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        println(s"\n===== $name =====")
-        try {
-          val qe = fn(spark, sfDir).queryExecution
-          println(qe.explainString(
-            org.apache.spark.sql.execution.SimpleMode))
-          outDir.foreach { d =>
-            java.nio.file.Files.writeString(d.resolve(s"$name.txt"),
-              qe.explainString(
-                org.apache.spark.sql.execution.FormattedMode) + "\n")
-          }
-        }
-        catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
+    queries.foreach { case (name, fn) =>
+      println(s"\n===== $name =====")
+      try {
+        val qe = fn(spark, sfDir).queryExecution
+        println(qe.explainString(SimpleMode))
+        outDir.foreach(d => Files.writeString(d.resolve(s"$name.txt"),
+          qe.explainString(FormattedMode) + "\n"))
       }
+      catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
+    }
     spark.stop()
   }
 }

@@ -149,9 +149,6 @@ object Exprs {
     coalesce(date_format(parsed, "MM/dd/yy"), c)
   }
 
-  /** F15 ceil to nullable long. */
-  def ceilLong(c: Column): Column = ceil(c).cast("long")
-
   /** F17 `_num_like_to_clean_str`: "39.0"->"39", "1,234.0"->"1234",
     * "39.50"->"39.5"; non-numeric kept (trimmed).
     * Ref: /root/reference/Flips/tools/adpo_I_tool.py:46-71. */

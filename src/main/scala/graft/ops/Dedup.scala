@@ -101,11 +101,17 @@ object Dedup {
                       bands: Int = 16, rows: Int = 4,
                       threshold: Double = 0.8,
                       maxBucket: Int = 1000): DataFrame = {
-    // The per-doc signature table is referenced three times below (banding +
+    // The per-doc signature table is referenced three times (banding +
     // both verify joins); pin it so the shingle explode + groupBy runs
     // once. It is the compressed working set — ~100× smaller than the text.
-    val perDoc = Caches.pin(
-      minHashPerDoc(shingleHashes(docs, idCol, textCol, shingleN), k))
+    selfPairs(Caches.pin(
+        minHashPerDoc(shingleHashes(docs, idCol, textCol, shingleN), k)),
+      bands, rows, threshold, maxBucket)
+  }
+
+  /** [[minHashLshPairs]] over a pinned per-doc signature table. */
+  private def selfPairs(perDoc: DataFrame, bands: Int, rows: Int,
+                        threshold: Double, maxBucket: Int): DataFrame = {
     // Banding runs on (id, band, bucket) rows — 24 bytes, no arrays.
     val banded = perDoc.select(col("_id"),
       posexplode(bandHashes(col("_sig"), bands, rows)).as(Seq("_band", "_bh")))
@@ -169,9 +175,36 @@ object Dedup {
                                        shingleN: Int = 8, k: Int = 64,
                                        bands: Int = 16, rows: Int = 4,
                                        threshold: Double = 0.8,
-                                       maxBucket: Int = 1000): DataFrame = {
+                                       maxBucket: Int = 1000): DataFrame =
+    crossPairs(Caches.pin(
+        minHashPerDoc(shingleHashes(newDocs, idCol, textCol, shingleN), k)),
+      corpusSigs, bands, rows, threshold, maxBucket)
+
+  /** A new batch's near-dup pairs in one pass over its text: against the
+    * stored corpus signatures (as [[minHashLshPairsAgainstSignatures]],
+    * new_id → doc_a, corpus_id → doc_b) and within the batch (as
+    * [[minHashLshPairs]]). Output: (doc_a, doc_b) — the edge input of
+    * [[clusterIndexAppend]]. The batch signature table is built and pinned
+    * once for both halves. */
+  def minHashLshBatchPairs(newDocs: DataFrame, corpusSigs: DataFrame,
+                           idCol: String, textCol: String,
+                           shingleN: Int = 8, k: Int = 64,
+                           bands: Int = 16, rows: Int = 4,
+                           threshold: Double = 0.8,
+                           maxBucket: Int = 1000): DataFrame = {
     val newPer = Caches.pin(
       minHashPerDoc(shingleHashes(newDocs, idCol, textCol, shingleN), k))
+    crossPairs(newPer, corpusSigs, bands, rows, threshold, maxBucket)
+      .select(col("new_id").as("doc_a"), col("corpus_id").as("doc_b"))
+      .unionAll(selfPairs(newPer, bands, rows, threshold, maxBucket)
+        .select(col("doc_a"), col("doc_b")))
+  }
+
+  /** [[minHashLshPairsAgainstSignatures]] over a pinned batch signature
+    * table. */
+  private def crossPairs(newPer: DataFrame, corpusSigs: DataFrame,
+                         bands: Int, rows: Int, threshold: Double,
+                         maxBucket: Int): DataFrame = {
     def band(df: DataFrame) = df.select(col("_id"),
       posexplode(bandHashes(col("_sig"), bands, rows)).as(Seq("_band", "_bh")))
     // Hot-bucket guard on the CORPUS side (the big one): a degenerate
@@ -989,21 +1022,6 @@ object Dedup {
       .select(col("_id"), tokenHash(col("_t")).as("_h"))
     toks.groupBy(col("_id"))
       .agg(graft.plans.SimHashSigAgg(col("_h")).as("_sig"))
-  }
-
-  /** 64-bit SimHash as a single Column (for per-row use on small inputs;
-    * the distributed pair path uses [[simHashPerDoc]]). */
-  def simHash64(text: Column): Column = {
-    val hashes = transform(split(lower(trim(text)), "\\s+"), t => xxhash64(t))
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (acc, bit) => {
-        val vote = aggregate(hashes, lit(0L),
-          (v, h) => v + (call_function("getbit", h, bit).cast("long") * 2 - 1))
-        acc.bitwiseOR(
-          when(vote > 0, call_function("shiftleft", lit(1L), bit)).otherwise(lit(0L)))
-      })
   }
 
   /** Near-dup pairs by SimHash: split the 64-bit signature into four 16-bit

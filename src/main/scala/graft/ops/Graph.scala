@@ -189,14 +189,6 @@ object Graph {
     // directed adjacency, each undirected edge once per direction; a
     // neighbor votes once however many parallel edges the input held
     val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
-    lpFromAdj(adj, seeds, seedNodeCol, seedLabelCol, iters, checkpointEvery,
-      checkpointDir)
-  }
-
-  private def lpFromAdj(adj: DataFrame, seeds: DataFrame,
-                        seedNodeCol: String, seedLabelCol: String,
-                        iters: Int, checkpointEvery: Int,
-                        checkpointDir: Option[String]): DataFrame = {
     val seedTab = seeds.select(
         col(seedNodeCol).cast("string").as("node"),
         col(seedLabelCol).cast("string").as("_seed"))
@@ -372,13 +364,8 @@ object Graph {
     * Output: (node_a, node_b, common: Long) with node_a < node_b. */
   def commonNeighborPairs(edges: DataFrame, aCol: String, bCol: String,
                           maxDeg: Int, minCommon: Int): DataFrame = {
-    val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
-    commonNeighborsFromAdj(adj, maxDeg, minCommon)
-  }
-
-  private def commonNeighborsFromAdj(adj: DataFrame, maxDeg: Int,
-                                     minCommon: Int): DataFrame = {
     require(maxDeg >= 1 && minCommon >= 1, "need maxDeg >= 1, minCommon >= 1")
+    val adj = Caches.pin(directedAdjacency(canonicalUndirected(edges, aCol, bCol)))
     val centers = adj.groupBy("node").agg(count(lit(1)).as("_deg"))
       .where(col("_deg") <= maxDeg)
       .select(col("node"))
@@ -508,25 +495,6 @@ object Graph {
                         checkpointDir: Option[String] = None): DataFrame =
     kCoreCanon(spark.table(s"${tablePrefix}_edges"), k, maxIter,
       checkpointDir)
-
-  /** [[commonNeighborPairs]] served from a persisted spine — the degree
-    * aggregate and both wedge legs read the bucketed adjacency with no
-    * exchange on `node`. */
-  def commonNeighborPairsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                                      tablePrefix: String, maxDeg: Int,
-                                      minCommon: Int): DataFrame =
-    commonNeighborsFromAdj(spark.table(s"${tablePrefix}_adj"), maxDeg,
-      minCommon)
-
-  /** [[labelPropagation]] served from a persisted spine — the adjacency
-    * read replaces the per-query canonicalize + explode. */
-  def labelPropagationAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                                   tablePrefix: String, seeds: DataFrame,
-                                   seedNodeCol: String, seedLabelCol: String,
-                                   iters: Int, checkpointEvery: Int = 8,
-                                   checkpointDir: Option[String] = None): DataFrame =
-    lpFromAdj(spark.table(s"${tablePrefix}_adj"), seeds, seedNodeCol,
-      seedLabelCol, iters, checkpointEvery, checkpointDir)
 
   /** [[randomWalks]] served from a persisted spine — the sorted
     * neighbor-list build reads the bucketed adjacency exchange-free

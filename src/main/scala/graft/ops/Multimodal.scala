@@ -31,24 +31,6 @@ object Multimodal {
                                  width: Int, height: Int, channels: Int,
                                  fingerprint: String)
 
-  /** Attach the typed metadata struct (mime + byte size + content
-    * fingerprint) next to a binary column — expression tier, map-only. */
-  def withMetadata(df: DataFrame, blobCol: String, mime: String): DataFrame =
-    df.withColumn("media_meta", struct(
-      lit(mime).as("mime"),
-      length(col(blobCol)).cast("long").as("n_bytes"),
-      md5(col(blobCol)).as("fingerprint")))
-
-  /** Byte-range frame sampling: n evenly-spaced fixed-width slices of the
-    * payload — the shape of video frame-grab / audio windowing, kept in
-    * the expression tier (substring on binary is codegen'd). */
-  def sampleFrames(blob: Column, n: Int, frameBytes: Int): Column =
-    transform(sequence(lit(0), lit(n - 1)), i =>
-      substring(
-        blob,
-        (i * greatest(floor(length(blob) / n), lit(1)) + 1).cast("int"),
-        lit(frameBytes)))
-
   /** The decoder-tier stub: one "decoder" init per PARTITION (the pattern
     * that amortizes a real codec handle), then per-row decode. The fake
     * features are pure functions of the bytes, so results are

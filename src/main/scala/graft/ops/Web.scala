@@ -101,9 +101,6 @@ object Web {
   def urlQuery(u: Column): Column =
     regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://[^?#]*\\?([^#]*)", 1)
 
-  /** Fragment (after `#`), '' when absent. */
-  def urlFragment(u: Column): Column = regexp_extract(u, "#(.*)$", 1)
-
   /** Registrable domain of an (already lower-cased) host: the last two
     * labels, or the last THREE when the host ends in a known second-level
     * country registry ([[SecondLevelRe]]); single-label hosts (localhost,

@@ -2268,16 +2268,12 @@ object LlmQueries {
       // timed body is the RECURRING path: batch shingling + the band join
       // against stored signatures + the fold. The bench's cluster_build /
       // cluster_sig_build phases keep timing the store builds.
-      val cross = Dedup.minHashLshPairsAgainstSignatures(batch,
-          SharedFrames.corpusSignatures(s, d),
-          "doc_id", "text", shingleN = 8, k = 64, bands = 16, rows = 4,
-          threshold = 0.8)
-        .select(col("new_id").as("doc_a"), col("corpus_id").as("doc_b"))
-      val internal = Dedup.minHashLshPairs(batch, "doc_id", "text",
-          shingleN = 8, k = 64, bands = 16, rows = 4, threshold = 0.8)
-        .select(col("doc_a"), col("doc_b"))
+      val pairs = Dedup.minHashLshBatchPairs(batch,
+        SharedFrames.corpusSignatures(s, d),
+        "doc_id", "text", shingleN = 8, k = 64, bands = 16, rows = 4,
+        threshold = 0.8)
       Dedup.clusterIndexAppend(SharedFrames.corpusClusters(s, d),
-          batch.select(col("doc_id")), "doc_id", cross.unionAll(internal))
+          batch.select(col("doc_id")), "doc_id", pairs)
         .orderBy("doc_id")
     },
 

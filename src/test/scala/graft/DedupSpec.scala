@@ -206,6 +206,31 @@ class DedupSpec extends SparkSpec {
     assert(inc == full)
   }
 
+  test("minHashLshBatchPairs == minHashLshPairsAgainstSignatures ++ " +
+      "minHashLshPairs over the batch") {
+    import org.apache.spark.sql.functions._
+    val fixture = "/root/testdata/sf0.001/documents.parquet"
+    val docs = spark.read.parquet(fixture).select(col("doc_id"), col("text"))
+    val corpus = docs.where(col("doc_id") % 10 =!= 0)
+    val batch = docs.where(col("doc_id") % 10 === 0)
+    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text", shingleN = 8)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val cross = Dedup.minHashLshPairsAgainstSignatures(batch, sigs, "doc_id",
+      "text", shingleN = 8, threshold = 0.5)
+      .select(col("new_id"), col("corpus_id"))
+    val internal = Dedup.minHashLshPairs(batch, "doc_id", "text",
+      shingleN = 8, threshold = 0.5).select(col("doc_a"), col("doc_b"))
+    val expected = pairs(cross) ++ pairs(internal)
+    graft.core.Caches.release()
+    val out = Dedup.minHashLshBatchPairs(batch, sigs, "doc_id", "text",
+      shingleN = 8, threshold = 0.5)
+    assert(out.columns.toSeq == Seq("doc_a", "doc_b"))
+    assert(pairs(out) == expected.sorted)
+    assert(expected.nonEmpty)
+    graft.core.Caches.release()
+  }
+
   test("persisted signature table: batch run scans signatures + batch text, " +
       "never corpus text, and matches the recompute-from-text path") {
     import org.apache.spark.sql.functions._
@@ -395,8 +420,23 @@ class DedupSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 2L, 0)))
   }
 
+  /** 64-bit SimHash as a single per-row Column: the reference the
+    * distributed [[Dedup.simHashPerDoc]] signature must equal. */
+  private def simHash64(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val hashes = transform(split(lower(trim(text)), "\\s+"), t => xxhash64(t))
+    aggregate(
+      sequence(lit(0), lit(63)),
+      lit(0L),
+      (acc, bit) => {
+        val vote = aggregate(hashes, lit(0L),
+          (v, h) => v + (call_function("getbit", h, bit).cast("long") * 2 - 1))
+        acc.bitwiseOR(
+          when(vote > 0, call_function("shiftleft", lit(1L), bit)).otherwise(lit(0L)))
+      })
+  }
+
   test("simHashPerDoc distributed signature equals the per-row simHash64 expression") {
-    val expected = docs.select(col("doc_id"), Dedup.simHash64(col("text")).as("sig"))
+    val expected = docs.select(col("doc_id"), simHash64(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaAgg = Dedup.simHashPerDoc(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

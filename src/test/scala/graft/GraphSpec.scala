@@ -477,23 +477,6 @@ class GraphSpec extends SparkSpec {
       val kcIdx = Graph.kCoreAgainstIndex(spark, "spine_spec", k = 2)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(kcIdx == kcDirect)
-      val cnDirect = Graph.commonNeighborPairs(messy, "a", "b",
-          maxDeg = 10, minCommon = 2)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
-      val cnIdx = Graph.commonNeighborPairsAgainstIndex(spark, "spine_spec",
-          maxDeg = 10, minCommon = 2)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
-      assert(cnIdx == cnDirect)
-      val seeds = Seq(("s0", "L"), ("s5", "M")).toDF("node", "lab")
-      val lpDirect = Graph.labelPropagation(messy, "a", "b", seeds,
-          "node", "lab", iters = 3)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val lpIdx = Graph.labelPropagationAgainstIndex(spark, "spine_spec",
-          seeds, "node", "lab", iters = 3)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(lpIdx == lpDirect)
       val rwDirect = Graph.randomWalks(messy, "a", "b",
           walksPerNode = 2, walkLen = 3)
         .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.ops.Multimodal.{MediaFeatures, MediaRow}
 
-/** Multimodal column plumbing specs: metadata struct, frame sampling,
-  * decoder-tier mapPartitions contract. */
+/** Multimodal column plumbing specs: the decoder-tier mapPartitions
+  * contract. */
 class MultimodalSpec extends SparkSpec {
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
 
@@ -13,24 +13,6 @@ class MultimodalSpec extends SparkSpec {
     import spark.implicits._
     Seq((1L, "abcdefgh".getBytes("UTF-8")), (2L, Array.empty[Byte]))
       .toDF("media_id", "blob")
-  }
-
-  test("withMetadata: typed struct with mime, byte size, fingerprint") {
-    val out = Multimodal.withMetadata(mediaDf, "blob", "image/png")
-    val r = out.orderBy("media_id").select("media_meta.*").collect()
-    assert(r(0).getString(0) == "image/png")
-    assert(r(0).getLong(1) == 8L)
-    assert(r(0).getString(2).length == 32)
-    assert(r(1).getLong(1) == 0L)
-  }
-
-  test("sampleFrames: n evenly-spaced fixed-width slices, codegen tier") {
-    val out = mediaDf.where(col("media_id") === 1)
-      .select(Multimodal.sampleFrames(col("blob"), n = 4, frameBytes = 2).as("f"))
-    val frames = out.collect()(0).getSeq[Array[Byte]](0)
-      .map(b => new String(b, "UTF-8"))
-    // stride = 8/4 = 2 -> slices at 1,3,5,7
-    assert(frames == Seq("ab", "cd", "ef", "gh"))
   }
 
   test("decode stub: deterministic pure-byte features") {

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 /** Driver-contract guards: the declared query surface must stay internally
   * consistent (a duplicate name would silently collapse in the Map the
   * driver consumes). */
@@ -61,7 +66,9 @@ class SparkEntrySpec extends SparkSpec {
     import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        fn(spark, "/root/testdata/sf0.001").schema.fields.collect {
+        val fields = fn(spark, "/root/testdata/sf0.001").schema.fields
+        graft.core.Caches.release()
+        fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
             f.dataType.isInstanceOf[MapType] ||
             f.dataType.isInstanceOf[StructType] ||
@@ -157,6 +164,7 @@ class SparkEntrySpec extends SparkSpec {
       case (name, fn) =>
         val plan = fn(spark, "/root/testdata/sf0.001")
           .queryExecution.optimizedPlan
+        graft.core.Caches.release()
         val n = plan.collect {
           case w: LWindow if w.partitionSpec.isEmpty => w
         }.size
@@ -197,10 +205,32 @@ class SparkEntrySpec extends SparkSpec {
   // reason: none.
   private val leakExempt: Map[String, String] = Map.empty
 
+  // Double-pin contract: Spark's CacheManager warns "Asked to cache
+  // already cached data" when a pin persists a plan that is already
+  // cached. Both owners then share one cache entry, and whichever unpins
+  // first drops it while the other still reads it. A query must pin each
+  // plan once.
+  private final class DoublePinWarnings extends AbstractAppender(
+      "double-pin-warnings", null, null, true, Property.EMPTY_ARRAY) {
+    private val n = new java.util.concurrent.atomic.AtomicInteger
+    override def append(e: LogEvent): Unit =
+      if (e.getMessage.getFormattedMessage
+          .contains("Asked to cache already cached data")) n.incrementAndGet()
+    def count: Int = n.get
+  }
+  private lazy val doublePins = {
+    val a = new DoublePinWarnings
+    a.start()
+    LogManager.getLogger(classOf[org.apache.spark.sql.execution.CacheManager])
+      .asInstanceOf[org.apache.logging.log4j.core.Logger].addAppender(a)
+    a
+  }
+
   for (name <- SparkEntry.queries.keys.toSeq.sorted)
     test(s"declared query $name matches its golden row count at sf0.001 (codegen-strict)") {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
+      val warned = doublePins.count
       val df = SparkEntry.queries(name)(strict, "/root/testdata/sf0.001")
       val n = df.count()
       golden.get(name).foreach(exp =>
@@ -211,5 +241,7 @@ class SparkEntrySpec extends SparkSpec {
       assert(leaked.isEmpty || leakExempt.contains(name),
         s"$name left ${leaked.size} persisted RDD(s) after Caches.release(): " +
           leaked.values.map(_.toString).mkString("; "))
+      assert(doublePins.count == warned,
+        s"$name pinned an already cached plan ${doublePins.count - warned} time(s)")
     }
 }

@@ -7,14 +7,14 @@ import graft.ops.Web
   * registrable-domain folding, and the blocklist filter's broadcast plan. */
 class WebSpec extends SparkSpec {
 
-  private def one(u: String): (String, String, String, String, String, String) = {
+  private def one(u: String): (String, String, String, String, String) = {
     import spark.implicits._
     Seq(u).toDF("u")
       .select(Web.urlScheme(col("u")), Web.urlHost(col("u")),
         Web.urlPortStr(col("u")), Web.urlPath(col("u")),
-        Web.urlQuery(col("u")), Web.urlFragment(col("u")))
+        Web.urlQuery(col("u")))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getString(5))).head
+        r.getString(3), r.getString(4))).head
   }
 
   private def norm(u: String): Option[String] = {
@@ -25,12 +25,12 @@ class WebSpec extends SparkSpec {
 
   test("urlParts: full grammar, userinfo, ports, missing pieces") {
     assert(one("HTTPS://User:pw@WWW.Example.COM:8443/A/b?x=1&y=2#frag") ==
-      ("https", "www.example.com", "8443", "/A/b", "x=1&y=2", "frag"))
-    assert(one("http://example.com") == ("http", "example.com", "", "", "", ""))
+      ("https", "www.example.com", "8443", "/A/b", "x=1&y=2"))
+    assert(one("http://example.com") == ("http", "example.com", "", "", ""))
     assert(one("ftp://files.example.org/pub/x.txt") ==
-      ("ftp", "files.example.org", "", "/pub/x.txt", "", ""))
+      ("ftp", "files.example.org", "", "/pub/x.txt", ""))
     // not an absolute URL: every part ''
-    assert(one("example.com/path") == ("", "", "", "", "", ""))
+    assert(one("example.com/path") == ("", "", "", "", ""))
     // two @: userinfo strips through the LAST @
     assert(one("http://a@b@host.net/p")._2 == "host.net")
   }
