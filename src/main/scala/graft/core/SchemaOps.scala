@@ -68,10 +68,13 @@ object SchemaOps {
     * positional columns c0..cN and an explicit `_row_idx`. This is the shape
     * every Excel-like source must deliver (FIXTURES.md).
     *
-    * The rows are already a driver `Seq`, so the grid is a `LocalRelation`:
-    * Catalyst folds filters and projections over it on the driver, and a
-    * collect of such a plan (e.g. [[promoteHeaders]]' header row) starts no
-    * Spark job. */
+    * The rows are already a driver `Seq`, so the grid is a `LocalRelation`.
+    * Catalyst's `ConvertToLocalRelation` folds Project, Filter and Limit over
+    * it on the driver; [[graft.plans.LocalFold]] folds global Sort, Expand
+    * (unpivot), Union, Limit, declarative Aggregates and inner or left
+    * equi-joins with other driver-local frames, up to its row budget. An
+    * action on such a plan (e.g. [[promoteHeaders]]' header row, a vendor
+    * pipeline's sinks) then starts no Spark job. */
   def gridFromRows(spark: org.apache.spark.sql.SparkSession,
                    rows: Seq[Seq[String]]): DataFrame = {
     val width = if (rows.isEmpty) 0 else rows.map(_.size).max

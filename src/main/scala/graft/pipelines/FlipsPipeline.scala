@@ -142,14 +142,12 @@ object FlipsPipeline {
       when(col("xdock") =!= 0.0, col("xdock")).as("xdck_val"),
       when(col("fob") =!= 0.0, col("fob")).as("fob_val"))
     val joined = Ops.enrichLeft(base, dim, Seq("Branch"))
-    val withCols = joined
-      .withColumn("WW Buyer", lit("P20"))
-      .withColumn("AmountCode", lit("W"))
-      .withColumn("Expected Delivery Date", lit(edd))
-      .withColumn("Supplier On Record", lit(null).cast("string"))
-      .withColumn("XDCK", col("xdck_val").cast("string"))
-      .withColumn("FOB", col("fob_val").cast("string"))
-    Canonical.conform(withCols.drop("xdck_val", "fob_val"))
+    Canonical.conform(joined.select(col("Branch"), col("Item"), col("Distro Size"),
+      lit("P20").as("WW Buyer"), lit("W").as("AmountCode"),
+      lit(edd).as("Expected Delivery Date"),
+      lit(null).cast("string").as("Supplier On Record"),
+      col("xdck_val").cast("string").as("XDCK"),
+      col("fob_val").cast("string").as("FOB")))
   }
 
   // ── baby flip ──────────────────────────────────────────────────────────
@@ -179,10 +177,9 @@ object FlipsPipeline {
     // rename 3rd column DESC
     val finalNames = if (names1.size >= 3) names1.updated(2, "DESC") else names1
     val rows = babyRows.tail.map(r => keptIdx.map(i => r.lift(i).orNull))
-    var df = SchemaOps.renameColumns(SchemaOps.gridFromRows(spark, rows),
-      finalNames.indices.map(i => s"c$i" -> finalNames(i)))
-    // NA cell normalize everywhere
-    df = finalNames.foldLeft(df)((d, c) => d.withColumn(c, Na.naNormalize(SchemaOps.qcol(c))))
+    // NA cell normalize everywhere, in the projection that names the columns
+    var df = SchemaOps.gridFromRows(spark, rows).select(SchemaOps.qcol(RowIdx) +:
+      finalNames.indices.map(i => Na.naNormalize(SchemaOps.qcol(s"c$i")).as(finalNames(i))): _*)
     // drop NA Item rows, drop NA Lot rows
     val itemCol = SchemaOps.resolveColumnOrFail(df, "Item")
     df = df.where(col(itemCol).isNotNull)
@@ -196,10 +193,11 @@ object FlipsPipeline {
     if (iDesc >= 0 && iLot > iDesc) {
       val between = finalNames.slice(iDesc + 1, iLot)
         .filterNot(_.trim.toLowerCase == "pack size")
-      df = between.foldLeft(df)((d, c) =>
-        d.withColumn(c, ceil(Exprs.parseAccounting(SchemaOps.qcol(c))).cast("long")))
-      df = between.foldLeft(df)((d, c) =>
-        if (SchemaOps.cleanHeader(c) != c) d.withColumnRenamed(c, SchemaOps.cleanHeader(c)) else d)
+      df = df.select(df.columns.toIndexedSeq.map { c =>
+        if (between.contains(c))
+          ceil(Exprs.parseAccounting(SchemaOps.qcol(c))).cast("long").as(SchemaOps.cleanHeader(c))
+        else SchemaOps.qcol(c)
+      }: _*)
     }
     df
   }
@@ -222,12 +220,13 @@ object FlipsPipeline {
     val projected = cleaned.select(
       (Seq(itemCol, descCol, packCol, lotCol).map(SchemaOps.qcol) ++
         storeCols.map(c => SchemaOps.qcol(c).cast("string").as(c))): _*)
-    val long = Ops.meltToLong(projected,
-        Seq(itemCol, descCol, packCol, lotCol), storeCols, "Store", "Value")
-      .withColumn("_storeNum", Exprs.tryDouble(col("Store")))
-      .where(col("_storeNum").isNotNull)
-      .withColumn("Store", round(col("_storeNum")).cast("long"))
-      .withColumn("Value", Exprs.tryDouble(col("Value").cast("string")))
+    val idCols = Seq(itemCol, descCol, packCol, lotCol)
+    val storeNum = Exprs.tryDouble(col("Store"))
+    val long = Ops.meltToLong(projected, idCols, storeCols, "Store", "Value")
+      .where(storeNum.isNotNull)
+      .select(idCols.map(SchemaOps.qcol) ++ Seq(
+        round(storeNum).cast("long").as("Store"),
+        Exprs.tryDouble(col("Value").cast("string")).as("Value")): _*)
       .where(col("Value").isNotNull)
     long.groupBy(col(itemCol), col(descCol), col(packCol), col(lotCol), col("Store"))
       .agg(sum(col("Value")).as("Value"))
@@ -252,13 +251,11 @@ object FlipsPipeline {
     val joined = Ops.enrichLeft(Ops.enrichLeft(base, po, Seq("StoreKey")),
       carrier, Seq("StoreKey"))
     joined
-      .withColumn("Invoice Date", lit(invoiceDate))
-      .withColumn("weight",
-        (col("Value") * Exprs.tryDouble(col("pack size").cast("string"))).cast("long"))
-      .withColumn("LOT#", col("Lot #"))
-      .select(col("Store"), col("PO #"), col("Invoice Date"), col("DESC"),
-        col("Value"), col("LOT#"), col("weight"), col("pack size"),
-        col("carrier code"))
+      .select(col("Store"), col("PO #"), lit(invoiceDate).as("Invoice Date"),
+        col("DESC"), col("Value"), col("Lot #").as("LOT#"),
+        (col("Value") * Exprs.tryDouble(col("pack size").cast("string")))
+          .cast("long").as("weight"),
+        col("pack size"), col("carrier code"))
       .orderBy(col("Store").asc,
         coalesce(Exprs.lotLast4(col("LOT#")), lit(1000000000L)).asc)
   }

@@ -1,7 +1,8 @@
 package graft.pipelines
 
 import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.core.{Na, SchemaOps}
@@ -43,14 +44,14 @@ object Canonical {
     * Distro -> long (0-fill), XDCK/FOB -> nullable double, EDD -> date, text
     * columns null -> "". Sorted Branch, Item, Distro Size.
     *
-    * When every leaf of `df`'s plan is a `LocalRelation` (a spreadsheet grid
-    * from [[SchemaOps.gridFromRows]], plus driver-built dimensions), the
-    * sorted result is executed once here and returned as a `LocalRelation`,
-    * so the sinks that read it (the Mega-Script workbook, the ADPO macros)
-    * start no further jobs and never re-run the plan. That collect is
-    * bounded: the input already sat on the driver, and these are the rows
-    * the Mega-Script sink collects anyway. Any other input, such as a grid
-    * derived from a table scan, keeps the lazy plan. */
+    * The sorted plan is optimized here. Over a spreadsheet grid from
+    * [[SchemaOps.gridFromRows]] (plus driver-built dimensions) the
+    * optimizer's [[graft.plans.LocalFold]] folds it into a `LocalRelation`,
+    * and the returned frame reads that one result: the sinks (the
+    * Mega-Script workbook, the ADPO macros) start no Spark job and never
+    * re-run or re-fold the plan. Any other input, such as a grid derived
+    * from a table scan or one over the fold's row budget, keeps the lazy
+    * plan. */
   def conform(df: DataFrame, cols: Seq[String] = Cols,
               extraIntCols: Set[String] = Set.empty): DataFrame = {
     val intCols = IntCols ++ extraIntCols
@@ -69,29 +70,36 @@ object Canonical {
       typed.as(c)
     }: _*)
     val sorted = out.orderBy(col("Branch").asc, col("Item").asc, col("Distro Size").asc)
-    val driverLocal = df.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[LocalRelation])
-    if (driverLocal) df.sparkSession.createDataFrame(sorted.collectAsList(), sorted.schema)
-    else sorted
+    sorted.queryExecution.optimizedPlan match {
+      case local: LocalRelation => GraftSqlBridge.frame(df.sparkSession, local)
+      case _ => sorted
+    }
   }
 
-  /** E1 constant-column append over (Branch, Item, Distro Size) rows. */
-  def withConstants(df: DataFrame, cfg: VendorConfig, edd: String): DataFrame =
-    df.withColumn("Supplier On Record", lit(cfg.supplier))
-      .withColumn("Expected Delivery Date", lit(edd))
-      .withColumn("WW Buyer", lit(cfg.buyer))
-      .withColumn("Warehouse", lit(""))
-      .withColumn("AdditionalXDCK", lit(""))
-      .withColumn("AmountCode", lit(""))
-      .withColumn("XDCK", lit(""))
-      .withColumn("POSTXDCK", lit(""))
-      .withColumn("FOB", lit(""))
+  /** E1 constant-column append over (Branch, Item, Distro Size) rows, in
+    * one projection (columns in this order; an existing one is replaced in
+    * place). `warehouse` is blank except where a layout carries a real
+    * dock. */
+  def withConstants(df: DataFrame, cfg: VendorConfig, edd: String,
+                    warehouse: Column = lit("")): DataFrame =
+    df.withColumns(ListMap(
+      "Supplier On Record" -> lit(cfg.supplier),
+      "Expected Delivery Date" -> lit(edd),
+      "WW Buyer" -> lit(cfg.buyer),
+      "Warehouse" -> warehouse,
+      "AdditionalXDCK" -> lit(""),
+      "AmountCode" -> lit(""),
+      "XDCK" -> lit(""),
+      "POSTXDCK" -> lit(""),
+      "FOB" -> lit("")))
 }
 
 /** Shared pipeline steps. */
 object Steps {
-  /** P11: drop the grid's last row (pandas `iloc[:-1]`). The max-index
-    * lookup is one tiny driver job over the (spreadsheet-sized) grid. */
+  /** P11: drop the grid's last row (pandas `iloc[:-1]`). Over a
+    * spreadsheet grid the optimizer folds the max-index aggregate on the
+    * driver ([[graft.plans.LocalFold]]), so the lookup starts no Spark job;
+    * over a table-derived grid it is one small job. */
   def dropLastRow(grid: DataFrame): DataFrame = {
     val mx = grid.agg(max(col(RowIdx))).head()
     if (mx.isNullAt(0)) grid else grid.where(col(RowIdx) < mx.getLong(0))
@@ -135,9 +143,9 @@ object AllocationPipeline {
     val long = Ops.meltToLong(
         cleaned.select((itemCol +: branchCols).map(SchemaOps.qcol): _*),
         Seq(itemCol), branchCols, "Branch", "Distro Size")
-      .withColumn("Branch", Exprs.stripTrailingDotZero(col("Branch")))
-      .withColumn("Distro Size",
-        coalesce(Exprs.tryDouble(col("Distro Size")).cast("long"), lit(0L)))
+      .select(SchemaOps.qcol(itemCol),
+        Exprs.stripTrailingDotZero(col("Branch")).as("Branch"),
+        coalesce(Exprs.tryDouble(col("Distro Size")).cast("long"), lit(0L)).as("Distro Size"))
     val agg = long.groupBy(col("Branch"), col(itemCol))
       .agg(sum(col("Distro Size")).as("Distro Size"))
       .where(col("Distro Size") =!= 0)
@@ -217,12 +225,10 @@ object DockPipeline {
                   cfg: VendorConfig = VendorConfig.Phillips): DataFrame = {
     val cleaned = clean(grid, phillipsDocks(fileName), dropLeading = 1)
     val dockCol = SchemaOps.resolveColumnOrFail(cleaned, "dock")
-    // withConstants blanks Warehouse; stash the real dock value and restore
-    // it after the constant overlay.
-    val withWarehouse = cleaned.withColumnRenamed(dockCol, "_wh")
-    val out = Canonical.withConstants(fixBranch(withWarehouse.drop(RowIdx)), cfg, edd)
-      .withColumn("Warehouse", col("_wh")).drop("_wh")
-      .withColumn("XdockCode", lit(""))
+    // conform keeps only the canonical columns, so the dock column and the
+    // row index drop out there, and it fills the missing XdockCode blank.
+    val out = Canonical.withConstants(fixBranch(cleaned), cfg, edd,
+      warehouse = SchemaOps.qcol(dockCol))
     Canonical.conform(out, Canonical.PhillipsCols, extraIntCols = Set("Warehouse"))
   }
 }
@@ -249,19 +255,17 @@ object PriceSheetPipeline {
   def pivot(cleaned: DataFrame, vendor: Int = 81214): DataFrame = {
     val itemCol = SchemaOps.resolveColumnOrFail(cleaned, "Item#")
     val storeCols = cleaned.columns.filter(c => c != RowIdx && c != itemCol).toSeq
-    val long = Ops.meltToLong(
+    val store = Exprs.stripTrailingDotZero(col("Store#"))
+    // P10 remap + membership, then cost parse/filter (the parse yields
+    // null on junk, never an error, so it may run before the filters).
+    Ops.meltToLong(
         cleaned.select((itemCol +: storeCols).map(SchemaOps.qcol): _*),
         Seq(itemCol), storeCols, "Store#", "Cost")
-      .withColumn("Store#", Exprs.stripTrailingDotZero(col("Store#")))
-    // P10 remap + membership, then cost parse/filter.
-    val remapped = long.withColumn("Store#",
-        when(col("Store#") === "490", "498").otherwise(col("Store#")))
-      .where(!col("Store#").isin("457", "453"))
-    remapped
-      .withColumn("Cost", Exprs.parseAccounting(col("Cost")))
-      .where(col("Cost").isNotNull && col("Cost") =!= 0.0)
-      .withColumn("Vendor#", lit(vendor))
-      .select(col("Store#"), col(itemCol).as("Item#"), col("Vendor#"), col("Cost"))
+      .select(when(store === "490", "498").otherwise(store).as("Store#"),
+        SchemaOps.qcol(itemCol).as("Item#"), lit(vendor).as("Vendor#"),
+        Exprs.parseAccounting(col("Cost")).as("Cost"))
+      .where(!col("Store#").isin("457", "453") &&
+        col("Cost").isNotNull && col("Cost") =!= 0.0)
   }
 
   def run(grid: DataFrame): DataFrame =
@@ -291,8 +295,8 @@ object SouthernCrossPipeline {
     val promoted = SchemaOps.promoteHeaders(grid, headerIdx = 0)
     val dataCols = promoted.columns.filter(_ != RowIdx).toSeq
     val kept = SchemaOps.columnsLeftOf(dataCols, "LOT #")
-    val sel = promoted.select((RowIdx +: kept).map(SchemaOps.qcol): _*)
-    val coerced = kept.foldLeft(sel)((df, c) => df.withColumn(c, coerceCell(col(c))))
+    val coerced = promoted.select(SchemaOps.qcol(RowIdx) +:
+      kept.map(c => coerceCell(SchemaOps.qcol(c)).as(c)): _*)
     val itemCol = SchemaOps.resolveColumnOrFail(coerced, "Item")
     val noZero = coerced.where(col(itemCol) =!= "0")
     // O7: alphabetical (ci) with Item pinned left.

@@ -67,8 +67,8 @@ object ParseAccountingExpr {
 }
 
 /** Engine extension point: registers graft's native expressions in the
-  * session function registry. Enable with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`. */
+  * session function registry and the [[LocalFold]] optimizer rule. Enable
+  * with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -78,5 +78,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       // never needs catalyst's (sql-private) input-type machinery.
       (children: Seq[Expression]) =>
         ParseAccountingExpr(Cast(children.head, StringType))))
+    ext.injectOptimizerRule(_ => LocalFold)
   }
 }

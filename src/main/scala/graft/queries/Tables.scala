@@ -14,12 +14,24 @@ object Tables {
     * invocation, multiplied across the ~200-query tail (r21 guide §1
     * measurement). Supplying the once-inferred schema skips inference while
     * the scan itself still reads the files each execution, so no result or
-    * data is ever cached. Keyed by (path, mtime, size, nanosAsLong) — the
-    * mtime/size guard drops the memo if a fixture file is rewritten, and
-    * `nanosAsLong` is the one session conf that changes parquet type
-    * mapping here (events.ts INT64(NANOS) → LongType). */
+    * data is ever cached. Keyed by path, mtime, size and the value of every
+    * session conf in [[SchemaConfs]]: the mtime/size guard drops the memo
+    * if a fixture file is rewritten, and sessions (or one session before
+    * and after a conf change) that map parquet types differently never
+    * share an inferred schema. */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
+
+  /** The session confs that change the schema Spark infers from parquet
+    * footers: unannotated binary as string, INT96 as timestamp, INT64
+    * TIMESTAMP(NANOS) as a raw long (events.ts), timestamps without a UTC
+    * adjustment as TIMESTAMP_NTZ, and merging the schemas of all files. */
+  private val SchemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -29,9 +41,8 @@ object Tables {
         p, classOf[java.nio.file.attribute.BasicFileAttributes])
       s"${a.lastModifiedTime.toMillis}:${a.size}"
     } catch { case _: Exception => "nostat" }
-    val nanos = spark.conf.getOption(
-      "spark.sql.legacy.parquet.nanosAsLong").getOrElse("false")
-    val key = s"$path#$stamp#$nanos"
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString("#")
+    val key = s"$path#$stamp#$confs"
     val st = schemaMemo.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(st).parquet(path)

@@ -377,8 +377,8 @@ class DedupSpec extends SparkSpec {
     assert(rebuilt.toSeq == got.toSeq)
     // plan proof of the 100 TB contract: the store side is only ever the
     // STREAMED input of broadcast joins — no shuffle of the big table
-    val plan = graft.ops.Dedup.clusterIndexAppend(stored, newDocs,
-      "doc_id", delta).queryExecution.executedPlan.toString
+    val plan = graft.ops.Dedup.clusterIndexAppend(scanned(stored), scanned(newDocs),
+      "doc_id", scanned(delta)).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(400))
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       "store must not shuffle:\n" + plan.take(800))

@@ -15,7 +15,9 @@ class OpsSpec extends SparkSpec {
     assert(long.count() == 4)
     assert(long.where($"item" === "i1" && $"store" === "s114").head.getDouble(2) == 3.0)
     // Plan check: unpivot must be an Expand, not a join/shuffle.
-    assert(long.queryExecution.optimizedPlan.toString.contains("Expand"))
+    val scannedLong = Ops.meltToLong(scanned(wide), Seq("item"), Seq("s114", "s123"),
+      "store", "qty")
+    assert(scannedLong.queryExecution.optimizedPlan.toString.contains("Expand"))
   }
 
   test("A1 groupSumDropZero: null->0 pre-agg, zero groups dropped") {
@@ -65,7 +67,8 @@ class OpsSpec extends SparkSpec {
     val fact = Seq(("114", 3), ("999", 9)).toDF("store", "qty")
     val dim = Seq(("114", "po-1")).toDF("store", "po")
     val out = Ops.enrichLeft(fact, dim, Seq("store"))
-    assert(out.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    assert(Ops.enrichLeft(scanned(fact), scanned(dim), Seq("store"))
+      .queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
     val got = rows(out.orderBy("store"))
     assert(got == Seq(Seq("114", 3, "po-1"), Seq("999", 9, null)))
   }

@@ -1095,7 +1095,8 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3)))
     assert(got.toSeq == Seq(
       (10L, 0, 2L, 0), (11L, 1, 1L, 0), (12L, 1, 0L, 1), (13L, 0, 0L, 1)))
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = Similarity.crossSemDedup(scanned(corpus), scanned(refs), "id", "vec",
+      cents, threshold = 0.9).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       "refs must broadcast (map-only corpus pass):\n" + plan.take(800))
     assert(!plan.contains("CartesianProduct") &&

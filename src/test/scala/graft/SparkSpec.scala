@@ -48,4 +48,14 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(r => (0 until r.length).map(i => r.get(i)))
+
+  /** `df` written to parquet and read back: a plan over a file scan, as a
+    * real input gives. A plan over driver-local rows alone is folded on the
+    * driver (`graft.plans.LocalFold`), so specs that pin the distributed
+    * plan shape (a broadcast join, an Expand) build it over this. */
+  def scanned(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("scanned").resolve("t").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
 }
