@@ -97,9 +97,24 @@ object Caches {
   }
 
   /** The rows of `df` when it has at most `n`, else None: one job either
-    * way, and at most n + 1 rows reach the driver. */
-  def collectAtMost(df: DataFrame, n: Long): Option[Array[Row]] = {
-    val rows = df.limit(math.min(n, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length <= n) Some(rows) else None
+    * way, and at most n + 1 rows reach the driver. Every driver-local fast
+    * path asks here whether its input fits its budget. */
+  def collectAtMost(df: DataFrame, n: Long): Option[Array[Row]] =
+    if (forceOverBudget.get) None
+    else {
+      val rows = df.limit(math.min(n, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= n) Some(rows) else None
+    }
+
+  private val forceOverBudget = ThreadLocal.withInitial[Boolean](() => false)
+
+  /** Run `body` with every [[collectAtMost]] on this thread answering
+    * None, so each op takes its over-budget branch (its distributed loop,
+    * or a refusal): a spec compares an op's two paths on small inputs. */
+  private[graft] def overBudget[T](body: => T): T = {
+    val outer = forceOverBudget.get
+    forceOverBudget.set(true)
+    try body
+    finally forceOverBudget.set(outer)
   }
 }

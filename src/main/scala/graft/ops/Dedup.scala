@@ -470,14 +470,13 @@ object Dedup {
     * pair list are the caller's singletons (see [[dedupAssign]]).
     *
     * Small-graph fast path: when the DISTINCT edge set fits the driver
-    * comfortably (`localThreshold`, default 2²⁰ edges ≈ 16 MB of longs — the
-    * same driver-sized-by-design budget as the IVF centroid collect), the
+    * comfortably ([[CcLocalMaxEdges]] ≈ 16 MB of longs — the same
+    * driver-sized-by-design budget as the IVF centroid collect), the
     * closure runs as one in-memory union-find instead of O(log² n) Spark
     * rounds, each of which costs fixed job/codegen latency that dwarfs the
     * data at this size. This mirrors what iterative contraction converges to
     * anyway (the edge set only shrinks); a 100 TB pair graph with billions
-    * of edges stays on the distributed star loop. Pass `localThreshold = 0`
-    * to force the distributed path.
+    * of edges stays on the distributed star loop.
     *
     * `checkpointDir`: when set, each round's edge set is written to that
     * directory (reliable storage) and read back instead of checkpointed
@@ -491,7 +490,6 @@ object Dedup {
     * the result. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50,
-                          localThreshold: Long = 1L << 20,
                           checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
 
@@ -524,8 +522,8 @@ object Dedup {
         })
       case _ => None
     }
-    if (localOrd.isDefined && localThreshold > 0) {
-      val head = Caches.collectAtMost(canon, localThreshold)
+    if (localOrd.isDefined) {
+      val head = Caches.collectAtMost(canon, CcLocalMaxEdges)
       if (head.isDefined) return localComponents(spark, head.get, idType, localOrd.get)
       // Over budget: fall through to the distributed loop (the collected
       // prefix is discarded — one bounded probe, not corpus-sized).
@@ -587,6 +585,10 @@ object Dedup {
       .distinct()
   }
 
+  /** Driver budget, in distinct edges, for [[connectedComponents]]'
+    * union-find fast path. */
+  private[ops] val CcLocalMaxEdges = 1L << 20
+
   /** In-memory union-find for driver-sized edge sets (path compression +
     * union-by-min); representative = smallest member under `ord`, matching
     * the distributed star loop's `least()`/`min()` semantics exactly. */
@@ -635,10 +637,9 @@ object Dedup {
     * path — without the caller having to run CC by hand. */
   def dedupAssign(docs: DataFrame, idCol: String, pairs: DataFrame,
                   aCol: String = "doc_a", bCol: String = "doc_b",
-                  checkpointDir: Option[String] = None,
-                  ccLocalThreshold: Long = 1L << 20): DataFrame = {
+                  checkpointDir: Option[String] = None): DataFrame = {
     val comp = connectedComponents(pairs, aCol, bCol,
-        localThreshold = ccLocalThreshold, checkpointDir = checkpointDir)
+        checkpointDir = checkpointDir)
       .withColumnRenamed("id", idCol)
     docs.join(comp, Seq(idCol), "left")
       .withColumn("cluster_id", coalesce(col("component"), col(idCol)))
@@ -692,10 +693,9 @@ object Dedup {
   def dedupKeepBest(docs: DataFrame, idCol: String, pairs: DataFrame,
                     priority: Column,
                     aCol: String = "doc_a", bCol: String = "doc_b",
-                    checkpointDir: Option[String] = None,
-                    ccLocalThreshold: Long = 1L << 20): DataFrame = {
+                    checkpointDir: Option[String] = None): DataFrame = {
     val comp = connectedComponents(pairs, aCol, bCol,
-        localThreshold = ccLocalThreshold, checkpointDir = checkpointDir)
+        checkpointDir = checkpointDir)
       .withColumnRenamed("id", idCol)
     val flagged = docs.join(comp, Seq(idCol)).withColumn("_prio", priority)
     val pmax = flagged.groupBy(col("component")).agg(max(col("_prio")).as("_pmax"))
@@ -726,9 +726,8 @@ object Dedup {
     * pair orientation and chain shape. */
   def dedupFilter(docs: DataFrame, idCol: String, pairs: DataFrame,
                   aCol: String = "doc_a", bCol: String = "doc_b",
-                  checkpointDir: Option[String] = None,
-                  ccLocalThreshold: Long = 1L << 20): DataFrame =
-    dedupAssign(docs, idCol, pairs, aCol, bCol, checkpointDir, ccLocalThreshold)
+                  checkpointDir: Option[String] = None): DataFrame =
+    dedupAssign(docs, idCol, pairs, aCol, bCol, checkpointDir)
       .where(col("keep") === 1)
       .drop("cluster_id", "keep")
 
@@ -916,8 +915,7 @@ object Dedup {
   def clusterIndexAppend(clusters: DataFrame, newDocs: DataFrame,
                          idCol: String, pairs: DataFrame,
                          aCol: String = "doc_a", bCol: String = "doc_b",
-                         checkpointDir: Option[String] = None,
-                         ccLocalThreshold: Long = 1L << 20): DataFrame = {
+                         checkpointDir: Option[String] = None): DataFrame = {
     // The delta pair frame is batch-scaled by contract but EXPENSIVE to
     // produce (LSH band join + exact verify): it feeds both the endpoint
     // set and the contracted edges below, so pin it once (r21) — without
@@ -940,7 +938,7 @@ object Dedup {
     }
     val ce = contractSide(contractSide(p, aCol, "_ca"), bCol, "_cb")
     val comp = connectedComponents(ce, "_ca", "_cb",
-      localThreshold = ccLocalThreshold, checkpointDir = checkpointDir)
+      checkpointDir = checkpointDir)
     val remap = comp.select(col("id").as("_old"), col("component").as("_new"))
     // rewrite the store: map-only over the streamed big side (only
     // cluster ids that participated in the delta CC change)

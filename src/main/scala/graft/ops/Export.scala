@@ -317,41 +317,29 @@ object Export {
     * corpus: pass `sampleFraction < 1` to learn from a deterministic
     * md5-banded document sample (replayable — the band is a pure
     * function of the text, not runtime randomness), which shrinks the
-    * distinct-word table under `localThreshold` so the incremental
+    * distinct-word table under [[BpeLocalMaxWords]] so the incremental
     * driver loop (minutes at 30k merges on a 10⁶-word vocabulary) takes
     * over. Applying the learned table to 100 TB stays one map-side scan
     * regardless ([[bpeEncode]]). */
   def bpeLearn(docs: DataFrame, textCol: String, numMerges: Int,
                minPairCount: Long = 2L,
-               localThreshold: Long = 1L << 20,
                sampleFraction: Double = 1.0): Seq[(String, String)] = {
     require(numMerges >= 0, "numMerges must be >= 0")
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      "sampleFraction must be in (0, 1]")
-    val base =
-      if (sampleFraction >= 1.0) docs
-      else docs.where(pmod(Dedup.md5Hash60(col(textCol)), lit(1000000L)) <
-        lit(math.round(sampleFraction * 1e6)))
-    val wordCounts = base
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("_w"))
-      .where(col("_w") =!= "")
-      .groupBy(col("_w")).agg(count(lit(1)).as("_c"))
-    // Small-vocabulary fast path (same driver-sized-by-design budget as
-    // connectedComponents' localThreshold): the per-round state is the
+    val wordCounts = sampledWordCounts(docs, textCol, sampleFraction)
+    // Small-vocabulary fast path (the same driver-sized-by-design budget
+    // as connectedComponents'): the per-round state is the
     // DISTINCT-WORD table, and when it fits the driver the in-memory loop
     // replays the identical algorithm without paying a Spark job (+ a
     // localCheckpoint) per merge round — at 32 merges over 100k docs that
     // is 50 s distributed vs well under a second local, and a 30k-merge
     // production vocab is only reachable this way. The distributed loop
     // below stays the web-scale path (a 10⁸-distinct-word multilingual
-    // corpus exceeds any driver). Pass localThreshold = 0 to force it.
-    if (localThreshold > 0) {
-      val head = Caches.collectAtMost(wordCounts, localThreshold)
-      if (head.isDefined) return bpeLearnLocal(
-        head.get.map(r => (r.getString(0), r.getLong(1))).toSeq,
-        numMerges, minPairCount)
-      // Over budget: fall through (the probe is bounded, not corpus-sized).
-    }
+    // corpus exceeds any driver).
+    val head = Caches.collectAtMost(wordCounts, BpeLocalMaxWords)
+    if (head.isDefined) return bpeLearnLocal(
+      head.get.map(r => (r.getString(0), r.getLong(1))).toSeq,
+      numMerges, minPairCount)
+    // Over budget: fall through (the probe is bounded, not corpus-sized).
     val words = wordCounts.select(bpeInitSeq(col("_w")).as("_seq"), col("_c"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     Caches.scoped {
@@ -378,6 +366,26 @@ object Export {
     }
     merges.toSeq
   }
+
+  /** The (_w, _c) distinct-word table [[bpeLearn]] and
+    * [[Unigram.unigramFit]] fit on, over the md5-banded document sample
+    * when `sampleFraction < 1`. */
+  private[ops] def sampledWordCounts(docs: DataFrame, textCol: String,
+                                     sampleFraction: Double): DataFrame = {
+    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
+      "sampleFraction must be in (0, 1]")
+    val base =
+      if (sampleFraction >= 1.0) docs
+      else docs.where(pmod(Dedup.md5Hash60(col(textCol)), lit(1000000L)) <
+        lit(math.round(sampleFraction * 1e6)))
+    base
+      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("_w"))
+      .where(col("_w") =!= "")
+      .groupBy(col("_w")).agg(count(lit(1)).as("_c"))
+  }
+
+  /** Driver budget, in distinct words, for [[bpeLearn]]'s in-memory loop. */
+  private[ops] val BpeLocalMaxWords = 1L << 20
 
   /** Codepoint-wise initial symbols of a word (Spark's `split(w, "")` is
     * a regex split, which never cuts a surrogate pair). */
@@ -416,7 +424,7 @@ object Export {
       s"$BpeSep${p._1}$BpeSep $BpeSep${p._2}$BpeSep")
 
   /** The driver-side twin of the distributed learn loop — MUST replay it
-    * byte-for-byte (BpeSpec asserts equality against localThreshold = 0):
+    * byte-for-byte (BpeSpec asserts equality under `Caches.overBudget`):
     * same codepoint-wise initial symbols, same weighted pair counts, same
     * UTF8-binary tie-break. This is the INCREMENTAL form: per round, only
     * the words containing the merged pair are touched (their old pair

@@ -180,8 +180,7 @@ object Sampling {
     * CC itself. */
   def leakageSafeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
                        fractions: Seq[(String, Double)],
-                       checkpointDir: Option[String] = None,
-                       ccLocalThreshold: Long = 1L << 20): DataFrame = {
+                       checkpointDir: Option[String] = None): DataFrame = {
     require(fractions.nonEmpty, "fractions must be non-empty")
     require(fractions.forall(_._2 > 0), "fraction weights must be > 0")
     require(fractions.map(_._1).distinct.size == fractions.size,
@@ -194,8 +193,7 @@ object Sampling {
       .foldRight(lit(fractions.last._1): Column) {
         case ((label, ub), acc) => when(ppm < ub, label).otherwise(acc)
       }
-    Dedup.dedupAssign(docs, idCol, pairs, checkpointDir = checkpointDir,
-        ccLocalThreshold = ccLocalThreshold)
+    Dedup.dedupAssign(docs, idCol, pairs, checkpointDir = checkpointDir)
       .withColumn("split", expr)
   }
 

@@ -291,24 +291,38 @@ object Scoring {
   def hashedLinearFit(docs: DataFrame, idCol: String, textCol: String,
                       labelCol: String, buckets: Int, epochs: Int,
                       lrPpm: Long = 250000L,
-                      checkpointDir: Option[String] = None): DataFrame =
-    hashedLinearFitImpl(docs, idCol, textCol, labelCol, buckets, epochs,
-      lrPpm, checkpointDir, allowLocal = true)
-
-  /** [[hashedLinearFit]] with the driver-local fast path switchable —
-    * package-private so the spec can pin local == distributed equality. */
-  private[graft] def hashedLinearFitImpl(
-      docs: DataFrame, idCol: String, textCol: String,
-      labelCol: String, buckets: Int, epochs: Int,
-      lrPpm: Long, checkpointDir: Option[String],
-      allowLocal: Boolean): DataFrame = {
+                      checkpointDir: Option[String] = None): DataFrame = {
     require(buckets > 0, "hashedLinearFit: buckets must be positive")
     require(epochs > 0, "hashedLinearFit: epochs must be positive")
     require(lrPpm > 0 && lrPpm <= 1000000L,
       "hashedLinearFit: lrPpm must be in (0, 1e6]")
+    val out = withFitFeatures[Seq[(Long, Long)]](docs, idCol, textCol,
+        labelCol, "_yu", (col(labelCol).cast("long") * 2 - 1) * 1000000L,
+        buckets)({ lf =>
+      val yuDoc = lf.payloadDoc.map(_.asInstanceOf[Long])
+      val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
+      lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
+    }) { (feats, dframe) =>
+      val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
+      collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
+    }
+    val sp = docs.sparkSession
+    import sp.implicits._
+    out.toDF("bucket", "weight_u")
+  }
+
+  /** The featurization both fits share: the docs with a `labelCol`,
+    * tokenized and md5-60-bucketed ONCE into the pinned (_id, _bkt, _cnt,
+    * _d, `payloadName`) frame (bucket −1 = intercept), `payload` being
+    * the per-doc column the fit reads. Within [[LocalFitMaxRows]] rows it
+    * goes to `local`, else to `distributed` with the per-doc (_id,
+    * `payloadName`, _d) frame. The result must not read the pin. */
+  private def withFitFeatures[T](docs: DataFrame, idCol: String,
+      textCol: String, labelCol: String, payloadName: String,
+      payload: Column, buckets: Int)(local: LocalFeats => T)(
+      distributed: (DataFrame, DataFrame) => T): T = {
     val toks = docs.where(col(labelCol).isNotNull).repartition(col(idCol))
-      .select(col(idCol).as("_id"),
-        ((col(labelCol).cast("long") * 2 - 1) * 1000000L).as("_yu"),
+      .select(col(idCol).as("_id"), payload.as(payloadName),
         explode_outer(split(lower(trim(col(textCol))), "\\s+")).as("_tok"))
       .withColumn("_tok",
         when(col("_tok") === "", lit(null: String)).otherwise(col("_tok")))
@@ -318,29 +332,19 @@ object Scoring {
       .groupBy(col("_id"), col("_bkt")).agg(count(lit(1)).as("_cnt"))
     // one row per doc: token count floored to 1 so empty docs still carry
     // the intercept feature (cnt = d = 1) without a div-by-zero branch
-    val dframe = toks.groupBy(col("_id"), col("_yu"))
+    val dframe = toks.groupBy(col("_id"), col(payloadName))
       .agg(greatest(count(col("_tok")), lit(1L)).as("_d"))
-    val out = Caches.scoped {
+    Caches.scoped {
       val feats = Caches.pin(counts.join(dframe, Seq("_id"))
-          .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_yu"))
+          .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"),
+            col(payloadName))
         .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
-          col("_d").as("_cnt"), col("_d"), col("_yu"))))
-      val localRows =
-        if (allowLocal) Caches.collectAtMost(feats, LocalFitMaxRows) else None
-      localRows match {
-        case Some(rows) =>
-          val lf = parseLocalFeats(rows)
-          val yuDoc = lf.payloadDoc.map(_.asInstanceOf[Long])
-          val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
-          lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
-        case None =>
-          val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
-          collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
+          col("_d").as("_cnt"), col("_d"), col(payloadName))))
+      Caches.collectAtMost(feats, LocalFitMaxRows) match {
+        case Some(rows) => local(parseLocalFeats(rows))
+        case None => distributed(feats, dframe)
       }
     }
-    val sp = docs.sparkSession
-    import sp.implicits._
-    out.toDF("bucket", "weight_u")
   }
 
   /** Driver budget for the local integer-GD path: feature frames at or
@@ -505,68 +509,37 @@ object Scoring {
   def langIdFit(docs: DataFrame, idCol: String, textCol: String,
                 classCol: String, buckets: Int, epochs: Int,
                 lrPpm: Long = 250000L,
-                checkpointDir: Option[String] = None): DataFrame =
-    langIdFitImpl(docs, idCol, textCol, classCol, buckets, epochs, lrPpm,
-      checkpointDir, allowLocal = true)
-
-  /** [[langIdFit]] with the driver-local fast path switchable —
-    * package-private so the spec can pin local == distributed equality. */
-  private[graft] def langIdFitImpl(
-      docs: DataFrame, idCol: String, textCol: String,
-      classCol: String, buckets: Int, epochs: Int,
-      lrPpm: Long, checkpointDir: Option[String],
-      allowLocal: Boolean): DataFrame = {
+                checkpointDir: Option[String] = None): DataFrame = {
     require(buckets > 0, "langIdFit: buckets must be positive")
     require(epochs > 0, "langIdFit: epochs must be positive")
     require(lrPpm > 0 && lrPpm <= 1000000L,
       "langIdFit: lrPpm must be in (0, 1e6]")
-    val base = docs.where(col(classCol).isNotNull).repartition(col(idCol))
-      .select(col(idCol).as("_id"), col(classCol).cast("string").as("_lab"),
-        explode_outer(split(lower(trim(col(textCol))), "\\s+")).as("_tok"))
-      .withColumn("_tok",
-        when(col("_tok") === "", lit(null: String)).otherwise(col("_tok")))
-    val counts = base.where(col("_tok").isNotNull)
-      .select(col("_id"),
-        pmod(Dedup.md5Hash60(col("_tok")), lit(buckets.toLong)).as("_bkt"))
-      .groupBy(col("_id"), col("_bkt")).agg(count(lit(1)).as("_cnt"))
-    val dframe = base.groupBy(col("_id"), col("_lab"))
-      .agg(greatest(count(col("_tok")), lit(1L)).as("_d"))
-    val out = Caches.scoped {
-      val shared = Caches.pin(counts.join(dframe, Seq("_id"))
-          .select(col("_id"), col("_bkt"), col("_cnt"), col("_d"), col("_lab"))
-        .unionByName(dframe.select(col("_id"), lit(-1L).as("_bkt"),
-          col("_d").as("_cnt"), col("_d"), col("_lab"))))
-      val localRows =
-        if (allowLocal) Caches.collectAtMost(shared, LocalFitMaxRows) else None
-      localRows match {
-        case Some(rows) =>
-          // One parse serves every class: only yu (a function of _lab vs
-          // the class) changes between the K driver-local replays.
-          val lf = parseLocalFeats(rows)
-          val labDoc = lf.payloadDoc.map(_.asInstanceOf[String])
-          val classes = labDoc.distinct.sorted.toSeq
-          require(classes.nonEmpty,
-            "langIdFit: no non-NULL class values to fit (empty.reduce " +
-              "would otherwise throw far from the cause)")
-          classes.flatMap { c =>
-            val yuDoc = labDoc.map(l => if (l == c) 1000000L else -1000000L)
-            val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
-            lf.bktOfSlot.indices.map(i => (c, lf.bktOfSlot(i), w(i)))
-          }
-        case None =>
-          shared.count() // materialize before the per-class loops fan out
-          val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
-          val classes = dframe.select(col("_lab")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          require(classes.nonEmpty,
-            "langIdFit: no non-NULL class values to fit (empty.reduce " +
-              "would otherwise throw far from the cause)")
-          classes.flatMap { c =>
-            val feats = shared.withColumn("_yu",
-              (when(col("_lab") === c, 1L).otherwise(-1L) * 1000000L))
-            collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
-              .map { case (b, w) => (c, b, w) }
-          }
+    def nonEmpty(classes: Seq[String]): Seq[String] = {
+      require(classes.nonEmpty,
+        "langIdFit: no non-NULL class values to fit (empty.reduce " +
+          "would otherwise throw far from the cause)")
+      classes
+    }
+    val out = withFitFeatures[Seq[(String, Long, Long)]](docs, idCol,
+        textCol, classCol, "_lab", col(classCol).cast("string"),
+        buckets)({ lf =>
+      // One parse serves every class: only yu (a function of _lab vs
+      // the class) changes between the K driver-local replays.
+      val labDoc = lf.payloadDoc.map(_.asInstanceOf[String])
+      nonEmpty(labDoc.distinct.sorted.toSeq).flatMap { c =>
+        val yuDoc = labDoc.map(l => if (l == c) 1000000L else -1000000L)
+        val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
+        lf.bktOfSlot.indices.map(i => (c, lf.bktOfSlot(i), w(i)))
+      }
+    }) { (shared, dframe) =>
+      shared.count() // materialize before the per-class loops fan out
+      val nd = broadcast(dframe.agg(count(lit(1)).as("_nd")))
+      nonEmpty(dframe.select(col("_lab")).distinct()
+          .collect().map(_.getString(0)).sorted.toSeq).flatMap { c =>
+        val feats = shared.withColumn("_yu",
+          (when(col("_lab") === c, 1L).otherwise(-1L) * 1000000L))
+        collectWeights(linFitLoop(feats, nd, epochs, lrPpm, checkpointDir))
+          .map { case (b, w) => (c, b, w) }
       }
     }
     val sp = docs.sparkSession
@@ -1273,21 +1246,7 @@ object Scoring {
     * BIGINT — normalized to sum ≈ 10⁶). */
   def bradleyTerry(outcomes: DataFrame, winnerCol: String, loserCol: String,
                    iters: Int = 3,
-                   checkpointDir: Option[String] = None): DataFrame =
-    bradleyTerryImpl(outcomes, winnerCol, loserCol, iters, checkpointDir,
-      allowLocal = true)
-
-  /** Driver budget for the local MM path: directed-pair histograms at or
-    * under this many rows (item²-bounded by the op's scale contract)
-    * iterate on the driver; larger item sets keep the distributed loop. */
-  private[ops] val LocalBtMaxPairs = 65536
-
-  /** [[bradleyTerry]] with the driver-local fast path switchable —
-    * package-private so the spec can pin local == distributed equality. */
-  private[graft] def bradleyTerryImpl(
-      outcomes: DataFrame, winnerCol: String, loserCol: String,
-      iters: Int, checkpointDir: Option[String],
-      allowLocal: Boolean): DataFrame = {
+                   checkpointDir: Option[String] = None): DataFrame = {
     require(iters > 0, "bradleyTerry: iters must be positive")
     val po = outcomes.select(col(winnerCol).cast("string").as("_w"),
         col(loserCol).cast("string").as("_l"))
@@ -1316,9 +1275,7 @@ object Scoring {
     // `div` truncates toward zero on non-negative operands ≡ BigInt `/`,
     // and a zero total raises in both paths. Spec-pinned local ==
     // distributed.
-    val localPairs =
-      if (allowLocal) Caches.collectAtMost(games, LocalBtMaxPairs) else None
-    localPairs match {
+    Caches.collectAtMost(games, LocalBtMaxPairs) match {
       case Some(gRows) =>
         val bRows = base.collect()
         val n = bRows.length
@@ -1347,6 +1304,11 @@ object Scoring {
         bradleyTerryDistributed(games, base, iters, checkpointDir)
     }
   }
+
+  /** Driver budget for the local MM path: directed-pair histograms at or
+    * under this many rows (item²-bounded by the op's scale contract)
+    * iterate on the driver; larger item sets keep the distributed loop. */
+  private[ops] val LocalBtMaxPairs = 65536
 
   private def bradleyTerryDistributed(
       games: DataFrame, base: DataFrame, iters: Int,

@@ -209,8 +209,10 @@ object Similarity {
     * keep their previous centroid. */
   def fitCentroids(corpus: DataFrame, k: Int, iters: Int,
                    maxSample: Int = 0): Seq[(Int, Seq[Double])] = {
-    if (maxSample > 0 && numericId(corpus))
-      return fitCentroidsLocal(corpus, k, iters, maxSample)
+    val localSample =
+      if (maxSample > 0 && numericId(corpus)) collectFitSample(corpus, maxSample)
+      else None
+    if (localSample.isDefined) return fitCentroidsLocal(localSample.get, k, iters)
     Caches.scoped {
         val fit = fitSample(corpus, maxSample)
         var cents = fit.select(col("id"), col("vec")).orderBy(col("id")).limit(k)
@@ -251,16 +253,16 @@ object Similarity {
       *    0.0-seeded in-order additions, one final sum/count division
       *    (the single-partition partial merges into a zero buffer —
       *    exact).
-      * SimilaritySpec's pre-existing equalities (bounded == unbounded at
-      * maxSample ≥ |corpus|; partitioning invariance) pin the equivalence
-      * against the distributed path, which remains in use for
-      * maxSample <= 0 (the full-corpus fit must stay distributed) and for
-      * non-numeric id columns (the local init sort assumes numeric ids —
-      * every ANN caller's contract, but fail safe to the old path rather
-      * than guess an ordering). */
-    private def fitCentroidsLocal(corpus: DataFrame, k: Int, iters: Int,
-                                  maxSample: Int): Seq[(Int, Seq[Double])] = {
-      val rows = collectFitSample(corpus, maxSample)
+      * SimilaritySpec's equalities (bounded local == bounded distributed
+      * at maxSample < |corpus|; bounded == unbounded at maxSample ≥
+      * |corpus|; partitioning invariance) pin the equivalence against the
+      * distributed path, which remains in use for maxSample <= 0 (the
+      * full-corpus fit must stay distributed) and for non-numeric id
+      * columns (the local init sort assumes numeric ids — every ANN
+      * caller's contract, but fail safe to the old path rather than guess
+      * an ordering). */
+    private def fitCentroidsLocal(rows: Array[(Long, Array[Double])], k: Int,
+                                  iters: Int): Seq[(Int, Seq[Double])] = {
       var cents: Seq[(Int, Seq[Double])] =
         rows.sortBy(_._1).take(k).zipWithIndex
           .map { case ((_, v), i) => (i, v.toSeq) }.toSeq
@@ -301,24 +303,19 @@ object Similarity {
     /** The bounded fit sample, collected: (id, vec) rows in the exact
       * (md5-60(id), id) TakeOrdered order the distributed [[fitSample]]
       * partition had — the accumulation order every local mean must
-      * replay. */
-    private def collectFitSample(corpus: DataFrame,
-                                 maxSample: Int): Array[(Long, Array[Double])] =
-      corpus
-        .orderBy(Dedup.md5Hash60(col("id").cast("string")), col("id"))
-        .limit(maxSample)
-        .select(col("id"), col("vec"))
-        .collect()
-        .map { r =>
-          val id = r.get(0) match {
-            case l: Long => l
-            case i: Int => i.toLong
-            case s: Short => s.toLong
-            case other => throw new IllegalArgumentException(
-              s"bounded fit: non-integral id $other") // numericId guards
-          }
-          (id, r.getSeq[Double](1).toArray)
+      * replay. None sends the fit to its distributed loop. */
+    private def collectFitSample(corpus: DataFrame, maxSample: Int)
+        : Option[Array[(Long, Array[Double])]] =
+      Caches.collectAtMost(sampleOf(corpus, maxSample), maxSample).map(_.map { r =>
+        val id = r.get(0) match {
+          case l: Long => l
+          case i: Int => i.toLong
+          case s: Short => s.toLong
+          case other => throw new IllegalArgumentException(
+            s"bounded fit: non-integral id $other") // numericId guards
         }
+        (id, r.getSeq[Double](1).toArray)
+      })
 
     /** Deterministic bounded fit sample for the iterative quantizer fits
       * (the [[graft.ops.Export.bpeLearn]] sampleFraction contract applied
@@ -336,10 +333,15 @@ object Similarity {
       * (same set, same seeding order). */
     private def fitSample(corpus: DataFrame, maxSample: Int): DataFrame =
       if (maxSample <= 0) corpus
-      else Caches.pin(corpus
+      else Caches.pin(sampleOf(corpus, maxSample))
+
+    /** The `maxSample` lowest (id, vec) rows of `corpus` under
+      * (md5-60(id), id). */
+    private def sampleOf(corpus: DataFrame, maxSample: Int): DataFrame =
+      corpus
         .orderBy(Dedup.md5Hash60(col("id").cast("string")), col("id"))
         .limit(maxSample)
-        .select(col("id"), col("vec")))
+        .select(col("id"), col("vec"))
 
     /** IVF top-k: assign every corpus vector to its nearest centroid cell
       * (map-only), have each query probe its `nprobe` nearest cells, and
@@ -815,8 +817,11 @@ object Similarity {
                        iters: Int,
                        maxSample: Int = 0): Seq[(Int, Int, Seq[Double])] = {
       require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-      if (maxSample > 0 && numericId(corpus))
-        return pqFitCodebooksLocal(corpus, dim, m, ksub, iters, maxSample)
+      val localSample =
+        if (maxSample > 0 && numericId(corpus)) collectFitSample(corpus, maxSample)
+        else None
+      if (localSample.isDefined)
+        return pqFitCodebooksLocal(localSample.get, dim, m, ksub, iters)
       val dsub = dim / m
       Caches.scoped {
       val fit = fitSample(corpus, maxSample)
@@ -879,14 +884,14 @@ object Similarity {
     * ([[graft.plans.PqQuantize.localEncoder]]), per-(sub, code, dim)
     * means replaying Spark's Average accumulation order (row-major over
     * the sorted sample: row, then subspace, then dim — exactly the
-    * posexplode expansion order). The pre-existing SimilaritySpec
-    * equalities (bounded == unbounded at maxSample ≥ |corpus|;
-    * partitioning invariance) pin the equivalence. */
-  private def pqFitCodebooksLocal(corpus: DataFrame, dim: Int, m: Int,
-                                  ksub: Int, iters: Int,
-                                  maxSample: Int): Seq[(Int, Int, Seq[Double])] = {
+    * posexplode expansion order). The SimilaritySpec equalities (bounded
+    * local == bounded distributed at maxSample < |corpus|; bounded ==
+    * unbounded at maxSample ≥ |corpus|; partitioning invariance) pin the
+    * equivalence. */
+  private def pqFitCodebooksLocal(rows: Array[(Long, Array[Double])],
+                                  dim: Int, m: Int, ksub: Int,
+                                  iters: Int): Seq[(Int, Int, Seq[Double])] = {
     val dsub = dim / m
-    val rows = collectFitSample(corpus, maxSample)
     rows.foreach { case (_, v) =>
       require(v.length >= dim,
         s"pqFitCodebooks: embedding shorter than dim=$dim (got " +

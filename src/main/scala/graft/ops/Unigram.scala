@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -127,31 +128,23 @@ object Unigram {
 
   /** Fit from a corpus: ONE distributed word-count aggregation (the
     * corpus-bounded part), then the driver-side EM above. Refuses
-    * vocabularies over `localThreshold` — pass `sampleFraction < 1`
+    * vocabularies over [[LocalMaxWords]] — pass `sampleFraction < 1`
     * (deterministic md5 text band, [[Export.bpeLearn]]'s contract) to
     * learn on a sample, the public-standard practice at web scale. */
   def unigramFit(docs: DataFrame, textCol: String, vocabSize: Int,
                  maxPieceLen: Int = 8, emRounds: Int = 3,
-                 localThreshold: Long = 1L << 20,
                  sampleFraction: Double = 1.0): Seq[(String, Long, Long)] = {
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      "sampleFraction must be in (0, 1]")
-    val base =
-      if (sampleFraction >= 1.0) docs
-      else docs.where(pmod(Dedup.md5Hash60(col(textCol)), lit(1000000L)) <
-        lit(math.round(sampleFraction * 1e6)))
-    val head = base
-      .select(explode(split(lower(trim(col(textCol))), "\\s+")).as("_w"))
-      .where(col("_w") =!= "")
-      .groupBy(col("_w")).agg(count(lit(1)).as("_c"))
-      .limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt)
-      .collect()
-    require(head.length <= localThreshold,
-      s"unigramFit: distinct-word table exceeds localThreshold=$localThreshold; " +
+    val head = Caches.collectAtMost(
+      Export.sampledWordCounts(docs, textCol, sampleFraction), LocalMaxWords)
+    require(head.isDefined,
+      s"unigramFit: distinct-word table exceeds $LocalMaxWords words; " +
         "fit on a sample (sampleFraction) — the standard practice at corpus scale")
-    unigramFitLocal(head.map(r => (r.getString(0), r.getLong(1))).toSeq,
+    unigramFitLocal(head.get.map(r => (r.getString(0), r.getLong(1))).toSeq,
       vocabSize, maxPieceLen, emRounds)
   }
+
+  /** Driver budget, in distinct words, for [[unigramFit]]'s EM. */
+  private[ops] val LocalMaxWords = 1L << 20
 
   /** Subword-encode a corpus with a fitted piece table: per document
     * emits `n_toks` and `input_ids` (Viterbi MAP segmentation in text

@@ -62,7 +62,7 @@ class BpeSpec extends SparkSpec {
     import spark.implicits._
     def both(docs: org.apache.spark.sql.DataFrame, n: Int) = {
       val local = Export.bpeLearn(docs, "text", n)
-      val dist = Export.bpeLearn(docs, "text", n, localThreshold = 0L)
+      val dist = graft.core.Caches.overBudget(Export.bpeLearn(docs, "text", n))
       assert(local == dist, s"fast path diverged: $local vs $dist")
       local
     }

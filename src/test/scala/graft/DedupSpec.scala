@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Caches.overBudget
 import graft.ops.Dedup
 import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
@@ -43,14 +44,14 @@ class DedupSpec extends SparkSpec {
     val edges = (1L to 9L).map(i => (i, i + 1)) ++
       Seq((20L, 21L), (21L, 22L), (22L, 20L), (21L, 20L), (7L, 7L), (3L, 2L))
     // Both the driver fast path (default) and the distributed star loop
-    // (localThreshold = 0) must produce the identical component map.
-    for (thresh <- Seq(1L << 20, 0L)) {
-      val comp = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          localThreshold = thresh)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert((1L to 10L).forall(comp(_) == 1L), s"thresh=$thresh")
-      assert(Seq(20L, 21L, 22L).forall(comp(_) == 20L), s"thresh=$thresh")
-      assert(comp.size == 13, s"thresh=$thresh")
+    // (over budget) must produce the identical component map.
+    def run() = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (forced <- Seq(false, true)) {
+      val comp = if (forced) overBudget(run()) else run()
+      assert((1L to 10L).forall(comp(_) == 1L), s"overBudget=$forced")
+      assert(Seq(20L, 21L, 22L).forall(comp(_) == 20L), s"overBudget=$forced")
+      assert(comp.size == 13, s"overBudget=$forced")
     }
   }
 
@@ -71,10 +72,9 @@ class DedupSpec extends SparkSpec {
           val r = find(v.toInt)
           (0 until n).filter(find(_) == r).min.toLong
         }).toMap
-      // Force the DISTRIBUTED star loop (localThreshold = 0): the driver
-      // fast path IS a union-find, so testing it against one proves little.
-      val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b",
-          localThreshold = 0L)
+      // Force the DISTRIBUTED star loop (over budget): the driver fast
+      // path IS a union-find, so testing it against one proves little.
+      val got = overBudget(Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"trial $trial: $got vs $want")
     }
@@ -90,7 +90,7 @@ class DedupSpec extends SparkSpec {
       .where(col("id") % 64 =!= 63 && col("id") + 1 < n)
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    val comp = Dedup.connectedComponents(edges, "a", "b", localThreshold = 0L)
+    val comp = overBudget(Dedup.connectedComponents(edges, "a", "b"))
     val bad = comp
       .withColumn("want", col("id") - col("id") % 64)
       .where(col("component") =!= col("want"))
@@ -110,8 +110,8 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val chain = (1L to 30L).sliding(2).map(s => (s.head, s.last)).toSeq
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b",
-        maxIter = 1, localThreshold = 0L).collect()
+      overBudget(Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b",
+        maxIter = 1)).collect()
     }
   }
 
@@ -494,11 +494,11 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val edges = ((1L to 9L).map(i => (i, i + 1)) ++
       Seq((20L, 21L), (21L, 22L), (22L, 20L))).toDF("a", "b")
-    val want = Dedup.connectedComponents(edges, "a", "b", localThreshold = 0L)
+    val want = overBudget(Dedup.connectedComponents(edges, "a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val got = Dedup.connectedComponents(edges, "a", "b", localThreshold = 0L,
-        checkpointDir = Some(dir))
+    val got = overBudget(Dedup.connectedComponents(edges, "a", "b",
+        checkpointDir = Some(dir)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
     // Superseded round files are deleted as the loop advances; only the
@@ -517,10 +517,10 @@ class DedupSpec extends SparkSpec {
     // as superseded, and A's collect reads missing or foreign parquet.
     def chain(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-share").toString
-    val a = Dedup.connectedComponents(chain(4), "a", "b", localThreshold = 0L,
-      checkpointDir = Some(dir))
-    val b = Dedup.connectedComponents(chain(200), "a", "b",
-        localThreshold = 0L, checkpointDir = Some(dir))
+    val a = overBudget(Dedup.connectedComponents(chain(4), "a", "b",
+      checkpointDir = Some(dir)))
+    val b = overBudget(Dedup.connectedComponents(chain(200), "a", "b",
+        checkpointDir = Some(dir)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b == (1L to 200L).map(_ -> 1L).toMap)
     val got = a.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -530,28 +530,27 @@ class DedupSpec extends SparkSpec {
 
   test("checkpointDir threads end-to-end through dedupAssign/KeepBest/Filter") {
     import spark.implicits._
-    // Large-enough chain to clear the CC local-threshold fast path so the
-    // distributed (checkpointing) loop actually runs.
+    // Over budget, so the distributed (checkpointing) CC loop runs.
     val pairs = (1L to 3000L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = (1L to 3001L).map(i => (i, i % 7)).toDF("doc_id", "quality")
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-ckpt")
     def roundFiles() = new java.io.File(dir.toString).listFiles()
       .count(_.getName.startsWith("connectedComponents_"))
-    val assign = Dedup.dedupAssign(docs, "doc_id", pairs,
-      checkpointDir = Some(dir.toString), ccLocalThreshold = 0L)
+    val assign = overBudget(Dedup.dedupAssign(docs, "doc_id", pairs,
+      checkpointDir = Some(dir.toString)))
     assert(assign.where(col("cluster_id") === 1L).count() == 3001L)
     assert(roundFiles() >= 1, "dedupAssign did not reach the CC checkpoint path")
-    val best = Dedup.dedupKeepBest(docs, "doc_id", pairs, col("quality"),
-      checkpointDir = Some(dir.toString), ccLocalThreshold = 0L)
+    val best = overBudget(Dedup.dedupKeepBest(docs, "doc_id", pairs,
+      col("quality"), checkpointDir = Some(dir.toString)))
     // Max quality 6 first occurs at id 6 in the single chain cluster.
     assert(best.where(col("keep") === 1).select("doc_id")
       .collect().map(_.getLong(0)).toSeq == Seq(6L))
-    val kept = Dedup.dedupFilter(docs, "doc_id", pairs,
-      checkpointDir = Some(dir.toString), ccLocalThreshold = 0L)
+    val kept = overBudget(Dedup.dedupFilter(docs, "doc_id", pairs,
+      checkpointDir = Some(dir.toString)))
     assert(kept.count() == 1L)
-    val split = graft.ops.Sampling.leakageSafeSplit(docs, "doc_id", pairs,
-      Seq("train" -> 0.8, "test" -> 0.2),
-      checkpointDir = Some(dir.toString), ccLocalThreshold = 0L)
+    val split = overBudget(graft.ops.Sampling.leakageSafeSplit(docs,
+      "doc_id", pairs, Seq("train" -> 0.8, "test" -> 0.2),
+      checkpointDir = Some(dir.toString)))
     assert(split.select("split").distinct().count() == 1L,
       "one cluster must land in exactly one split")
   }

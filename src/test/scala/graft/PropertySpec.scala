@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Caches.overBudget
 import graft.functions.{Exprs, TextFunctions}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -186,8 +187,8 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id", "text")
       val merges = graft.ops.Export.bpeLearn(docs, "text", numMerges = 6)
       if (corpus.hashCode % 4 == 0) // distributed loop is slow — spot-check
-        assert(graft.ops.Export.bpeLearn(docs, "text", 6,
-          localThreshold = 0L) == merges, s"local != distributed: $corpus")
+        assert(overBudget(graft.ops.Export.bpeLearn(docs, "text", 6)) ==
+          merges, s"local != distributed: $corpus")
       val vocab = graft.ops.Export.bpeVocab(docs, "text", merges)
       val inv = vocab.map(_.swap).toMap
       // Round-trip: decoded symbols rebuild each doc's space-stripped text
@@ -228,6 +229,84 @@ class PropertySpec extends SparkSpec {
           assert(syms == model(w), s"word=$w merges=$merges")
         }
       }
+    }
+  }
+
+  /** `op` gives the same result, or fails with the same message, on its
+    * driver-local fast path and over budget (its distributed loop). */
+  private def sameOverBudget[A](input: Any)(op: => A): Unit = {
+    def run(): Either[String, A] =
+      try Right(op) catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    val local = run()
+    val dist = overBudget(run())
+    assert(local == dist, s"input=$input\nlocal=$local\nover budget=$dist")
+  }
+
+  test("connectedComponents: local == distributed on random graphs " +
+      "(Long and String ids, NULL endpoints, supplementary-plane strings)") {
+    import spark.implicits._
+    def comps(df: org.apache.spark.sql.DataFrame) =
+      graft.ops.Dedup.connectedComponents(df, "a", "b")
+        .collect().map(r => r.get(0) -> r.get(1)).toMap
+    val longEdge = Gen.zip(Gen.option(Gen.chooseNum(1L, 12L)),
+      Gen.option(Gen.chooseNum(1L, 12L)))
+    (Seq(Nil) ++ samples(Gen.listOfN(14, longEdge), 2)).foreach { es =>
+      sameOverBudget(es)(comps(es.toDF("a", "b")))
+    }
+    // UTF-8 byte order (Spark's) and UTF-16 order (Java's) disagree on
+    // "𝕒" (U+1D552) vs "０" (U+FF10): the component minimum must not.
+    val strEdge = Gen.zip(
+      Gen.option(Gen.oneOf("a", "ab", "𝕒", "０", "𝕒x", "０x", "é", "")),
+      Gen.option(Gen.oneOf("a", "ab", "𝕒", "０", "𝕒x", "０x", "é", "")))
+    samples(Gen.listOfN(10, strEdge), 2).foreach { es =>
+      sameOverBudget(es)(comps(es.toDF("a", "b")))
+    }
+  }
+
+  test("hashedLinearFit: local == distributed on random labeled corpora " +
+      "(NULL labels, empty text, empty frame, negative residuals)") {
+    import spark.implicits._
+    // Zero-initialized weights give every label-1 doc a negative first
+    // residual, so truncating division runs on negatives in both paths.
+    val doc = Gen.zip(
+      Gen.listOf(Gen.oneOf("good", "bad", "fine", "poor", "")).map(_.mkString(" ")),
+      Gen.option(Gen.oneOf(0, 1)))
+    (Seq(Nil) ++ samples(Gen.listOfN(8, doc), 3)).foreach { corpus =>
+      val docs = corpus.zipWithIndex.map { case ((t, y), i) => (i.toLong, t, y) }
+        .toDF("doc_id", "text", "label")
+      sameOverBudget(corpus)(graft.ops.Scoring.hashedLinearFit(docs, "doc_id",
+          "text", "label", buckets = 16, epochs = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    }
+  }
+
+  test("langIdFit: local == distributed on random corpora with NULL " +
+      "classes; a corpus with no class fails alike on both paths") {
+    import spark.implicits._
+    val doc = Gen.zip(
+      Gen.listOf(Gen.oneOf("der", "the", "le", "hund", "dog", "")).map(_.mkString(" ")),
+      Gen.option(Gen.oneOf("de", "en", "fr")))
+    val noClass = Seq(("the dog", None), ("", None))
+    (Seq(Nil, noClass) ++ samples(Gen.listOfN(6, doc), 2)).foreach { corpus =>
+      val docs = corpus.zipWithIndex.map { case ((t, c), i) => (i.toLong, t, c) }
+        .toDF("doc_id", "text", "lang")
+      sameOverBudget(corpus)(graft.ops.Scoring.langIdFit(docs, "doc_id",
+          "text", "lang", buckets = 16, epochs = 2)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sorted.toSeq)
+    }
+  }
+
+  test("bradleyTerry: local == distributed on random outcomes " +
+      "(self-play, NULL endpoints, empty input)") {
+    import spark.implicits._
+    val item = Gen.option(Gen.oneOf("a", "b", "c", "d", "e"))
+    (Seq(Nil) ++ samples(Gen.listOfN(12, Gen.zip(item, item)), 3)).foreach { os =>
+      sameOverBudget(os)(graft.ops.Scoring.bradleyTerry(
+          os.toDF("winner", "loser"), "winner", "loser", iters = 3)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sorted.toSeq)
     }
   }
 

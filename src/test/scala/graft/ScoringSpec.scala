@@ -3,6 +3,7 @@ package graft
 import java.security.MessageDigest
 
 import org.apache.spark.sql.functions._
+import graft.core.Caches.overBudget
 import graft.ops.Scoring
 
 /** Driver-side oracles for the model-based scoring tier: every expected
@@ -206,14 +207,11 @@ class ScoringSpec extends SparkSpec {
       (3L, "bad poor bad", 0),
       (4L, "poor poor bad poor", 0),
       (5L, "", 1)).toDF("doc_id", "text", "label")
-    val loc = Scoring.hashedLinearFitImpl(docs, "doc_id", "text", "label",
-        buckets = 64, epochs = 3, lrPpm = 250000L, checkpointDir = None,
-        allowLocal = true)
+    def fit() = Scoring.hashedLinearFit(docs, "doc_id", "text", "label",
+        buckets = 64, epochs = 3, lrPpm = 250000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val dist = Scoring.hashedLinearFitImpl(docs, "doc_id", "text", "label",
-        buckets = 64, epochs = 3, lrPpm = 250000L, checkpointDir = None,
-        allowLocal = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val loc = fit()
+    val dist = overBudget(fit())
     assert(loc == dist, s"local=$loc\ndistributed=$dist")
 
     val ldocs = Seq(
@@ -221,13 +219,12 @@ class ScoringSpec extends SparkSpec {
       (2L, "the dog runs fast", "en"),
       (3L, "le chien court vite", "fr"),
       (4L, "the old dog sleeps", "en")).toDF("doc_id", "text", "lang")
-    def modelOf(local: Boolean) =
-      Scoring.langIdFitImpl(ldocs, "doc_id", "text", "lang", buckets = 64,
-          epochs = 2, lrPpm = 250000L, checkpointDir = None,
-          allowLocal = local)
+    def model() =
+      Scoring.langIdFit(ldocs, "doc_id", "text", "lang", buckets = 64,
+          epochs = 2, lrPpm = 250000L)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .sorted.toSeq
-    assert(modelOf(true) == modelOf(false))
+    assert(model() == overBudget(model()))
   }
 
   test("hashedLinearFit: NULL-label docs are dropped on both paths, so " +
@@ -239,14 +236,13 @@ class ScoringSpec extends SparkSpec {
       (3L, "good bad", None),
       (4L, "fine fine good", Some(1)),
       (5L, "poor", None)).toDF("doc_id", "text", "label")
-    def fit(in: org.apache.spark.sql.DataFrame, local: Boolean) =
-      Scoring.hashedLinearFitImpl(in, "doc_id", "text", "label",
-          buckets = 32, epochs = 3, lrPpm = 250000L, checkpointDir = None,
-          allowLocal = local)
+    def fit(in: org.apache.spark.sql.DataFrame) =
+      Scoring.hashedLinearFit(in, "doc_id", "text", "label",
+          buckets = 32, epochs = 3, lrPpm = 250000L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val labeled = fit(docs.where(col("label").isNotNull), local = false)
-    assert(fit(docs, local = true) == labeled)
-    assert(fit(docs, local = false) == labeled)
+    val labeled = overBudget(fit(docs.where(col("label").isNotNull)))
+    assert(fit(docs) == labeled)
+    assert(overBudget(fit(docs)) == labeled)
   }
 
   test("bradleyTerry: the driver-local MM replay equals the distributed " +
@@ -256,13 +252,12 @@ class ScoringSpec extends SparkSpec {
       ("a", "b"), ("a", "b"), ("b", "a"), ("a", "c"), ("c", "b"),
       ("b", "c"), ("a", "c"), ("c", "a"), ("b", "c"), ("a", "b"))
       .toDF("winner", "loser")
-    def run(local: Boolean) =
-      Scoring.bradleyTerryImpl(outcomes, "winner", "loser", iters = 3,
-          checkpointDir = None, allowLocal = local)
+    def run() =
+      Scoring.bradleyTerry(outcomes, "winner", "loser", iters = 3)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sorted.toSeq
-    assert(run(true) == run(false))
+    assert(run() == overBudget(run()))
   }
 
   test("dsirWeights: target-vs-raw log ratio, driver-checked") {

@@ -795,6 +795,16 @@ class SimilaritySpec extends SparkSpec {
     assert(got == want, "sampled-fit PQ diverged from brute force")
   }
 
+  test("sampled ANN fits: the driver-local fit equals the distributed fit " +
+      "over a sub-corpus sample") {
+    val emb = fixtureEmb // 500 rows, sampled down to 256
+    assert(Similarity.pqFitCodebooks(emb, 64, 32, 16, 2, 256) ==
+      graft.core.Caches.overBudget(
+        Similarity.pqFitCodebooks(emb, 64, 32, 16, 2, 256)))
+    assert(Similarity.fitCentroids(emb, 4, 2, 256) ==
+      graft.core.Caches.overBudget(Similarity.fitCentroids(emb, 4, 2, 256)))
+  }
+
   test("hardNegativesAgainstIndex: equals brute-force mining; cluster-mates " +
       "topping the ADC shortlist are excluded without eating rerank budget") {
     import spark.implicits._

@@ -130,7 +130,7 @@ class UnigramSpec extends SparkSpec {
     assert(Set("scan", "window", "order", "sort").subsetOf(multis.toSet))
     // Vocabulary over budget → a loud refusal naming the remedy.
     val e = intercept[IllegalArgumentException] {
-      Unigram.unigramFit(docs, "text", 48, localThreshold = 4L)
+      graft.core.Caches.overBudget(Unigram.unigramFit(docs, "text", 48))
     }
     assert(e.getMessage.contains("sampleFraction"))
     // Sampled fit is partitioning-invariant (md5 band, not randomness).
