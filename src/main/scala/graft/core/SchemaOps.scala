@@ -122,10 +122,4 @@ object SchemaOps {
     val i = columns.indexWhere(c => normHeader(c) == normHeader(marker))
     if (i < 0) columns else columns.take(i + 1)
   }
-
-  /** P6: drop columns whose header is NA-like. */
-  def dropNaHeaderColumns(df: DataFrame): DataFrame = {
-    val keep = df.columns.filter(c => c == RowIdx || !Na.isNaString(c))
-    df.select(keep.map(qcol).toIndexedSeq: _*)
-  }
 }

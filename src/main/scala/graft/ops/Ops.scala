@@ -17,15 +17,6 @@ object Ops {
                  varName: String, valName: String): DataFrame =
     df.unpivot(idCols.map(graft.core.SchemaOps.qcol).toArray, valueCols.map(graft.core.SchemaOps.qcol).toArray, varName, valName)
 
-  /** A1/A3/A4: group-sum with pre-agg zero-fill and post-agg zero drop —
-    * partial (map-side) aggregation is supplied by Catalyst. */
-  def groupSumDropZero(df: DataFrame, keys: Seq[String], valueCol: String,
-                       outName: String): DataFrame =
-    df.withColumn(valueCol, coalesce(col(valueCol), lit(0.0)))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col(valueCol)).as(outName))
-      .where(col(outName) =!= 0)
-
   /** A5: first-per-group under an explicit total order (never rely on
     * incidental row order — Spark partitions are unordered). */
   def firstPerGroup(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {

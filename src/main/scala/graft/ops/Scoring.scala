@@ -284,8 +284,9 @@ object Scoring {
     *
     * `labelCol` must be 0/1; NULL-label docs are dropped up front on
     * both the local and the distributed path (no label, no gradient, not
-    * counted in n). Output: (bucket BIGINT — −1 is the
-    * intercept, weight_u BIGINT micro-units); serve by feeding
+    * counted in n). A labeled doc's id must be unique and non-NULL.
+    * Output: (bucket BIGINT — −1 is the intercept, weight_u BIGINT
+    * micro-units); serve by feeding
     * weight_u/10⁶ per bucket ≥ 0 as [[hashedLinearScore]]'s weight table
     * and the −1 row as its intercept. */
   def hashedLinearFit(docs: DataFrame, idCol: String, textCol: String,
@@ -296,9 +297,9 @@ object Scoring {
     require(epochs > 0, "hashedLinearFit: epochs must be positive")
     require(lrPpm > 0 && lrPpm <= 1000000L,
       "hashedLinearFit: lrPpm must be in (0, 1e6]")
-    val out = withFitFeatures[Seq[(Long, Long)]](docs, idCol, textCol,
-        labelCol, "_yu", (col(labelCol).cast("long") * 2 - 1) * 1000000L,
-        buckets)({ lf =>
+    val out = withFitFeatures[Seq[(Long, Long)]]("hashedLinearFit", docs,
+        idCol, textCol, labelCol, "_yu",
+        (col(labelCol).cast("long") * 2 - 1) * 1000000L, buckets)({ lf =>
       val yuDoc = lf.payloadDoc.map(_.asInstanceOf[Long])
       val w = linFitEpochsLocal(lf, yuDoc, epochs, lrPpm)
       lf.bktOfSlot.indices.map(i => (lf.bktOfSlot(i), w(i)))
@@ -316,12 +317,21 @@ object Scoring {
     * _d, `payloadName`) frame (bucket −1 = intercept), `payload` being
     * the per-doc column the fit reads. Within [[LocalFitMaxRows]] rows it
     * goes to `local`, else to `distributed` with the per-doc (_id,
-    * `payloadName`, _d) frame. The result must not read the pin. */
-  private def withFitFeatures[T](docs: DataFrame, idCol: String,
+    * `payloadName`, _d) frame. The result must not read the pin.
+    *
+    * A labeled doc's id must be unique and non-NULL: the local replay
+    * keys a doc by its id and the distributed loop joins on it, so `op`
+    * fails up front, on either path, rather than let the two disagree. */
+  private def withFitFeatures[T](op: String, docs: DataFrame, idCol: String,
       textCol: String, labelCol: String, payloadName: String,
       payload: Column, buckets: Int)(local: LocalFeats => T)(
       distributed: (DataFrame, DataFrame) => T): T = {
-    val toks = docs.where(col(labelCol).isNotNull).repartition(col(idCol))
+    val labeled = docs.where(col(labelCol).isNotNull)
+    val badIds = labeled.groupBy(col(idCol)).count()
+      .where(col(idCol).isNull || col("count") > 1).limit(1).collect()
+    require(badIds.isEmpty, s"$op: doc ids must be unique and non-NULL " +
+      s"(id ${badIds.head.get(0)} is not)")
+    val toks = labeled.repartition(col(idCol))
       .select(col(idCol).as("_id"), payload.as(payloadName),
         explode_outer(split(lower(trim(col(textCol))), "\\s+")).as("_tok"))
       .withColumn("_tok",
@@ -504,7 +514,8 @@ object Scoring {
     * class the cost is [[hashedLinearFit]]'s two-joins-per-epoch against
     * that frame with a `buckets`-bounded broadcast weight table, and
     * per-class lineage is truncated independently. NULL-class docs are
-    * dropped (no label, no vote). Output: (lang STRING, bucket BIGINT,
+    * dropped (no label, no vote); a labeled doc's id must be unique and
+    * non-NULL. Output: (lang STRING, bucket BIGINT,
     * weight_u BIGINT), (classes × ≤ buckets+1) rows. */
   def langIdFit(docs: DataFrame, idCol: String, textCol: String,
                 classCol: String, buckets: Int, epochs: Int,
@@ -520,8 +531,8 @@ object Scoring {
           "would otherwise throw far from the cause)")
       classes
     }
-    val out = withFitFeatures[Seq[(String, Long, Long)]](docs, idCol,
-        textCol, classCol, "_lab", col(classCol).cast("string"),
+    val out = withFitFeatures[Seq[(String, Long, Long)]]("langIdFit", docs,
+        idCol, textCol, classCol, "_lab", col(classCol).cast("string"),
         buckets)({ lf =>
       // One parse serves every class: only yu (a function of _lab vs
       // the class) changes between the K driver-local replays.

@@ -931,21 +931,14 @@ object AnalyticsQueries {
     //    flag for the canonical representative; the oracle replays the
     //    closure with a recursive CTE over the identical pair SQL. ──
     QueryDef("q111_entity_clusters",
-      """WITH RECURSIVE d AS (SELECT DISTINCT p_name AS k FROM part),
+      s"""WITH RECURSIVE d AS (SELECT DISTINCT p_name AS k FROM part),
         |b AS (SELECT k, split_part(k, ' ', 2) AS blk FROM d),
         |pairs AS (
         |  SELECT a.k AS key_a, c.k AS key_b
         |  FROM b a JOIN b c ON a.blk = c.blk AND a.k < c.k
         |    AND abs(length(a.k) - length(c.k)) <= 3
         |  WHERE levenshtein(a.k, c.k) <= 3),
-        |e AS (SELECT key_a AS u, key_b AS v FROM pairs
-        |      UNION SELECT key_b, key_a FROM pairs),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM e
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-        |comp AS (SELECT u AS name, LEAST(u, MIN(v)) AS eid
-        |         FROM reach GROUP BY u)
+        |${OracleSql.closureCtes("pairs", "key_a", "key_b", "name", "eid")}
         |SELECT d.k AS name, COALESCE(c.eid, d.k) AS entity_id,
         |  CAST(COALESCE(c.eid, d.k) = d.k AS INT) AS keep
         |FROM d LEFT JOIN comp c ON d.k = c.name

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.ops.{Dedup, Sampling, Scoring, Similarity, Text, Web}
+import OracleSql._
 
 /** Training-data pipeline operators (dedup, similarity search, text
   * analysis) as declared queries over `documents` / `embeddings`.
@@ -16,16 +17,7 @@ object LlmQueries {
     * the storage round trip must be result-invisible, so both replay the
     * same coarse-quantize + probe + exact-score pipeline. */
   private val IvfSql =
-    """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-      |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-      |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
-      |assign AS (
-      |  SELECT id, cid AS cell FROM (
-      |    SELECT c.id, t.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY c.id
-      |        ORDER BY round(list_inner_product(c.vec, t.cvec) / (c.n * t.cn), 6)
-      |                 DESC, t.cid) AS rk
-      |    FROM w c, cents t) WHERE rk = 1),
+    s"""WITH $IvfAssignCtes,
       |probes AS (
       |  SELECT id AS query_id, cid AS cell FROM (
       |    SELECT c.id, t.cid,
@@ -40,19 +32,14 @@ object LlmQueries {
       |  JOIN assign a ON a.cell = p.cell AND a.id <> p.query_id
       |  JOIN w q ON q.id = p.query_id
       |  JOIN w x ON x.id = a.id)
-      |SELECT query_id, neighbor_id, sim, rank FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |                               ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scored)
-      |WHERE rank <= 10
-      |ORDER BY query_id, rank""".stripMargin
+      |$TopKSql""".stripMargin
 
   /** Shared oracle for q23 (brute force) and q92 (PQ+ADC with exact
     * re-rank): the compressed-index path must reproduce the exact
     * brute-force top-k — the PQ approximation may only decide which
     * candidates pay the exact re-rank, never the published ranks/sims. */
   private val BruteTopKSql =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
       |  FROM embeddings WHERE vec_id % 50 = 0),
       |scored AS (
@@ -61,12 +48,7 @@ object LlmQueries {
       |      (sqrt(list_inner_product(qe, qe)) *
       |       sqrt(list_inner_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6) AS sim
       |  FROM q, embeddings e WHERE e.vec_id <> query_id)
-      |SELECT query_id, neighbor_id, sim, rank FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-      |                               ORDER BY sim DESC, neighbor_id) AS rank
-      |  FROM scored)
-      |WHERE rank <= 10
-      |ORDER BY query_id, rank""".stripMargin
+      |$TopKSql""".stripMargin
 
   /** Shared oracle for q134 (signature table built whole) and q138 (built
     * 60% then APPENDED with a 10%-overlap delta): per-new-doc admission
@@ -91,15 +73,7 @@ object LlmQueries {
     * must be result-invisible, including batch docs that bridge and
     * merge pre-existing clusters. */
   private lazy val ClusterAssignSql: String =
-    s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-       |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-       |      UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM e
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-       |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-       |         FROM reach GROUP BY u)
+    s"""WITH RECURSIVE $JaccardClosureCtes
        |SELECT d.doc_id,
        |       COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
        |       CAST(COALESCE(c.cluster_id, d.doc_id) = d.doc_id AS INT) AS keep
@@ -122,6 +96,173 @@ object LlmQueries {
       |JOIN sizes sa ON sa.doc_id = doc_a
       |JOIN sizes sb ON sb.doc_id = doc_b
       |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.8""".stripMargin
+
+  /** `pairs`, the exact Jaccard pair set, and its closure
+    * `comp(doc_id, cluster_id)`: q57's cluster table, which every
+    * document-clustering oracle replays. */
+  private lazy val JaccardClosureCtes: String =
+    s"pairs AS ($JaccardPairsSql),\n" +
+      closureCtes("pairs", "doc_a", "doc_b", "doc_id")
+
+  /** `pos`/`g`: every 50-char window `gram` at 1-based position `p` of each
+    * doc in `d0(doc_id, text, len)`. */
+  private lazy val GramWindowCtes: String =
+    """pos AS (
+      |  SELECT doc_id, text, len,
+      |    unnest(generate_series(1, greatest(len - 49, 1))) AS p
+      |  FROM d0),
+      |g AS (SELECT doc_id, len, p, substr(text, p::INT, 50) AS gram FROM pos)""".stripMargin
+
+  /** The matched windows `f(doc_id, p, e)` merged into maximal per-doc
+    * character intervals: `isl(doc_id, p, e, island)`. */
+  private lazy val IslandCtes: String =
+    """w AS (
+      |  SELECT doc_id, p, e,
+      |    max(e) OVER (PARTITION BY doc_id ORDER BY p
+      |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+      |  FROM f),
+      |isl AS (
+      |  SELECT doc_id, p, e,
+      |    sum(CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END)
+      |      OVER (PARTITION BY doc_id ORDER BY p) AS island
+      |  FROM w)""".stripMargin
+
+  /** q70/q74's spans: the windows of the benchmark split (doc_id % 50 = 0)
+    * found in the rest of the corpus, merged into [[IslandCtes]]. */
+  private lazy val BenchSpanCtes: String =
+    s"""d0 AS (
+       |  SELECT doc_id, text, length(text) AS len FROM documents
+       |  WHERE length(text) >= 1 AND doc_id % 50 <> 0),
+       |b0 AS (
+       |  SELECT text, length(text) AS len FROM documents
+       |  WHERE length(text) >= 1 AND doc_id % 50 = 0),
+       |$GramWindowCtes,
+       |bpos AS (
+       |  SELECT text, unnest(generate_series(1, greatest(len - 49, 1))) AS p
+       |  FROM b0),
+       |bg AS (SELECT DISTINCT substr(text, p::INT, 50) AS gram FROM bpos),
+       |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN bg USING (gram)),
+       |$IslandCtes""".stripMargin
+
+  /** q60/q67's spans: the windows occurring twice or more in the corpus,
+    * merged into [[IslandCtes]]. */
+  private lazy val DupSpanCtes: String =
+    s"""d0 AS (
+       |  SELECT doc_id, text, length(text) AS len FROM documents
+       |  WHERE length(text) >= 1),
+       |$GramWindowCtes,
+       |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
+       |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN dup USING (gram)),
+       |$IslandCtes""".stripMargin
+
+  /** The spans in `isl` cut out of each `d0` text: `cleaned(doc_id, ct)`,
+    * the novel remainder of every doc that has a span (q67, q74). */
+  private lazy val DespanCtes: String =
+    """sp AS (SELECT doc_id, min(p) AS s, max(e) AS e
+      |       FROM isl GROUP BY doc_id, island),
+      |gaps AS (
+      |  SELECT doc_id, s, e,
+      |    lag(e, 1, 0) OVER (PARTITION BY doc_id ORDER BY s) AS pe
+      |  FROM sp),
+      |tails AS (SELECT doc_id, max(e) AS me FROM sp GROUP BY doc_id),
+      |pieces AS (
+      |  SELECT g2.doc_id, g2.s AS ord,
+      |    substr(d0.text, CAST(g2.pe + 1 AS INT), CAST(g2.s - g2.pe - 1 AS INT)) AS piece
+      |  FROM gaps g2 JOIN d0 USING (doc_id)
+      |  UNION ALL
+      |  SELECT t.doc_id, 2147483647 AS ord,
+      |    substr(d0.text, CAST(t.me + 1 AS INT)) AS piece
+      |  FROM tails t JOIN d0 USING (doc_id)),
+      |cleaned AS (
+      |  SELECT doc_id, coalesce(string_agg(piece, '' ORDER BY ord), '') AS ct
+      |  FROM pieces GROUP BY doc_id)""".stripMargin
+
+  /** q81's add-1-smoothed bigram LM over `t(doc_id, toks)`: each bigram's
+    * `lp(doc_id, lp)`, −ln p(w2|w1) rounded to 6 dp as a decimal. */
+  private lazy val BigramLpCtes: String =
+    """bg AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
+      |         FOR i IN generate_series(1, len(toks)-1)]) AS g FROM t),
+      |c12 AS (SELECT g, count(*) AS c12 FROM bg GROUP BY 1),
+      |ctx AS (SELECT split_part(g, ' ', 1) AS w1, sum(c12) AS c1
+      |        FROM c12 GROUP BY 1),
+      |v AS (SELECT count(DISTINCT tok) AS v
+      |      FROM (SELECT unnest(toks) AS tok FROM t)),
+      |lp AS (SELECT doc_id,
+      |         CAST(round(-ln((c12 + 1.0) / (c1 + 1.0 * v)), 6)
+      |              AS DECIMAL(18,6)) AS lp
+      |       FROM bg JOIN c12 USING (g)
+      |       JOIN ctx ON ctx.w1 = split_part(g, ' ', 1) CROSS JOIN v)""".stripMargin
+
+  /** q160/q205's two rankings of the every-50th-id queries: `ra`, the float
+    * brute-force top 10 (q23), and `rb`, the int8-code top 10 (q148). */
+  private lazy val Int8RankCtes: String =
+    """v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+      |w AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS n
+      |      FROM v),
+      |tq AS (SELECT * FROM w WHERE vec_id % 50 = 0),
+      |tsc AS (
+      |  SELECT tq.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    round(list_inner_product(tq.vec, c.vec) / (tq.n * c.n), 6) AS sim
+      |  FROM tq, w c WHERE c.vec_id <> tq.vec_id),
+      |ra AS (SELECT query_id, neighbor_id, rank FROM (
+      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |      ORDER BY sim DESC, neighbor_id) AS rank FROM tsc)
+      |  WHERE rank <= 10),
+      |m AS (SELECT vec_id, vec, list_max([abs(x) FOR x IN vec]) AS am
+      |      FROM v),
+      |q8 AS (SELECT vec_id,
+      |        CASE WHEN am = 0 THEN [0.0 FOR x IN vec]
+      |             ELSE [floor(x * 127.0 / am + 0.5) FOR x IN vec]
+      |        END AS c FROM m),
+      |n8 AS (SELECT vec_id, c, sqrt(list_inner_product(c, c)) AS n FROM q8),
+      |aq AS (SELECT * FROM n8 WHERE vec_id % 50 = 0),
+      |asc0 AS (
+      |  SELECT aq.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    CASE WHEN aq.n * c.n = 0 THEN 0.0
+      |         ELSE round(list_inner_product(aq.c, c.c) / (aq.n * c.n), 6)
+      |    END AS sim
+      |  FROM aq, n8 c WHERE c.vec_id <> aq.vec_id),
+      |rb AS (SELECT query_id, neighbor_id, rank FROM (
+      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |      ORDER BY sim DESC, neighbor_id) AS rank FROM asc0)
+      |  WHERE rank <= 10)""".stripMargin
+
+  /** Per-doc term counts `tf(doc_id, term, tf)` over the oracle tokenizer's
+    * non-empty terms (q59, q87, q198). */
+  private lazy val TermFreqCtes: String =
+    """toks AS (
+      |  SELECT doc_id,
+      |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
+      |  FROM documents),
+      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
+      |       WHERE term <> '' GROUP BY 1, 2)""".stripMargin
+
+  /** Each doc's distinct non-empty terms `tk(doc_id, term)` (q179, q182). */
+  private lazy val DocTermCtes: String =
+    """toks AS (SELECT doc_id,
+      |    unnest(CASE WHEN trim(text) = '' THEN []
+      |      ELSE regexp_split_to_array(lower(trim(text)), '\s+') END)
+      |      AS term
+      |  FROM documents),
+      |tk AS (SELECT DISTINCT doc_id, term FROM toks WHERE term <> '')""".stripMargin
+
+  /** [[JaccardClosureCtes]] with every document's cluster:
+    * `asg(doc_id, cluster_id)`, a singleton being its own cluster. */
+  private lazy val JaccardAssignCtes: String =
+    s"""$JaccardClosureCtes,
+       |asg AS (SELECT d.doc_id,
+       |          COALESCE(c.cluster_id, d.doc_id) AS cluster_id
+       |        FROM documents d LEFT JOIN comp c USING (doc_id))""".stripMargin
+
+  /** The top 10 `scored(query_id, neighbor_id, sim)` rows per query by
+    * similarity, ties to the lower neighbor id. */
+  private lazy val TopKSql: String =
+    """SELECT query_id, neighbor_id, sim, rank FROM (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+      |                               ORDER BY sim DESC, neighbor_id) AS rank
+      |  FROM scored)
+      |WHERE rank <= 10
+      |ORDER BY query_id, rank""".stripMargin
 
   /** q160's per-match-depth RBO contribution table, interpolated from the
     * op's own constants ([[graft.ops.Similarity.rboTail]]) so both
@@ -158,8 +299,7 @@ object LlmQueries {
          |      // 1000000 AS wu
          |  FROM $prev w LEFT JOIN g$k USING (bkt))""".stripMargin
     }.mkString(",\n")
-    s"""t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-       |    ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS toks,
+    s"""${toksHead(4)} AS toks,
        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
        |s AS (SELECT doc_id,
        |    CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 512 AS bkt
@@ -232,6 +372,28 @@ object LlmQueries {
        |    ELSE CAST(CAST(tp AS HUGEINT) * 2000000 // (pp + pos) AS BIGINT)
        |  END AS f1_ppm
        |FROM sf2 ORDER BY thr_ppm""".stripMargin
+  }
+
+  /** An encoder's (doc_id, n_toks, input_ids) with the ids space-joined,
+    * as the q84/q91/q93 oracles print them. */
+  private def idsAsText(encoded: org.apache.spark.sql.DataFrame) =
+    encoded.select(col("doc_id"), col("n_toks"),
+        concat_ws(" ", transform(col("input_ids"), x => x.cast("string")))
+          .as("input_ids"))
+      .orderBy("doc_id")
+
+  /** q149/q160/q205's two top-10 runs for every 50th vector: the float
+    * brute-force truth (q23) and the int8-code ranking (q148). */
+  private def int8AndFloatTopK(s: org.apache.spark.sql.SparkSession,
+                               d: String) = {
+    val emb = SharedFrames.embOdd(s, d)
+    val truth = Similarity.bruteForceTopK(emb.where(col("id") % 50 === 0),
+      emb, k = 10)
+    val codes = Similarity.scalarQuantizeInt8(
+      emb.withColumnRenamed("id", "vec_id"), "vec_id", "vec")
+    val approx = Similarity.int8TopK(
+      codes.where(col("vec_id") % 50 === 0), codes, "vec_id", k = 10)
+    (truth, approx)
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -419,9 +581,7 @@ object LlmQueries {
 
     // ── brute-force cosine top-k ANN baseline ──
     QueryDef("q23_ann_topk", BruteTopKSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d)
       val queries = emb.where(col("id") % 50 === 0)
       Similarity.bruteForceTopK(queries, emb, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
@@ -449,16 +609,9 @@ object LlmQueries {
          |  SELECT x.id AS query_id, y.id AS neighbor_id,
          |    round(list_inner_product(x.vec, y.vec) / (x.n * y.n), 6) AS sim
          |  FROM b x JOIN b y ON x.bucket = y.bucket AND x.id <> y.id)
-         |SELECT query_id, neighbor_id, sim, rank FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY sim DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin
+         |$TopKSql""".stripMargin
     }) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d)
       Similarity.srpTopK(emb, dim = 64, nPlanes = 8, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
         .orderBy("query_id", "rank")
@@ -470,14 +623,8 @@ object LlmQueries {
     //    deterministic stand-in for a k-means fit — the engine mechanics
     //    are identical and the oracle can re-derive them from the data). ──
     QueryDef("q48_ann_ivf", IvfSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      // Collect the 16 coarse centroids (driver-side state in any real IVF
-      // build — a k-means fit lives on the driver too) and plant them as
-      // plan literals: corpus assignment stays a map-only pass.
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       Similarity.ivfTopK(emb.where(col("id") % 50 === 0), emb, cents,
           nprobe = 2, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
@@ -491,11 +638,8 @@ object LlmQueries {
     //    the corpus or refits the quantizer). The oracle is q48's: the
     //    storage round trip must be result-invisible. ──
     QueryDef("q73_ann_ivf_index", IvfSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val dir = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
       // Build + store: assignments partitioned by cell (a probe's cell
       // filter prunes whole inverted lists at the file level), centroids
@@ -519,11 +663,8 @@ object LlmQueries {
     //    serve the same probe batch. The oracle is q48/q73's: append vs
     //    rebuild must be result-invisible under the frozen quantizer. ──
     QueryDef("q130_ann_index_append", IvfSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val n = emb.count()
       val dir = java.nio.file.Files
         .createTempDirectory("graft-ivf-append").toString
@@ -546,16 +687,7 @@ object LlmQueries {
     //    oracle replays BOTH paths (q48's and q23's proven CTEs) and the
     //    per-query intersection. ──
     QueryDef("q133_ann_recall",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-        |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
-        |assign AS (
-        |  SELECT id, cid AS cell FROM (
-        |    SELECT c.id, t.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.id
-        |        ORDER BY round(list_inner_product(c.vec, t.cvec) / (c.n * t.cn), 6)
-        |                 DESC, t.cid) AS rk
-        |    FROM w c, cents t) WHERE rk = 1),
+      s"""WITH $IvfAssignCtes,
         |probes AS (
         |  SELECT id AS query_id, cid AS cell FROM (
         |    SELECT c.id, t.cid,
@@ -591,11 +723,8 @@ object LlmQueries {
         |    // nt.n_truth AS BIGINT) AS recall_ppm
         |FROM nt LEFT JOIN h USING (query_id)
         |ORDER BY query_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val dir = java.nio.file.Files
         .createTempDirectory("graft-ivf-recall").toString
       Similarity.ivfIndex(emb, cents)
@@ -617,16 +746,7 @@ object LlmQueries {
     //    replays assignment (q48's proven CTE) + the within-cell pair
     //    count. ──
     QueryDef("q139_semdedup",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-        |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
-        |assign AS (
-        |  SELECT id, cid AS cell FROM (
-        |    SELECT c.id, t.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.id
-        |        ORDER BY round(list_inner_product(c.vec, t.cvec) / (c.n * t.cn), 6)
-        |                 DESC, t.cid) AS rk
-        |    FROM w c, cents t) WHERE rk = 1),
+      s"""WITH $IvfAssignCtes,
         |d AS (
         |  SELECT a.id, count(*) AS n_dups
         |  FROM assign a JOIN assign b ON a.cell = b.cell AND b.id < a.id
@@ -638,11 +758,8 @@ object LlmQueries {
         |  CAST(d.n_dups IS NULL AS INT) AS keep
         |FROM assign a LEFT JOIN d ON a.id = d.id
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       Similarity.semDedup(emb, "id", "vec", cents, threshold = 0.35)
         .select(col("id").as("vec_id"), col("cell"), col("n_dups"),
           col("keep"))
@@ -670,9 +787,8 @@ object LlmQueries {
         |    ELSE list_max([abs(x - floor(x * 127.0 / am + 0.5) * am / 127.0)
         |                   FOR x IN vec]) END, 6) AS max_abs_err
         |FROM m ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = Tables.embeddings(s, d)
+        .select(col("vec_id"), SharedFrames.embVec)
       Similarity.scalarQuantizeInt8(emb, "vec_id", "vec")
         .select(col("vec_id"), col("absmax"),
           array_join(transform(col("codes"), _.cast("string")), " ")
@@ -834,8 +950,7 @@ object LlmQueries {
     //    between-refresh alert. Oracle replays assignment (q145's CTE),
     //    per-dim decimal means, and the cosine ladder. ──
     QueryDef("q196_ivf_drift",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
+      s"""WITH $EmbNormCtes,
         |cents AS (SELECT id AS cid, vec AS cvec FROM w WHERE id < 16),
         |assign AS (
         |  SELECT id, cid AS cell FROM (
@@ -869,10 +984,8 @@ object LlmQueries {
         |SELECT CAST(cell AS INT) AS cell, n, drift_ppm,
         |  CAST(coalesce(drift_ppm > 190000, FALSE) AS INT) AS refit
         |FROM rep ORDER BY cell""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       Similarity.ivfCellDrift(Similarity.ivfIndex(emb, cents), cents,
           driftPpm = 190000L)
         .orderBy("cell")
@@ -886,16 +999,7 @@ object LlmQueries {
     //    oracle replays the full chain: assignment, within-cell dedup,
     //    survivor token table, c-TF-IDF ranking. ──
     QueryDef("q145_semdedup_labels",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-        |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
-        |assign AS (
-        |  SELECT id, cid AS cell FROM (
-        |    SELECT c.id, t.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.id
-        |        ORDER BY round(list_inner_product(c.vec, t.cvec) / (c.n * t.cn), 6)
-        |                 DESC, t.cid) AS rk
-        |    FROM w c, cents t) WHERE rk = 1),
+      s"""WITH $IvfAssignCtes,
         |dups AS (
         |  SELECT DISTINCT a.id
         |  FROM assign a JOIN assign b ON a.cell = b.cell AND b.id < a.id
@@ -904,7 +1008,7 @@ object LlmQueries {
         |keepd AS (SELECT a.id, a.cell FROM assign a
         |          LEFT JOIN dups USING (id) WHERE dups.id IS NULL),
         |toks AS (SELECT CAST(k.cell AS INT) AS cluster,
-        |    unnest(regexp_split_to_array(lower(trim(t.text)), '\s+')) AS term
+        |    unnest(regexp_split_to_array(lower(trim(t.text)), '\\s+')) AS term
         |  FROM keepd k JOIN documents t ON t.doc_id = k.id
         |  WHERE trim(t.text) <> ''),
         |tf AS (SELECT cluster, term, count(*) AS tf FROM toks
@@ -921,11 +1025,8 @@ object LlmQueries {
         |  CAST(rank AS INT) AS rank
         |FROM r WHERE rank <= 5
         |ORDER BY cluster, rank""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val kept = Similarity.semDedup(emb, "id", "vec", cents,
           threshold = 0.35)
         .where(col("keep") === 1).select(col("id"), col("cell"))
@@ -944,16 +1045,7 @@ object LlmQueries {
     //    lexical tier (q70/q74 span matching) misses. Cross-cell leaks
     //    missed BY DESIGN (same contract as q139). ──
     QueryDef("q147_cross_semdedup",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-        |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
-        |assign AS (
-        |  SELECT id, cid AS cell FROM (
-        |    SELECT c.id, t.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY c.id
-        |        ORDER BY round(list_inner_product(c.vec, t.cvec) / (c.n * t.cn), 6)
-        |                 DESC, t.cid) AS rk
-        |    FROM w c, cents t) WHERE rk = 1),
+      s"""WITH $IvfAssignCtes,
         |c AS (SELECT * FROM assign WHERE id % 10 <> 0),
         |r AS (SELECT * FROM assign WHERE id % 10 = 0),
         |d AS (
@@ -967,11 +1059,8 @@ object LlmQueries {
         |  CAST(d.n_contam IS NULL AS INT) AS keep
         |FROM c LEFT JOIN d ON c.id = d.id
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       Similarity.crossSemDedup(emb.where(col("id") % 10 =!= 0),
           emb.where(col("id") % 10 === 0), "id", "vec", cents,
           threshold = 0.35)
@@ -987,7 +1076,7 @@ object LlmQueries {
     //    rounding dependence before the 6-dp publish). A quarter of the
     //    scan bytes of q23 at the same plan shape. ──
     QueryDef("q148_int8_topk",
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
         |m AS (SELECT vec_id, vec,
         |        list_max([abs(x) FOR x IN vec]) AS am FROM v),
         |q8 AS (SELECT vec_id,
@@ -1002,15 +1091,9 @@ object LlmQueries {
         |         ELSE round(list_inner_product(q.c, c.c) / (q.n * c.n), 6)
         |    END AS sim
         |  FROM q, n8 c WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, sim, rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-        |                               ORDER BY sim DESC, neighbor_id) AS rank
-        |  FROM scored)
-        |WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+        |$TopKSql""".stripMargin) { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+        .select(col("vec_id"), SharedFrames.embVec)
       val codes = Similarity.scalarQuantizeInt8(emb, "vec_id", "vec")
       Similarity.int8TopK(codes.where(col("vec_id") % 50 === 0), codes,
           "vec_id", k = 10)
@@ -1062,15 +1145,7 @@ object LlmQueries {
         |    // nt.n_truth AS BIGINT) AS recall_ppm
         |FROM nt LEFT JOIN h ON h.query_id = nt.query_id
         |ORDER BY nt.query_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val queries = emb.where(col("id") % 50 === 0)
-      val truth = Similarity.bruteForceTopK(queries, emb, k = 10)
-      val codes = Similarity.scalarQuantizeInt8(
-        emb.withColumnRenamed("id", "vec_id"), "vec_id", "vec")
-      val approx = Similarity.int8TopK(
-        codes.where(col("vec_id") % 50 === 0), codes, "vec_id", k = 10)
+      val (truth, approx) = int8AndFloatTopK(s, d)
       Similarity.topKRecall(approx, truth).orderBy("query_id")
     },
 
@@ -1106,18 +1181,7 @@ object LlmQueries {
     //    doc's worth of mass in expectation, no copy is lost. Same pair
     //    graph + closure as q57. ──
     QueryDef("q151_soft_dedup",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
-         |asg AS (SELECT d.doc_id,
-         |          COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |        FROM documents d LEFT JOIN comp c USING (doc_id)),
+      s"""WITH RECURSIVE $JaccardAssignCtes,
          |sz AS (SELECT cluster_id, count(*) AS cluster_size
          |       FROM asg GROUP BY 1)
          |SELECT a.doc_id, a.cluster_id,
@@ -1171,10 +1235,8 @@ object LlmQueries {
     //    The oracle replays assignment, within-cell ranking, edge
     //    symmetrization, and the recursive closure. ──
     QueryDef("q154_semantic_components",
-      """WITH RECURSIVE
-        |v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-        |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
+      s"""WITH RECURSIVE
+        |$FrozenCentsCtes,
         |assign AS (
         |  SELECT id, cid AS cell FROM (
         |    SELECT c.id, t.cid,
@@ -1191,23 +1253,13 @@ object LlmQueries {
         |knn AS (SELECT qid, nid FROM (
         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
         |      ORDER BY sim DESC, nid) AS rk FROM sc) WHERE rk <= 3),
-        |e AS (SELECT qid AS u, nid AS v FROM knn
-        |      UNION SELECT nid, qid FROM knn),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM e
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-        |comp AS (SELECT u AS id, LEAST(u, MIN(v)) AS cluster_id
-        |         FROM reach GROUP BY u)
+        |${closureCtes("knn", "qid", "nid", "id")}
         |SELECT w.id AS vec_id, COALESCE(c.cluster_id, w.id) AS cluster_id,
         |  CAST(COALESCE(c.cluster_id, w.id) = w.id AS INT) AS keep
         |FROM w LEFT JOIN comp c ON c.id = w.id
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val edges = Similarity.knnGraph(emb, "id", "vec", cents, k = 3)
         .select(col("id").as("doc_a"), col("neighbor_id").as("doc_b"))
       Dedup.dedupAssign(emb.select(col("id")), "id", edges)
@@ -1221,18 +1273,7 @@ object LlmQueries {
     //    The complement of q123's hard negatives: the dedup tier's
     //    byproduct IS the supervised contrastive training set. ──
     QueryDef("q155_positive_pairs",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
-         |asg AS (SELECT d.doc_id,
-         |          COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |        FROM documents d LEFT JOIN comp c USING (doc_id)),
+      s"""WITH RECURSIVE $JaccardAssignCtes,
          |mult AS (SELECT cluster_id FROM asg GROUP BY 1
          |         HAVING count(*) > 1),
          |mem AS (SELECT a.cluster_id, a.doc_id,
@@ -1357,8 +1398,7 @@ object LlmQueries {
     //    mutual-argmax flag. Full chain replayed: sims, per-side top-4
     //    decimal means, margins, both argmaxes. ──
     QueryDef("q158_bitext_margin",
-      """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-        |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
+      s"""WITH $EmbNormCtes,
         |s AS (SELECT id AS sid, vec, n FROM w WHERE id % 10 = 0 AND n <> 0),
         |t2 AS (SELECT id AS tid, vec, n FROM w WHERE id % 10 <> 0 AND n <> 0),
         |sc AS (SELECT sid, tid,
@@ -1392,9 +1432,7 @@ object LlmQueries {
         |  CAST(b.sid IS NOT NULL AS INT) AS mutual
         |FROM fwd f LEFT JOIN bwd b ON b.sid = f.sid AND b.tid = f.tid
         |ORDER BY src_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d)
       Similarity.marginPairs(emb.where(col("id") % 10 === 0),
           emb.where(col("id") % 10 =!= 0), "id", "vec", k = 4)
         .orderBy("src_id")
@@ -1435,36 +1473,7 @@ object LlmQueries {
     //    the oracle from the op's own constants (shared-literal
     //    lockstep). ──
     QueryDef("q160_rbo_int8",
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-         |w AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS n
-         |      FROM v),
-         |tq AS (SELECT * FROM w WHERE vec_id % 50 = 0),
-         |tsc AS (
-         |  SELECT tq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    round(list_inner_product(tq.vec, c.vec) / (tq.n * c.n), 6) AS sim
-         |  FROM tq, w c WHERE c.vec_id <> tq.vec_id),
-         |ra AS (SELECT query_id, neighbor_id, rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rank FROM tsc)
-         |  WHERE rank <= 10),
-         |m AS (SELECT vec_id, vec, list_max([abs(x) FOR x IN vec]) AS am
-         |      FROM v),
-         |q8 AS (SELECT vec_id,
-         |        CASE WHEN am = 0 THEN [0.0 FOR x IN vec]
-         |             ELSE [floor(x * 127.0 / am + 0.5) FOR x IN vec]
-         |        END AS c FROM m),
-         |n8 AS (SELECT vec_id, c, sqrt(list_inner_product(c, c)) AS n FROM q8),
-         |aq AS (SELECT * FROM n8 WHERE vec_id % 50 = 0),
-         |asc0 AS (
-         |  SELECT aq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    CASE WHEN aq.n * c.n = 0 THEN 0.0
-         |         ELSE round(list_inner_product(aq.c, c.c) / (aq.n * c.n), 6)
-         |    END AS sim
-         |  FROM aq, n8 c WHERE c.vec_id <> aq.vec_id),
-         |rb AS (SELECT query_id, neighbor_id, rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rank FROM asc0)
-         |  WHERE rank <= 10),
+      s"""WITH $Int8RankCtes,
          |mt AS (SELECT ra.query_id,
          |         greatest(ra.rank, rb.rank) AS md
          |       FROM ra JOIN rb ON rb.query_id = ra.query_id
@@ -1477,15 +1486,7 @@ object LlmQueries {
          |FROM (SELECT DISTINCT query_id FROM ra) q
          |LEFT JOIN sc2 USING (query_id)
          |ORDER BY query_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val queries = emb.where(col("id") % 50 === 0)
-      val truth = Similarity.bruteForceTopK(queries, emb, k = 10)
-      val codes = Similarity.scalarQuantizeInt8(
-        emb.withColumnRenamed("id", "vec_id"), "vec_id", "vec")
-      val approx = Similarity.int8TopK(
-        codes.where(col("vec_id") % 50 === 0), codes, "vec_id", k = 10)
+      val (truth, approx) = int8AndFloatTopK(s, d)
       Similarity.rankBiasedOverlap(truth, approx, k = 10, p = 0.9)
         .orderBy("query_id")
     },
@@ -1497,36 +1498,7 @@ object LlmQueries {
     //    published as SIGNED integer ppm via one integral division
     //    (sign split, div ≡ //) — never a rounded double ratio. ──
     QueryDef("q205_kendall_tau",
-      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-         |w AS (SELECT vec_id, vec, sqrt(list_inner_product(vec, vec)) AS n
-         |      FROM v),
-         |tq AS (SELECT * FROM w WHERE vec_id % 50 = 0),
-         |tsc AS (
-         |  SELECT tq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    round(list_inner_product(tq.vec, c.vec) / (tq.n * c.n), 6) AS sim
-         |  FROM tq, w c WHERE c.vec_id <> tq.vec_id),
-         |ra AS (SELECT query_id, neighbor_id, rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rank FROM tsc)
-         |  WHERE rank <= 10),
-         |m AS (SELECT vec_id, vec, list_max([abs(x) FOR x IN vec]) AS am
-         |      FROM v),
-         |q8 AS (SELECT vec_id,
-         |        CASE WHEN am = 0 THEN [0.0 FOR x IN vec]
-         |             ELSE [floor(x * 127.0 / am + 0.5) FOR x IN vec]
-         |        END AS c FROM m),
-         |n8 AS (SELECT vec_id, c, sqrt(list_inner_product(c, c)) AS n FROM q8),
-         |aq AS (SELECT * FROM n8 WHERE vec_id % 50 = 0),
-         |asc0 AS (
-         |  SELECT aq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    CASE WHEN aq.n * c.n = 0 THEN 0.0
-         |         ELSE round(list_inner_product(aq.c, c.c) / (aq.n * c.n), 6)
-         |    END AS sim
-         |  FROM aq, n8 c WHERE c.vec_id <> aq.vec_id),
-         |rb AS (SELECT query_id, neighbor_id, rank FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY sim DESC, neighbor_id) AS rank FROM asc0)
-         |  WHERE rank <= 10),
+      s"""WITH $Int8RankCtes,
          |shared AS (SELECT ra.query_id, ra.neighbor_id,
          |             ra.rank AS rka, rb.rank AS rkb
          |           FROM ra JOIN rb ON rb.query_id = ra.query_id
@@ -1556,15 +1528,7 @@ object LlmQueries {
          |  END AS tau_ppm
          |FROM nn LEFT JOIN cd USING (query_id)
          |ORDER BY query_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val queries = emb.where(col("id") % 50 === 0)
-      val truth = Similarity.bruteForceTopK(queries, emb, k = 10)
-      val codes = Similarity.scalarQuantizeInt8(
-        emb.withColumnRenamed("id", "vec_id"), "vec_id", "vec")
-      val approx = Similarity.int8TopK(
-        codes.where(col("vec_id") % 50 === 0), codes, "vec_id", k = 10)
+      val (truth, approx) = int8AndFloatTopK(s, d)
       Similarity.kendallTau(truth, approx).orderBy("query_id")
     },
 
@@ -1596,8 +1560,7 @@ object LlmQueries {
         |FROM a
         |ORDER BY d""".stripMargin) { (s, d) =>
       Similarity.embeddingStats(
-          Tables.embeddings(s, d).select(col("vec_id"),
-            transform(col("embedding"), _.cast("double")).as("vec")),
+          Tables.embeddings(s, d).select(col("vec_id"), SharedFrames.embVec),
           "vec_id", "vec", dim = 64)
         .orderBy("d")
     },
@@ -1697,21 +1660,11 @@ object LlmQueries {
     //    no division until the end); NMI uses integer-weighted round-6
     //    entropies summed as decimal. ──
     QueryDef("q163_cluster_agreement",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
+      s"""WITH RECURSIVE $JaccardClosureCtes,
          |asg AS (SELECT d.doc_id AS id,
          |          COALESCE(c.cluster_id, d.doc_id) AS a
          |        FROM documents d LEFT JOIN comp c USING (doc_id)),
-         |v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-         |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
-         |cents AS (SELECT id AS cid, vec AS cvec, n AS cn FROM w WHERE id < 16),
+         |$FrozenCentsCtes,
          |assign AS (
          |  SELECT id, cid AS b FROM (
          |    SELECT c.id, t.cid,
@@ -2075,14 +2028,7 @@ object LlmQueries {
     //    Sorting by |llr| names WHICH features moved — the actionable
     //    form of a drift alarm. ──
     QueryDef("q135_corpus_drift",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |        CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 4096 AS bucket
-        |      FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-        |      WHERE tok <> ''),
+      s"""WITH ${tokBucketCtes(4096, "bucket")},
         |cb AS (SELECT bucket, count(*) AS n_batch FROM s
         |       WHERE doc_id % 10 = 0 GROUP BY 1),
         |cr AS (SELECT bucket, count(*) AS n_ref FROM s
@@ -2434,18 +2380,7 @@ object LlmQueries {
     //    dedup strategy). Singletons included; n_docs = size·clusters
     //    so Σ n_docs = corpus size (self-checking). ──
     QueryDef("q194_dedup_impact",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
-         |asg AS (SELECT d.doc_id,
-         |          COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |        FROM documents d LEFT JOIN comp c USING (doc_id)),
+      s"""WITH RECURSIVE $JaccardAssignCtes,
          |cs AS (SELECT cluster_id, count(*) AS sz FROM asg GROUP BY 1)
          |SELECT CAST(sz AS BIGINT) AS cluster_size,
          |  count(*) AS n_clusters,
@@ -2465,15 +2400,7 @@ object LlmQueries {
     //    of each near-dup cluster, full doc rows out — the end-to-end
     //    "dedup this corpus" op (q21's pair-drop over-deletes on chains). ──
     QueryDef("q64_cluster_dedup",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u)
+      s"""WITH RECURSIVE $JaccardClosureCtes
          |SELECT d.doc_id, d.lang, d.n_chars
          |FROM documents d LEFT JOIN comp c USING (doc_id)
          |WHERE COALESCE(c.cluster_id, d.doc_id) = d.doc_id
@@ -2492,15 +2419,7 @@ object LlmQueries {
     //    doc). Same pair graph + closure as q57; the keeper rule is an
     //    argmax window over the flagged minority only. ──
     QueryDef("q68_dedup_best",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
+      s"""WITH RECURSIVE $JaccardClosureCtes,
          |asg AS (
          |  SELECT d.doc_id, d.n_chars,
          |         COALESCE(c.cluster_id, d.doc_id) AS cluster_id
@@ -2525,32 +2444,7 @@ object LlmQueries {
     //    removeMatchingSpans can excise instead of quarantine). Benchmark
     //    = doc_id % 50 = 0, corpus = the rest, as q65. ──
     QueryDef("q70_decontam_spans",
-      """WITH d0 AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1 AND doc_id % 50 <> 0),
-        |b0 AS (
-        |  SELECT text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1 AND doc_id % 50 = 0),
-        |pos AS (
-        |  SELECT doc_id, text, len,
-        |    unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM d0),
-        |g AS (SELECT doc_id, len, p, substr(text, p::INT, 50) AS gram FROM pos),
-        |bpos AS (
-        |  SELECT text, unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM b0),
-        |bg AS (SELECT DISTINCT substr(text, p::INT, 50) AS gram FROM bpos),
-        |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN bg USING (gram)),
-        |w AS (
-        |  SELECT doc_id, p, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY p
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM f),
-        |isl AS (
-        |  SELECT doc_id, p, e,
-        |    sum(CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM w)
+      s"""WITH $BenchSpanCtes
         |SELECT doc_id, min(p) AS span_start, max(e) AS span_end,
         |       count(*) AS n_grams
         |FROM isl GROUP BY doc_id, island
@@ -2572,50 +2466,8 @@ object LlmQueries {
     //    are re-verified exactly, so the md5 of the cleaned text must
     //    match the oracle's hash-free replay bit-for-bit. ──
     QueryDef("q74_decontam_bloom",
-      """WITH d0 AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1 AND doc_id % 50 <> 0),
-        |b0 AS (
-        |  SELECT text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1 AND doc_id % 50 = 0),
-        |pos AS (
-        |  SELECT doc_id, text, len,
-        |    unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM d0),
-        |g AS (SELECT doc_id, len, p, substr(text, p::INT, 50) AS gram FROM pos),
-        |bpos AS (
-        |  SELECT text, unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM b0),
-        |bg AS (SELECT DISTINCT substr(text, p::INT, 50) AS gram FROM bpos),
-        |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN bg USING (gram)),
-        |w AS (
-        |  SELECT doc_id, p, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY p
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM f),
-        |isl AS (
-        |  SELECT doc_id, p, e,
-        |    sum(CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM w),
-        |sp AS (SELECT doc_id, min(p) AS s, max(e) AS e
-        |       FROM isl GROUP BY doc_id, island),
-        |gaps AS (
-        |  SELECT doc_id, s, e,
-        |    lag(e, 1, 0) OVER (PARTITION BY doc_id ORDER BY s) AS pe
-        |  FROM sp),
-        |tails AS (SELECT doc_id, max(e) AS me FROM sp GROUP BY doc_id),
-        |pieces AS (
-        |  SELECT g2.doc_id, g2.s AS ord,
-        |    substr(d0.text, CAST(g2.pe + 1 AS INT), CAST(g2.s - g2.pe - 1 AS INT)) AS piece
-        |  FROM gaps g2 JOIN d0 USING (doc_id)
-        |  UNION ALL
-        |  SELECT t.doc_id, 2147483647 AS ord,
-        |    substr(d0.text, CAST(t.me + 1 AS INT)) AS piece
-        |  FROM tails t JOIN d0 USING (doc_id)),
-        |cleaned AS (
-        |  SELECT doc_id, coalesce(string_agg(piece, '' ORDER BY ord), '') AS ct
-        |  FROM pieces GROUP BY doc_id)
+      s"""WITH $BenchSpanCtes,
+        |$DespanCtes
         |SELECT d.doc_id, length(coalesce(c.ct, d.text)) AS clean_len,
         |       md5(coalesce(c.ct, d.text)) AS clean_md5
         |FROM (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0) d
@@ -2784,15 +2636,7 @@ object LlmQueries {
     //    id against driver-computed integer bands (0.8/0.1/0.1); oracle
     //    replays the q57 recursive-CTE components + the q78 md5 trick. ──
     QueryDef("q79_leakage_split",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
+      s"""WITH RECURSIVE $JaccardClosureCtes,
          |a AS (SELECT d.doc_id,
          |        COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
          |        CAST(COALESCE(c.cluster_id, d.doc_id) = d.doc_id AS INT)
@@ -2840,22 +2684,8 @@ object LlmQueries {
     //    the mean publishes as integer ppm (micro-sum // count — never a
     //    rounded double ratio, the q171 divergence class). ──
     QueryDef("q81_lm_score",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |bg AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
-        |         FOR i IN generate_series(1, len(toks)-1)]) AS g FROM t),
-        |c12 AS (SELECT g, count(*) AS c12 FROM bg GROUP BY 1),
-        |ctx AS (SELECT split_part(g, ' ', 1) AS w1, sum(c12) AS c1
-        |        FROM c12 GROUP BY 1),
-        |v AS (SELECT count(DISTINCT tok) AS v
-        |      FROM (SELECT unnest(toks) AS tok FROM t)),
-        |lp AS (SELECT doc_id,
-        |         CAST(round(-ln((c12 + 1.0) / (c1 + 1.0 * v)), 6)
-        |              AS DECIMAL(18,6)) AS lp
-        |       FROM bg JOIN c12 USING (g)
-        |       JOIN ctx ON ctx.w1 = split_part(g, ' ', 1) CROSS JOIN v),
+      s"""WITH $TokCte,
+        |$BigramLpCtes,
         |d AS (SELECT doc_id, count(*) AS n_bigrams,
         |        CAST(CAST(sum(lp) * 1000000 AS HUGEINT) // count(*)
         |          AS BIGINT) AS ce_ppm
@@ -2873,14 +2703,7 @@ object LlmQueries {
     //    w(b) = (b % 2001 − 1000)/1000 so the oracle can replay inference
     //    exactly; integer micro-unit sum — no float agg anywhere. ──
     QueryDef("q82_classifier_score",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |        CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 65536 AS bkt
-        |      FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-        |      WHERE tok <> ''),
+      s"""WITH ${tokBucketCtes(65536)},
         |d AS (SELECT doc_id, count(*) AS n_toks,
         |        sum((bkt % 2001) - 1000) AS sm FROM s GROUP BY 1),
         |f AS (SELECT doc_id, n_toks,
@@ -2905,14 +2728,7 @@ object LlmQueries {
     //    smoothing; per-doc log-weight = decimal-exact sum of per-bucket
     //    6-dp-rounded ratios over the doc's token instances. ──
     QueryDef("q83_dsir_weights",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |        CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 4096 AS bkt
-        |      FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-        |      WHERE tok <> ''),
+      s"""WITH ${tokBucketCtes(4096)},
         |ct AS (SELECT bkt, count(*) AS ct FROM s JOIN documents USING (doc_id)
         |       WHERE source = 'src0' GROUP BY 1),
         |cr AS (SELECT bkt, count(*) AS cr FROM s GROUP BY 1),
@@ -2944,14 +2760,7 @@ object LlmQueries {
     //    oracle replays inference AND argmax exactly. Empty docs get NULL
     //    lang/score — no evidence, no verdict. ──
     QueryDef("q125_lang_id",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |        CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 65536 AS bkt
-        |      FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-        |      WHERE tok <> ''),
+      s"""WITH ${tokBucketCtes(65536)},
         |cls(lang, p, q) AS (VALUES ('de', 3, 17), ('en', 5, 29), ('fr', 7, 41)),
         |d AS (SELECT doc_id, lang, count(*) AS n_toks,
         |        sum(((bkt * p + q) % 2001) - 1000) AS sm
@@ -2985,10 +2794,7 @@ object LlmQueries {
     //    space-joined for the cross-engine compare (the op itself returns
     //    array<long>). ──
     QueryDef("q84_vocab_encode",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
+      s"""WITH $TokCte,
         |cnt AS (SELECT tok, count(*) AS c
         |        FROM (SELECT unnest(toks) AS tok FROM t)
         |        WHERE tok <> '' GROUP BY 1),
@@ -3011,12 +2817,8 @@ object LlmQueries {
         |  coalesce(input_ids, '') AS input_ids
         |FROM documents LEFT JOIN d USING (doc_id)
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.ops.Export.vocabEncode(Tables.documents(s, d), "doc_id", "text",
-          vocabSize = 50, oovBuckets = 256)
-        .select(col("doc_id"), col("n_toks"),
-          concat_ws(" ", transform(col("input_ids"), x => x.cast("string")))
-            .as("input_ids"))
-        .orderBy("doc_id")
+      idsAsText(graft.ops.Export.vocabEncode(Tables.documents(s, d),
+        "doc_id", "text", vocabSize = 50, oovBuckets = 256))
     },
 
     // ── curation end-to-end: the full shaping chain COMPOSED — classifier
@@ -3026,14 +2828,7 @@ object LlmQueries {
     //    oracle-proven; this query proves they compose without hidden
     //    coupling (score ties, band hashing, copy_id lineage). ──
     QueryDef("q85_curation_e2e",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-        |             AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id,
-        |        CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % 65536 AS bkt
-        |      FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-        |      WHERE tok <> ''),
+      s"""WITH ${tokBucketCtes(65536)},
         |d AS (SELECT doc_id, count(*) AS n_toks,
         |        sum((bkt % 2001) - 1000) AS sm FROM s GROUP BY 1),
         |sc AS (SELECT doc_id,
@@ -3107,12 +2902,7 @@ object LlmQueries {
     //    rounded to 6 dp and summed as DECIMAL(18,6) (the q81 pattern), so
     //    the doc score is order-of-addition-proof across engines. ──
     QueryDef("q87_bm25",
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term <> '' GROUP BY 1, 2),
+      s"""WITH $TermFreqCtes,
         |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
         |          FROM dl),
@@ -3191,7 +2981,7 @@ object LlmQueries {
     //    dropping truncated shards and wholesale quotes — the composition
     //    that makes q69 actionable. ──
     QueryDef("q71_shard_dedup",
-      """WITH RECURSIVE g AS (
+      s"""WITH RECURSIVE g AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    [substr(text, i::INT, 8) FOR i IN generate_series(1, greatest(length(text)-7, 1))]
         |  )) AS gram FROM documents
@@ -3205,14 +2995,7 @@ object LlmQueries {
         |  JOIN sizes sa ON sa.doc_id = doc_a
         |  JOIN sizes sb ON sb.doc_id = doc_b
         |  WHERE CAST(c AS DOUBLE) / least(sa.n, sb.n) >= 0.9),
-        |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-        |      UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM e
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-        |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-        |         FROM reach GROUP BY u),
+        |${closureCtes("pairs", "doc_a", "doc_b", "doc_id")},
         |asg AS (
         |  SELECT d.doc_id, d.n_chars,
         |         COALESCE(c.cluster_id, d.doc_id) AS cluster_id
@@ -3263,12 +3046,7 @@ object LlmQueries {
     //    frequency, tf·ln(N/df) rounded to 6 dp (cross-engine ln contract,
     //    as with the ANN cosine scores). ──
     QueryDef("q59_tfidf",
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term <> '' GROUP BY 1, 2),
+      s"""WITH $TermFreqCtes,
         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
         |n AS (SELECT count(*) AS n FROM documents)
         |SELECT doc_id, term, tf, df,
@@ -3285,26 +3063,7 @@ object LlmQueries {
     //    intervals (the exact-substring dedup shape). Spark flags windows
     //    by positional 64-bit hash; the oracle by the gram text itself. ──
     QueryDef("q60_dup_spans",
-      """WITH d0 AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1),
-        |pos AS (
-        |  SELECT doc_id, text, len,
-        |    unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM d0),
-        |g AS (SELECT doc_id, len, p, substr(text, p::INT, 50) AS gram FROM pos),
-        |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-        |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN dup USING (gram)),
-        |w AS (
-        |  SELECT doc_id, p, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY p
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM f),
-        |isl AS (
-        |  SELECT doc_id, p, e,
-        |    sum(CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM w)
+      s"""WITH $DupSpanCtes
         |SELECT doc_id, min(p) AS span_start, max(e) AS span_end,
         |       count(*) AS n_grams
         |FROM isl GROUP BY doc_id, island
@@ -3319,44 +3078,8 @@ object LlmQueries {
     //    pass through). Compared by length + md5 of the cleaned text —
     //    both engines must produce the byte-identical surgery. ──
     QueryDef("q67_despan",
-      """WITH d0 AS (
-        |  SELECT doc_id, text, length(text) AS len FROM documents
-        |  WHERE length(text) >= 1),
-        |pos AS (
-        |  SELECT doc_id, text, len,
-        |    unnest(generate_series(1, greatest(len - 49, 1))) AS p
-        |  FROM d0),
-        |g AS (SELECT doc_id, len, p, substr(text, p::INT, 50) AS gram FROM pos),
-        |dup AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
-        |f AS (SELECT doc_id, p, least(p + 49, len) AS e FROM g JOIN dup USING (gram)),
-        |w AS (
-        |  SELECT doc_id, p, e,
-        |    max(e) OVER (PARTITION BY doc_id ORDER BY p
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM f),
-        |isl AS (
-        |  SELECT doc_id, p, e,
-        |    sum(CASE WHEN pm IS NULL OR p > pm + 1 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island
-        |  FROM w),
-        |sp AS (SELECT doc_id, min(p) AS s, max(e) AS e
-        |       FROM isl GROUP BY doc_id, island),
-        |gaps AS (
-        |  SELECT doc_id, s, e,
-        |    lag(e, 1, 0) OVER (PARTITION BY doc_id ORDER BY s) AS pe
-        |  FROM sp),
-        |tails AS (SELECT doc_id, max(e) AS me FROM sp GROUP BY doc_id),
-        |pieces AS (
-        |  SELECT g2.doc_id, g2.s AS ord,
-        |    substr(d0.text, CAST(g2.pe + 1 AS INT), CAST(g2.s - g2.pe - 1 AS INT)) AS piece
-        |  FROM gaps g2 JOIN d0 USING (doc_id)
-        |  UNION ALL
-        |  SELECT t.doc_id, 2147483647 AS ord,
-        |    substr(d0.text, CAST(t.me + 1 AS INT)) AS piece
-        |  FROM tails t JOIN d0 USING (doc_id)),
-        |cleaned AS (
-        |  SELECT doc_id, coalesce(string_agg(piece, '' ORDER BY ord), '') AS ct
-        |  FROM pieces GROUP BY doc_id)
+      s"""WITH $DupSpanCtes,
+        |$DespanCtes
         |SELECT d.doc_id, length(coalesce(c.ct, d.text)) AS clean_len,
         |       md5(coalesce(c.ct, d.text)) AS clean_md5
         |FROM documents d LEFT JOIN cleaned c USING (doc_id)
@@ -3441,12 +3164,8 @@ object LlmQueries {
     //    hashed-OOV tail keeps q84's contract for symbols outside the
     //    48-entry vocab. ──
     QueryDef("q91_bpe_encode", BpeOracleSql) { (s, d) =>
-      graft.ops.Export.bpeEncode(Tables.documents(s, d), "doc_id", "text",
-          BpeMerges, BpeVocab, oovBuckets = 256)
-        .select(col("doc_id"), col("n_toks"),
-          concat_ws(" ", transform(col("input_ids"), x => x.cast("string")))
-            .as("input_ids"))
-        .orderBy("doc_id")
+      idsAsText(graft.ops.Export.bpeEncode(Tables.documents(s, d),
+        "doc_id", "text", BpeMerges, BpeVocab, oovBuckets = 256))
     },
 
     // ── q92: PQ-compressed ANN with exact re-rank — the index-storage
@@ -3460,11 +3179,8 @@ object LlmQueries {
     //    never what the ranks/sims are. SimilaritySpec asserts the
     //    compression ratio and the recall margin. ──
     QueryDef("q92_ann_pq", BruteTopKSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       // Fit on the bounded md5-ordered sample (the production contract —
       // fit cost capped independent of corpus size); the re-rank margin
       // absorbs the codebook drift, so the oracle equality is unchanged.
@@ -3492,12 +3208,8 @@ object LlmQueries {
     //    order the kernel's DP uses — so the two engines can only agree
     //    if the DP is exactly the enumeration argmax. ──
     QueryDef("q93_unigram_encode", UnigramOracleSql) { (s, d) =>
-      graft.ops.Unigram.unigramEncode(Tables.documents(s, d), "doc_id",
-          "text", UnigramPieces, oovBuckets = 256)
-        .select(col("doc_id"), col("n_toks"),
-          concat_ws(" ", transform(col("input_ids"), x => x.cast("string")))
-            .as("input_ids"))
-        .orderBy("doc_id")
+      idsAsText(graft.ops.Unigram.unigramEncode(Tables.documents(s, d),
+        "doc_id", "text", UnigramPieces, oovBuckets = 256))
     },
 
     // ── q94: residual (IVF-PQ) ANN — the production form of q92
@@ -3511,9 +3223,7 @@ object LlmQueries {
     //    wider margin (SimilaritySpec: 100/100 true rows at rerank=40
     //    where raw PQ keeps 88). ──
     QueryDef("q94_ann_ivfpq", BruteTopKSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d)
       val cents = Similarity.fitCentroids(emb, k = 16, iters = 2,
         maxSample = 4096)
       val books = Similarity.pqFitCodebooksResidual(emb, cents, dim = 64,
@@ -3591,10 +3301,7 @@ object LlmQueries {
     //    crosses the engine boundary. Oracle replays the identical merge
     //    chain (BpeChainSql, same pinned literals as q91). ──
     QueryDef("q104_bytes_per_token",
-      s"""WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END
-        |             AS toks
-        |           FROM documents),
+      s"""WITH $TokCte,
         |w AS (SELECT doc_id, toks[i] AS w
         |      FROM (SELECT doc_id, toks,
         |              unnest(generate_series(1, len(toks))) AS i FROM t)
@@ -3669,18 +3376,7 @@ object LlmQueries {
     //    Output is sketch-sized (distinct cluster sizes), the input one
     //    pass over the assignment table. ──
     QueryDef("q108_dedup_profile",
-      s"""WITH RECURSIVE pairs AS ($JaccardPairsSql),
-         |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |      UNION SELECT doc_b, doc_a FROM pairs),
-         |reach(u, v) AS (
-         |  SELECT u, v FROM e
-         |  UNION
-         |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-         |comp AS (SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-         |         FROM reach GROUP BY u),
-         |asg AS (SELECT d.doc_id,
-         |          COALESCE(c.cluster_id, d.doc_id) AS cluster_id
-         |        FROM documents d LEFT JOIN comp c USING (doc_id)),
+      s"""WITH RECURSIVE $JaccardAssignCtes,
          |sz AS (SELECT cluster_id, COUNT(*) AS cluster_size
          |       FROM asg GROUP BY 1)
          |SELECT cluster_size, COUNT(*) AS n_clusters,
@@ -3902,8 +3598,8 @@ object LlmQueries {
         |  (CASE WHEN s < 0 THEN -1 ELSE 1 END
         |     * (CAST(abs(s) * 1000000 AS HUGEINT) // n)) / 1000000.0 AS c, n
         |FROM a ORDER BY label, d""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("label"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = Tables.embeddings(s, d)
+        .select(col("label"), SharedFrames.embVec)
       graft.ops.Similarity.groupCentroids(emb, "label", "vec", dim = 64)
         .orderBy("label", "d")
     },
@@ -3957,7 +3653,7 @@ object LlmQueries {
         |FROM sp GROUP BY 1 ORDER BY label""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"),
         col("label"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+        SharedFrames.embVec)
       graft.ops.Similarity.silhouetteSimplified(emb, "id", "label", "vec",
           dim = 64)
         .orderBy("label")
@@ -4162,12 +3858,7 @@ object LlmQueries {
     //    serialize to a space-joined string at the query boundary (the
     //    q84 convention — declared queries emit SCALAR columns only). ──
     QueryDef("q179_inverted_index",
-      """WITH toks AS (SELECT doc_id,
-        |    unnest(CASE WHEN trim(text) = '' THEN []
-        |      ELSE regexp_split_to_array(lower(trim(text)), '\s+') END)
-        |      AS term
-        |  FROM documents),
-        |tk AS (SELECT DISTINCT doc_id, term FROM toks WHERE term <> ''),
+      s"""WITH $DocTermCtes,
         |df AS (SELECT term, count(*) AS df FROM tk GROUP BY 1),
         |rk AS (SELECT term, doc_id, row_number() OVER (
         |         PARTITION BY term ORDER BY doc_id) AS rn FROM tk),
@@ -4191,12 +3882,7 @@ object LlmQueries {
     //    directly from the documents (the contract's exactness
     //    condition, df == len(postings), holds). ──
     QueryDef("q182_index_search",
-      """WITH toks AS (SELECT doc_id,
-        |    unnest(CASE WHEN trim(text) = '' THEN []
-        |      ELSE regexp_split_to_array(lower(trim(text)), '\s+') END)
-        |      AS term
-        |  FROM documents),
-        |tk AS (SELECT DISTINCT doc_id, term FROM toks WHERE term <> '')
+      s"""WITH $DocTermCtes
         |SELECT doc_id FROM tk WHERE term IN ('query', 'window')
         |GROUP BY 1 HAVING count(DISTINCT term) = 2
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
@@ -4214,12 +3900,7 @@ object LlmQueries {
     //    at this corpus, so the oracle states ground truth directly from
     //    the documents (the exactness condition df == len(postings)). ──
     QueryDef("q198_index_search_ranked",
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-        |       WHERE term <> '' GROUP BY 1, 2),
+      s"""WITH $TermFreqCtes,
         |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
         |          FROM dl),
@@ -4343,10 +4024,8 @@ object LlmQueries {
         |      FROM v)
         |SELECT query_id, pred_label, votes FROM r WHERE rn = 1
         |ORDER BY query_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"),
-        col("label"))
+      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"),
+        SharedFrames.embVec, col("label"))
       graft.ops.Similarity.knnClassify(
           emb.where(col("id") % 50 === 0).select(col("id"), col("vec")),
           emb, "label", k = 10)
@@ -4472,8 +4151,7 @@ object LlmQueries {
     //    corpus size); the oracle replays the start arithmetic and list
     //    slicing in DuckDB. ──
     QueryDef("q132_chunk_tokens",
-      """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-        |             ELSE regexp_split_to_array(trim(text), '\s+') END
+      s"""WITH ${toksHead(13, lower = false)}
         |             AS toks
         |           FROM documents),
         |st AS (SELECT doc_id, toks,
@@ -4503,10 +4181,8 @@ object LlmQueries {
     //    the refreshed centroids, then assigns every vector directly —
     //    per-ID membership, the strongest equality check. ──
     QueryDef("q202_ivf_compact", IvfCompactSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents = SharedFrames.frozenCents(s, d, below = 16)
       val dir = java.nio.file.Files
         .createTempDirectory("graft-ivf-compact").toString
       Similarity.ivfIndex(emb, cents).write.mode("overwrite")
@@ -4551,11 +4227,8 @@ object LlmQueries {
     //    behind would carry residual codes against the wrong centroid
     //    and surface here as a wrong ADC shortlist. ──
     QueryDef("q204_pq_compact", BruteTopKSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(
-        col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
-      val cents0 = emb.where(col("id") < 16).orderBy(col("id")).collect()
-        .map(r => (r.getLong(0).toInt, r.getSeq[Double](1))).toSeq
+      val emb = SharedFrames.embOdd(s, d)
+      val cents0 = SharedFrames.frozenCents(s, d, below = 16)
       val books = Similarity.pqFitCodebooksResidual(emb, cents0, dim = 64,
         m = 32, ksub = 16, iters = 2, maxSample = 4096)
       val dir = java.nio.file.Files
@@ -4711,22 +4384,8 @@ object LlmQueries {
     * engine's two-level cum is result-invisible because the thresholds
     * are a pure function of the per-language score multiset. */
   private lazy val PplBucketsSql: String =
-    """WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-      |             ELSE regexp_split_to_array(lower(trim(text)), '\s+') END
-      |             AS toks
-      |           FROM documents),
-      |bg AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
-      |         FOR i IN generate_series(1, len(toks)-1)]) AS g FROM t),
-      |c12 AS (SELECT g, count(*) AS c12 FROM bg GROUP BY 1),
-      |ctx AS (SELECT split_part(g, ' ', 1) AS w1, sum(c12) AS c1
-      |        FROM c12 GROUP BY 1),
-      |v AS (SELECT count(DISTINCT tok) AS v
-      |      FROM (SELECT unnest(toks) AS tok FROM t)),
-      |lp AS (SELECT doc_id,
-      |         CAST(round(-ln((c12 + 1.0) / (c1 + 1.0 * v)), 6)
-      |              AS DECIMAL(18,6)) AS lp
-      |       FROM bg JOIN c12 USING (g)
-      |       JOIN ctx ON ctx.w1 = split_part(g, ' ', 1) CROSS JOIN v),
+    s"""WITH $TokCte,
+      |$BigramLpCtes,
       |dd AS (SELECT doc_id,
       |         CAST(CAST(sum(lp) * 1000000 AS HUGEINT) // count(*)
       |           AS BIGINT) AS ce_ppm
@@ -4960,18 +4619,7 @@ object LlmQueries {
        |        ELSE regexp_split_to_array(lower(trim(clean_text)), '\\s+') END
        |        AS toks
        |      FROM agg),
-       |bg AS (SELECT doc_id, unnest([toks[i] || ' ' || toks[i+1]
-       |         FOR i IN generate_series(1, len(toks)-1)]) AS g FROM t),
-       |c12 AS (SELECT g, count(*) AS c12 FROM bg GROUP BY 1),
-       |ctx AS (SELECT split_part(g, ' ', 1) AS w1, sum(c12) AS c1
-       |        FROM c12 GROUP BY 1),
-       |v AS (SELECT count(DISTINCT tok) AS v
-       |      FROM (SELECT unnest(toks) AS tok FROM t)),
-       |lp AS (SELECT doc_id,
-       |         CAST(round(-ln((c12 + 1.0) / (c1 + 1.0 * v)), 6)
-       |              AS DECIMAL(18,6)) AS lp
-       |       FROM bg JOIN c12 USING (g)
-       |       JOIN ctx ON ctx.w1 = split_part(g, ' ', 1) CROSS JOIN v),
+       |$BigramLpCtes,
        |lm AS (SELECT doc_id, count(*) AS n_bigrams,
        |         CAST(CAST(sum(lp) * 1000000 AS HUGEINT) // count(*)
        |           AS BIGINT) AS ce_ppm
@@ -5001,10 +4649,7 @@ object LlmQueries {
   private lazy val OovOracleSql: String = {
     val vocabValues = BpeVocab
       .map { case (sym, tid) => s"('$sym', $tid)" }.mkString(", ")
-    s"""WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-       |             ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END
-       |             AS toks
-       |           FROM documents),
+    s"""WITH $TokCte,
        |w AS (SELECT doc_id, toks[i] AS w
        |      FROM (SELECT doc_id, toks,
        |              unnest(generate_series(1, len(toks))) AS i FROM t)
@@ -5118,8 +4763,7 @@ object LlmQueries {
       .mkString(", ")
     val v = UnigramPieces.size
     s"""WITH RECURSIVE
-       |t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-       |        ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS toks
+       |${toksHead(8)} AS toks
        |      FROM documents),
        |w AS (SELECT doc_id, i AS wp, toks[i] AS w
        |      FROM (SELECT doc_id, toks,
@@ -5186,10 +4830,7 @@ object LlmQueries {
     val chain = BpeChainSql
     val vocabValues = BpeVocab
       .map { case (sym, tid) => s"('$sym', $tid)" }.mkString(", ")
-    s"""WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-       |             ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END
-       |             AS toks
-       |           FROM documents),
+    s"""WITH $TokCte,
        |w AS (SELECT doc_id, i AS wp, toks[i] AS w
        |      FROM (SELECT doc_id, toks,
        |              unnest(generate_series(1, len(toks))) AS i FROM t)
@@ -5221,8 +4862,7 @@ object LlmQueries {
     * refresh+compact cycle must land the stored index on, checked per
     * id (the strongest membership equality). */
   private lazy val IvfCompactSql: String =
-    """WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS vec FROM embeddings),
-      |w AS (SELECT id, vec, sqrt(list_inner_product(vec, vec)) AS n FROM v),
+    s"""WITH $EmbNormCtes,
       |cents AS (SELECT id AS cid, vec AS cvec FROM w WHERE id < 16),
       |assign AS (
       |  SELECT id, cid AS cell FROM (
@@ -5310,8 +4950,7 @@ object LlmQueries {
          |    USING (bkt) WHERE bkt >= 0 GROUP BY 1) sm USING (doc_id)"""
         .stripMargin
     }
-    s"""WITH t AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN []
-       |    ELSE regexp_split_to_array(lower(trim(text)), '\\s+') END AS toks,
+    s"""WITH ${toksHead(4)} AS toks,
        |    lang FROM documents),
        |tf AS (SELECT doc_id, toks, lang FROM t
        |       WHERE lang IN ('de', 'en', 'fr')),

@@ -44,20 +44,13 @@ object MultimodalQueries {
        |WHERE round(list_inner_product(x.e, y.e) / (x.n * y.n), 6) >= 0.35""".stripMargin
   }
 
-  /** The SemDeDup cluster closure over [[EmbeddingPairsSql]] — CTE text
-    * (no WITH prefix) shared by q58 and q123 so a closure-semantics fix
-    * can never desynchronize the two oracles. Yields `comp(vec_id,
-    * cluster_id)` for every clustered id; singletons are absent (callers
-    * COALESCE to the id itself). */
+  /** `pairs`, the [[EmbeddingPairsSql]] pair set, and its SemDeDup
+    * closure `comp(vec_id, cluster_id)` — CTE text (no WITH prefix)
+    * shared by q58 and q123. Singletons are absent (callers COALESCE to
+    * the id itself). */
   private val ClusterClosureCtes: String =
-    """e AS (SELECT id_a AS u, id_b AS v FROM pairs
-      |      UNION SELECT id_b, id_a FROM pairs),
-      |reach(u, v) AS (
-      |  SELECT u, v FROM e
-      |  UNION
-      |  SELECT r.u, e.v FROM reach r JOIN e ON e.u = r.v),
-      |comp AS (SELECT u AS vec_id, LEAST(u, MIN(v)) AS cluster_id
-      |         FROM reach GROUP BY u)""".stripMargin
+    s"pairs AS ($EmbeddingPairsSql),\n" +
+      OracleSql.closureCtes("pairs", "id_a", "id_b", "vec_id")
 
   /** q123/q124's shared oracle: brute-force cluster-excluded top-5 mining
     * (planes → closure → exclusion → ranking replayed end to end). q124
@@ -65,8 +58,7 @@ object MultimodalQueries {
     * queries pin one SQL — the index may change who pays the exact
     * re-rank join, never the result. */
   private val HardNegativesSql: String =
-    s"""WITH RECURSIVE pairs AS ($EmbeddingPairsSql),
-       |$ClusterClosureCtes,
+    s"""WITH RECURSIVE $ClusterClosureCtes,
        |d AS (SELECT vec_id FROM embeddings WHERE vec_id % 2 = 0),
        |cm AS (SELECT d.vec_id, COALESCE(c.cluster_id, d.vec_id) AS cid
        |       FROM d LEFT JOIN comp c USING (vec_id)),
@@ -156,10 +148,7 @@ object MultimodalQueries {
     //    constants and replays banding + verification exactly. ──
     QueryDef("q39_embedding_neardup",
       EmbeddingPairsSql + "\nORDER BY id_a, id_b") { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .where(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d, evenOnly = true)
       Similarity.srpNearDupPairs(emb, dim = 64, planesPerTable = 4,
           tables = 8, threshold = 0.35)
         .orderBy(col("id_a"), col("id_b"))
@@ -170,18 +159,14 @@ object MultimodalQueries {
     //    keeper per semantic cluster. Same SRP pair graph as q39, closure
     //    replayed in the oracle as a recursive CTE. ──
     QueryDef("q58_semantic_dedup",
-      s"""WITH RECURSIVE pairs AS ($EmbeddingPairsSql),
-         |$ClusterClosureCtes
+      s"""WITH RECURSIVE $ClusterClosureCtes
          |SELECT d.vec_id,
          |       COALESCE(c.cluster_id, d.vec_id) AS cluster_id,
          |       CAST(COALESCE(c.cluster_id, d.vec_id) = d.vec_id AS INT) AS keep
          |FROM (SELECT vec_id FROM embeddings WHERE vec_id % 2 = 0) d
          |LEFT JOIN comp c USING (vec_id)
          |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .where(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d, evenOnly = true)
       val pairs = Similarity.srpNearDupPairs(emb, dim = 64, planesPerTable = 4,
         tables = 8, threshold = 0.35)
       graft.ops.Dedup.dedupAssign(
@@ -198,10 +183,7 @@ object MultimodalQueries {
     //    cosine ranking; the oracle replays planes, closure, exclusion
     //    and ranking end to end. ──
     QueryDef("q123_hard_negatives", HardNegativesSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .where(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d, evenOnly = true)
       Similarity.hardNegatives(emb.where(col("id") % 10 === 0), emb,
           hardNegClusters(s, d), "vec_id", "cluster_id", k = 5)
         .orderBy("query_id", "rank")
@@ -216,10 +198,7 @@ object MultimodalQueries {
     //    brute-force mining EXACTLY, so the oracle is the identical SQL —
     //    the index changes who pays the exact join, never the answer. ──
     QueryDef("q124_hard_negatives_indexed", HardNegativesSql) { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .where(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as("id"),
-          transform(col("embedding"), _.cast("double")).as("vec"))
+      val emb = SharedFrames.embOdd(s, d, evenOnly = true)
       // r20: fit + index build come from the shared frames — "served FROM
       // the persisted PQ index" now means exactly that (the q73/q92-phase
       // fit-once/serve-many split): the timed body is the cluster-aware

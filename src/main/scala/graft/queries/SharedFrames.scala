@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caches
@@ -283,24 +283,37 @@ object SharedFrames {
 
   // ── shared builders ─────────────────────────────────────────────────────
 
+  /** The embedding as `vec`, a double array. */
+  private[queries] def embVec: Column =
+    transform(col("embedding"), _.cast("double")).as("vec")
+
   /** The (id, vec double[]) embedding projection, optionally restricted to
     * the even-id half (the q39/q58/q123/q124 corpus). */
-  private def embOdd(s: SparkSession, d: String,
-                     evenOnly: Boolean): DataFrame = {
+  private[queries] def embOdd(s: SparkSession, d: String,
+                              evenOnly: Boolean = false): DataFrame = {
     val base = Tables.embeddings(s, d)
     (if (evenOnly) base.where(col("vec_id") % 2 === 0) else base)
-      .select(col("vec_id").as("id"),
-        transform(col("embedding"), _.cast("double")).as("vec"))
+      .select(col("vec_id").as("id"), embVec)
   }
 
   /** The frozen lowest-id coarse quantizer (cid = id or id/2 for the
-    * even-id corpus) — driver-sized by construction. */
-  private def frozenCents(s: SparkSession, d: String, below: Int,
-                          evenOnly: Boolean): Seq[(Int, Seq[Double])] =
-    embOdd(s, d, evenOnly).where(col("id") < below).orderBy(col("id"))
-      .collect()
-      .map(r => ((if (evenOnly) r.getLong(0) / 2 else r.getLong(0)).toInt,
-        r.getSeq[Double](1))).toSeq
+    * even-id corpus): driver-side state, as a k-means fit is, planted in
+    * each plan as literals so a corpus assignment stays map-only. At most
+    * `below` rows reach the driver, and a quantizer over that budget
+    * fails loudly rather than falling back: the plans need it as
+    * literals. */
+  private[queries] def frozenCents(s: SparkSession, d: String, below: Int,
+                                   evenOnly: Boolean = false)
+      : Seq[(Int, Seq[Double])] = {
+    val rows = Caches.collectAtMost(
+        embOdd(s, d, evenOnly).where(col("id") < below).orderBy(col("id")),
+        below)
+      .getOrElse(throw new IllegalStateException(
+        s"frozenCents: the id < $below centroids exceed their " +
+          s"driver budget of $below rows"))
+    rows.map(r => ((if (evenOnly) r.getLong(0) / 2 else r.getLong(0)).toInt,
+      r.getSeq[Double](1))).toSeq
+  }
 
   /** q124's frozen coarse centroids, exposed for the serve call (the
     * index and the serve must share one quantizer). */

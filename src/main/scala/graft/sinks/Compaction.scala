@@ -47,31 +47,6 @@ object Compaction {
         df.repartitionByRange(nFiles, cs: _*).sortWithinPartitions(cs: _*)
       } else df.repartition(nFiles))
 
-  /** Compact a HIVE-PARTITIONED parquet dir (`dir/k=v/…`, any nesting
-    * depth) one LEAF partition at a time, preserving the partition layout —
-    * compacting the root directly would inline the partition columns into
-    * the data files and destroy partition pruning, and compacting a
-    * multi-level layout (`dt=…/hr=…`) at the first level would do the same
-    * to every level below it. A leaf is a dir with no `k=v` subdirs.
-    * Serial over partitions by design: each inner compact is already a
-    * full-cluster job, and lake hygiene runs off the critical path.
-    * Returns total files written. */
-  def compactPartitionedParquetDir(spark: SparkSession, dir: String,
-                                   targetBytes: Long,
-                                   sortCols: Seq[String] = Nil): Int = {
-    val root = new Path(dir)
-    val fs = fileSystem(spark, root)
-    def leaves(p: Path): Seq[Path] = {
-      val kv = fs.listStatus(p)
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      if (kv.isEmpty) Seq(p) else kv.toSeq.flatMap(st => leaves(st.getPath))
-    }
-    val parts = leaves(root).filterNot(_ == root)
-    require(parts.nonEmpty, s"no k=v partition dirs under $dir")
-    parts.map(p =>
-      compactParquetDir(spark, p.toString, targetBytes, sortCols)).sum
-  }
-
   /** Shared rewrite-and-swap: size the file budget from on-disk bytes, let
     * `layout` shape the dataframe into that many partitions, write to a
     * sibling temp dir, swap. Package-private so layout variants

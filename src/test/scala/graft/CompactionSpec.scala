@@ -64,48 +64,4 @@ class CompactionSpec extends SparkSpec {
     assert(!Files.exists(local.resolveSibling("t._compact_tmp")))
     assert(!Files.exists(local.resolveSibling("t._compact_old")))
   }
-
-  test("compactPartitionedParquetDir: per-partition compaction keeps the layout") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("compact-part").resolve("t").toString
-    spark.range(0, 9000, 1, 12)
-      .select(col("id"), (col("id") % 3).as("p"))
-      .write.partitionBy("p").parquet(dir)
-    assert(Compaction.parquetFileCount(spark, dir) >= 30) // ~12 per partition
-    val beforeSum = spark.read.parquet(dir).agg(sum("id")).as[Long].head()
-
-    val n = Compaction.compactPartitionedParquetDir(spark, dir,
-      targetBytes = Long.MaxValue)
-    assert(n == 3) // one file per partition
-    assert(Compaction.parquetFileCount(spark, dir) == 3)
-    // Partition layout intact: pruning still works and content unchanged.
-    val back = spark.read.parquet(dir)
-    assert(back.agg(sum("id")).as[Long].head() == beforeSum)
-    assert(back.where(col("p") === 1).count() == 3000)
-    assert(Files.isDirectory(java.nio.file.Paths.get(dir, "p=1")))
-  }
-
-  test("compactPartitionedParquetDir: multi-level layout compacts at the " +
-      "LEAF level, both partition columns survive") {
-    import spark.implicits._
-    // dt=…/hr=… — compacting at the first level would inline `hr` into the
-    // data files and silently destroy second-level pruning.
-    val dir = Files.createTempDirectory("compact-part2").resolve("t").toString
-    spark.range(0, 8000, 1, 8)
-      .select(col("id"), (col("id") % 2).as("dt"), (col("id") % 4).as("hr"))
-      .write.partitionBy("dt", "hr").parquet(dir)
-    val beforeSum = spark.read.parquet(dir).agg(sum("id")).as[Long].head()
-
-    val n = Compaction.compactPartitionedParquetDir(spark, dir,
-      targetBytes = Long.MaxValue)
-    assert(n == 4) // leaf partitions: dt=0/hr={0,2}, dt=1/hr={1,3}
-    assert(Compaction.parquetFileCount(spark, dir) == 4)
-    val back = spark.read.parquet(dir)
-    assert(back.agg(sum("id")).as[Long].head() == beforeSum)
-    // BOTH partition levels still prune (hr stayed a directory column, so
-    // the leaf dirs still exist and the data files carry no hr column).
-    assert(back.where(col("dt") === 0 && col("hr") === 2).count() == 2000)
-    assert(Files.isDirectory(java.nio.file.Paths.get(dir, "dt=0", "hr=2")))
-    assert(!spark.read.parquet(s"$dir/dt=0/hr=2").columns.contains("hr"))
-  }
 }

@@ -20,14 +20,6 @@ class OpsSpec extends SparkSpec {
     assert(scannedLong.queryExecution.optimizedPlan.toString.contains("Expand"))
   }
 
-  test("A1 groupSumDropZero: null->0 pre-agg, zero groups dropped") {
-    import spark.implicits._
-    val df = Seq(("a", Some(1.0)), ("a", None), ("b", Some(0.0)))
-      .toDF("k", "v")
-    val out = Ops.groupSumDropZero(df, Seq("k"), "v", "total")
-    assert(rows(out.orderBy("k")) == Seq(Seq("a", 1.0)))
-  }
-
   test("A5 firstPerGroup: explicit order, deterministic") {
     import spark.implicits._
     val df = Seq(("g1", 2, "b"), ("g1", 1, "a"), ("g2", 5, "c")).toDF("g", "o", "v")

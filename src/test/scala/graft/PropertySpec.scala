@@ -297,6 +297,36 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("hashedLinearFit / langIdFit: duplicate and NULL doc ids fail " +
+      "alike on both paths") {
+    import spark.implicits._
+    val doc = Gen.zip(Gen.option(Gen.chooseNum(1L, 6L)),
+      Gen.listOf(Gen.oneOf("good", "bad", "fine", "")).map(_.mkString(" ")),
+      Gen.option(Gen.oneOf(0, 1)))
+    val dupId = Seq((Some(1L), "good good", Some(1)), (Some(1L), "bad", Some(0)),
+      (Some(2L), "fine", Some(1)))
+    val nullId = Seq((None, "good", Some(1)), (Some(2L), "bad", Some(0)))
+    def lin(corpus: Seq[(Option[Long], String, Option[Int])]) =
+      graft.ops.Scoring.hashedLinearFit(corpus.toDF("doc_id", "text", "label"),
+          "doc_id", "text", "label", buckets = 16, epochs = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def lid(corpus: Seq[(Option[Long], String, Option[Int])]) =
+      graft.ops.Scoring.langIdFit(corpus.map { case (i, t, y) =>
+            (i, t, y.map(c => if (c == 1) "en" else "de")) }
+          .toDF("doc_id", "text", "lang"),
+          "doc_id", "text", "lang", buckets = 16, epochs = 2)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sorted.toSeq
+    Seq(dupId, nullId).foreach { corpus =>
+      val e = intercept[IllegalArgumentException](lin(corpus))
+      assert(e.getMessage.contains("doc ids must be unique and non-NULL"))
+    }
+    (Seq(dupId, nullId) ++ samples(Gen.listOfN(5, doc), 4)).foreach { corpus =>
+      sameOverBudget(corpus)(lin(corpus))
+      sameOverBudget(corpus)(lid(corpus))
+    }
+  }
+
   test("bradleyTerry: local == distributed on random outcomes " +
       "(self-play, NULL endpoints, empty input)") {
     import spark.implicits._

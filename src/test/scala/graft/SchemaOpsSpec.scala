@@ -57,13 +57,6 @@ class SchemaOpsSpec extends SparkSpec {
     assert(SchemaOps.columnsLeftOf(cols, "absent") == cols)
   }
 
-  test("P6 dropNaHeaderColumns: NA-named columns removed, _row_idx kept") {
-    val grid = SchemaOps.gridFromRows(spark, Seq(Seq("x", "y")))
-      .withColumnRenamed("c0", "n/a").withColumnRenamed("c1", "keep")
-    val out = SchemaOps.dropNaHeaderColumns(grid)
-    assert(out.columns.toSeq == Seq(SchemaOps.RowIdx, "keep"))
-  }
-
   test("Na vocabulary: driver-side and column-side agree") {
     for (s <- Seq("", " na ", "N/A", "NaN", "None", "NULL", "nah"))
       assert(Na.isNaString(s), s"'$s' should be NA")

@@ -56,6 +56,16 @@ class SharedFramesSpec extends SparkSpec {
     assert(shared.exceptAll(inline).isEmpty && inline.exceptAll(shared).isEmpty)
   }
 
+  test("the frozen quantizer collects within its budget and fails loudly " +
+      "over it") {
+    val cents = SharedFrames.hardNegCents(spark, sf)
+    assert(cents.map(_._1) == (0 until 16))
+    assert(cents.forall(_._2.length == 64))
+    val e = intercept[IllegalStateException](
+      graft.core.Caches.overBudget(SharedFrames.hardNegCents(spark, sf)))
+    assert(e.getMessage.contains("driver budget of 32 rows"))
+  }
+
   // ── round-20 frames: each must equal the inline build it replaced ──────
 
   private def assertSame(shared: org.apache.spark.sql.DataFrame,

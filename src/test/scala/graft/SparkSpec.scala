@@ -5,21 +5,19 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (Spark's
-  * getOrCreate) so the suite doesn't pay startup per spec class. */
+  * getOrCreate) so the suite doesn't pay startup per spec class. It is the
+  * engine's own session ([[GraftSession.build]]), logging at WARN. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = {
     // Codegen-STRICT for every suite, not just SparkEntrySpec's golden
     // loop: a whole-stage compile error must fail the test, never silently
     // fall back to interpreted execution (the q29 bug class — invalid Java
     // under Expand shipped for 4 rounds because fallback hid it).
-    .config("spark.sql.codegen.fallback", "false")
-    .getOrCreate()
+    val s = GraftSession.build(4, "graft-test",
+      Map("spark.sql.codegen.fallback" -> "false"))
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
