@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.plans.LocalFold
 
 /** Dynamic-schema layer (SURVEY.md §1.2, §2.2 P1–P8).
   *
@@ -101,9 +102,10 @@ object SchemaOps {
     * schema (cleaned + deduped); rows at `_row_idx < headerIdx` and the
     * header row itself are dropped; `_row_idx` is preserved.
     * A single cheap driver collect of one row — never infer from unordered
-    * data (SURVEY.md §7.4 hard part #3). */
+    * data (SURVEY.md §7.4 hard part #3); over a spreadsheet grid it reads
+    * the folded row ([[LocalFold.collect]]). */
   def promoteHeaders(grid: DataFrame, headerIdx: Long = 0): DataFrame = {
-    val hdrRow = grid.where(col(RowIdx) === headerIdx).collect()
+    val hdrRow = LocalFold.collect(grid.where(col(RowIdx) === headerIdx))
       .headOption.getOrElse(throw new IllegalArgumentException(
         s"no row at $RowIdx=$headerIdx"))
     val dataCols = grid.columns.filter(_ != RowIdx).toIndexedSeq

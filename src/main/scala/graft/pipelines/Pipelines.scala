@@ -3,12 +3,12 @@ package graft.pipelines
 import java.time.LocalDate
 import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.core.{Na, SchemaOps}
 import graft.core.SchemaOps.RowIdx
 import graft.functions.Exprs
 import graft.ops.Ops
+import graft.plans.LocalFold
 
 /** Per-vendor defaults (SURVEY.md §2.8 E1): buyer code + supplier number.
   * 247 -> P2E/81214, ACME -> P20/44602, SouthernCross -> P2M/80104,
@@ -70,10 +70,7 @@ object Canonical {
       typed.as(c)
     }: _*)
     val sorted = out.orderBy(col("Branch").asc, col("Item").asc, col("Distro Size").asc)
-    sorted.queryExecution.optimizedPlan match {
-      case local: LocalRelation => GraftSqlBridge.frame(df.sparkSession, local)
-      case _ => sorted
-    }
+    LocalFold.folded(sorted).map(GraftSqlBridge.frame(df.sparkSession, _)).getOrElse(sorted)
   }
 
   /** E1 constant-column append over (Branch, Item, Distro Size) rows, in
@@ -98,10 +95,11 @@ object Canonical {
 object Steps {
   /** P11: drop the grid's last row (pandas `iloc[:-1]`). Over a
     * spreadsheet grid the optimizer folds the max-index aggregate on the
-    * driver ([[graft.plans.LocalFold]]), so the lookup starts no Spark job;
-    * over a table-derived grid it is one small job. */
+    * driver ([[graft.plans.LocalFold]]) and the lookup reads the folded
+    * row ([[LocalFold.collect]]); over a table-derived grid it is one small
+    * job. */
   def dropLastRow(grid: DataFrame): DataFrame = {
-    val mx = grid.agg(max(col(RowIdx))).head()
+    val mx = LocalFold.collect(grid.agg(max(col(RowIdx)))).head
     if (mx.isNullAt(0)) grid else grid.where(col(RowIdx) < mx.getLong(0))
   }
 

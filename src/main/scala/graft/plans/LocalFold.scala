@@ -3,8 +3,8 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalAggregation}
@@ -49,6 +49,31 @@ object LocalFold extends Rule[LogicalPlan] {
   val RowBudget: Int = 100000
 
   override def apply(plan: LogicalPlan): LogicalPlan = foldTop(plan)
+
+  /** The `LocalRelation` `df`'s optimized plan is, when it is one: this
+    * rule (or Catalyst's `ConvertToLocalRelation`) already evaluated the
+    * frame on the driver, and these rows are its answer. */
+  def folded(df: DataFrame): Option[LocalRelation] = df.queryExecution.optimizedPlan match {
+    case r: LocalRelation if !r.isStreaming => Some(r)
+    case _ => None
+  }
+
+  /** `df.collect()`, read straight from the folded rows when `df` is
+    * [[folded]]: the action skips physical planning, the SQL execution,
+    * `LocalTableScanExec`'s row copy and the row encoder, since the
+    * optimizer already holds the answer. Rows convert with
+    * `CatalystTypeConverters` under the calling thread's SQL conf, so dates
+    * and timestamps take the classes `collect()` gives. Any other frame
+    * goes through `df.collect()`.
+    *
+    * A folded action posts no SQL execution: `QueryExecutionListener`s,
+    * the SQL tab of the UI and SQL listener events do not see it. */
+  def collect(df: DataFrame): Array[Row] = folded(df) match {
+    case Some(r) =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      r.data.iterator.map(toRow(_).asInstanceOf[Row]).toArray
+    case None => df.collect()
+  }
 
   private def foldTop(p: LogicalPlan): LogicalPlan =
     if (p.isInstanceOf[LocalRelation] || !p.containsPattern(LOCAL_RELATION)) p
@@ -102,8 +127,19 @@ object LocalFold extends Rule[LogicalPlan] {
     out.result()
   }
 
-  private def sorted(s: Sort, budget: Budget): Vector[InternalRow] =
-    held(rows(s.child, budget), budget).sorted(new InterpretedOrdering(s.order, s.child.output))
+  /** A stable sort on keys computed once per row: each row's sort key is
+    * projected as it arrives, and the (key, row) pairs are ordered on
+    * references to the key's fields, so no comparison re-evaluates a key
+    * expression. */
+  private def sorted(s: Sort, budget: Budget): Vector[InternalRow] = {
+    val key = new InterpretedMutableProjection(s.order.map(_.child), s.child.output)
+    val order = new InterpretedOrdering(s.order.zipWithIndex.map { case (o, i) =>
+      o.copy(child = BoundReference(i, o.dataType, o.nullable))
+    })
+    val keyed = Vector.newBuilder[(InternalRow, InternalRow)]
+    rows(s.child, budget).foreach { r => budget.take(); keyed += ((key(r).copy(), r.copy())) }
+    keyed.result().sortBy(_._1)(order).map(_._2)
+  }
 
   /** The rows of `p`, streamed: a row may be reused by the next `next()`. */
   private def rows(p: LogicalPlan, budget: Budget): Iterator[InternalRow] = p match {

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.LocalFold
 
 /** K3–K5 terminal-macro sinks (SURVEY.md §2.9): keystroke scripts rendered
   * from the canonical output tables.
@@ -13,7 +14,8 @@ import org.apache.spark.sql.functions._
   * rendering on executors and collecting the text. Row order is always an
   * explicit sort key — partition order is never trusted. The inputs are the
   * post-aggregation canonical tables (10¹–10³ rows in the reference), the
-  * same rows the Mega-Script sink collects.
+  * same rows the Mega-Script sink collects. A frame the optimizer folded
+  * on the driver is read from its folded rows ([[LocalFold.collect]]).
   *
   * Templates follow /root/reference/247/tools/allocation_tool.py:230-336
   * (ADPO X), /root/reference/Flips/tools/adpo_I_tool.py:73-288 (ADPO I),
@@ -36,23 +38,23 @@ object MacroRenderer {
   }
 
   /** Canonical DataFrame -> collected typed rows (branch/item/qty/edd/xdck/
-    * fob). EDD: real DATE columns render MM/dd/yy (F14); strings pass
-    * through. */
-  private def adpoRows(df: DataFrame)(implicit spark: SparkSession): Seq[AdpoRow] = {
-    import spark.implicits._
+    * fob), read by position. EDD: real DATE columns render MM/dd/yy (F14);
+    * strings pass through. */
+  private def adpoRows(df: DataFrame): Seq[AdpoRow] = {
     val eddIsDate = df.schema("Expected Delivery Date").dataType
       .isInstanceOf[org.apache.spark.sql.types.DateType]
     val eddCol =
       if (eddIsDate) date_format(col("Expected Delivery Date"), "MM/dd/yy")
       else col("Expected Delivery Date").cast("string")
-    df.select(
-        col("Branch").cast("string").as("branch"),
-        col("Item").cast("string").as("item"),
-        coalesce(col("Distro Size").cast("long"), lit(0L)).as("qty"),
-        coalesce(eddCol, lit("")).as("edd"),
-        coalesce(col("XDCK").cast("string"), lit("")).as("xdck"),
-        coalesce(col("FOB").cast("string"), lit("")).as("fob"))
-      .as[AdpoRow].collect().toSeq
+    LocalFold.collect(df.select(
+        col("Branch").cast("string"),
+        col("Item").cast("string"),
+        coalesce(col("Distro Size").cast("long"), lit(0L)),
+        coalesce(eddCol, lit("")),
+        coalesce(col("XDCK").cast("string"), lit("")),
+        coalesce(col("FOB").cast("string"), lit(""))))
+      .toSeq.map(r => AdpoRow(r.getString(0), r.getString(1), r.getLong(2),
+        r.getString(3), r.getString(4), r.getString(5)))
   }
 
   /** Group blocks ordered by numeric branch, rows inside a group by
@@ -172,12 +174,11 @@ object MacroRenderer {
     * typed rows are collected, ordered by (Store#, Item#) and rendered on
     * the driver. */
   def dlpm(df: DataFrame, initials: String, dateText: String): String = {
-    val rows = df.select(
+    val rows = LocalFold.collect(df.select(
         col("Store#").cast("string"),
         col("Item#").cast("string"),
         col("Vendor#").cast("string"),
-        format_string("%.2f", col("Cost").cast("double")))
-      .collect()
+        format_string("%.2f", col("Cost").cast("double"))))
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
       .sortBy { case (store, item, _, _) => (branchSortKey(store), item) }
     rows.map { case (store, item, vendor, cost) =>

@@ -4,6 +4,7 @@ import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.DataFrame
+import graft.plans.LocalFold
 
 /** Minimal xlsx writer on the JDK only — the K1/K2 Mega-Script sink
   * (SURVEY.md §2.9). Emits a spec-valid workbook: shared machinery for
@@ -13,7 +14,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Post-aggregation outputs here are small (the reference's are 10¹–10³
   * rows), so this collects to the driver by design; large results belong in
-  * parquet sinks. */
+  * parquet sinks. A frame the optimizer folded on the driver is read from
+  * its folded rows ([[LocalFold.collect]]). */
 object XlsxWriter {
 
   /** One output sheet: name + rows of cell values (null -> blank). A cell
@@ -94,8 +96,10 @@ object XlsxWriter {
           s"""<col min="${j + 1}" max="${j + 1}" width="$w" customWidth="1"/>"""
         }.mkString("<cols>", "", "</cols>")
       } else ""
-    s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
-       |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">$views$cols<sheetData>$rowsXml</sheetData></worksheet>""".stripMargin
+    // No stripMargin here: the row payload is cell text, which may hold a
+    // newline followed by blanks and '|'.
+    """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" + "\n" +
+      s"""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">$views$cols<sheetData>$rowsXml</sheetData></worksheet>"""
   }
 
   /** Write a workbook. Sheet order is preserved; empty sheets allowed (K1's
@@ -166,7 +170,7 @@ object XlsxWriter {
                             carrier: DataFrame): Unit = {
     def sheetOf(name: String, df: DataFrame, headers: Boolean = true,
                 autosize: Boolean = false): Sheet = {
-      val rows = df.collect().toSeq.map(r => (0 until r.length).map(r.get))
+      val rows = LocalFold.collect(df).toSeq.map(r => (0 until r.length).map(r.get))
       Sheet(name, rows, if (headers) Some(df.columns.toSeq) else None,
         autosize = autosize)
     }
@@ -176,7 +180,7 @@ object XlsxWriter {
     val araho = output.withColumnRenamed("Store", "Column")
     val arahoCols = araho.columns.toSeq
     val dateIdx = arahoCols.indexWhere(_.trim.equalsIgnoreCase("Invoice Date"))
-    val arahoRows = araho.collect().toSeq.map { r =>
+    val arahoRows = LocalFold.collect(araho).toSeq.map { r =>
       (0 until r.length).map { i =>
         if (i == dateIdx) Formula("TODAY()") else r.get(i)
       }
@@ -197,7 +201,7 @@ object XlsxWriter {
     * Ref: /root/reference/247/tools/allocation_tool.py:168-207. */
   def writeMegaScript(df: DataFrame, path: String): Unit = {
     val headers = df.columns.toSeq
-    val rows = df.collect().toSeq.map { r =>
+    val rows = LocalFold.collect(df).toSeq.map { r =>
       (0 until r.length).map { i =>
         r.get(i) match {
           case d: java.sql.Date => d.toLocalDate

@@ -1,11 +1,11 @@
 package graft.sources
 
-import java.io.InputStream
-
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.ZipFile
+import javax.xml.XMLConstants
 import javax.xml.parsers.DocumentBuilderFactory
 import org.w3c.dom.{Document, Element}
+import org.xml.sax.SAXException
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.SchemaOps
@@ -39,11 +39,28 @@ object Xlsx {
     }
   }
 
-  private def parseXml(in: InputStream): Document = {
-    val f = DocumentBuilderFactory.newInstance()
+  /** One parser configuration for every part. Workbooks come from outside
+    * the program, so a part that declares a DOCTYPE is refused: no external
+    * entity, XInclude or entity expansion can pull a local file or URL into
+    * a cell. The JDK's built-in factory is taken directly, without a
+    * service-loader scan of the classpath. The factory is only read after
+    * this, so the vendor workers share it. */
+  private val xmlFactory: DocumentBuilderFactory = {
+    val f = DocumentBuilderFactory.newDefaultInstance()
+    f.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
+    f.setFeature(XMLConstants.FEATURE_SECURE_PROCESSING, true)
+    f.setXIncludeAware(false)
+    f.setExpandEntityReferences(false)
     f.setNamespaceAware(false)
-    f.newDocumentBuilder().parse(in)
+    f
   }
+
+  private def parseXml(zip: ZipFile, part: String): Document =
+    try xmlFactory.newDocumentBuilder().parse(zip.getInputStream(zip.getEntry(part)))
+    catch {
+      case e: SAXException =>
+        throw new IllegalArgumentException(s"${zip.getName}: $part: ${e.getMessage}", e)
+    }
 
   private def elems(doc: Document, tag: String): Seq[Element] = {
     val nl = doc.getElementsByTagName(tag)
@@ -75,7 +92,7 @@ object Xlsx {
   private def workbookOoxml(path: String): Workbook = {
     val zip = new ZipFile(path)
     try {
-      val wb = parseXml(zip.getInputStream(zip.getEntry("xl/workbook.xml")))
+      val wb = parseXml(zip, "xl/workbook.xml")
       val sheets = elems(wb, "sheet").map { e =>
         SheetMeta(
           name = e.getAttribute("name"),
@@ -116,7 +133,7 @@ object Xlsx {
         case None => wb.activeVisibleSheet
       }
       // rel id -> worksheet path
-      val rels = parseXml(zip.getInputStream(zip.getEntry("xl/_rels/workbook.xml.rels")))
+      val rels = parseXml(zip, "xl/_rels/workbook.xml.rels")
       val relTarget = elems(rels, "Relationship")
         .find(_.getAttribute("Id") == target.relId)
         .map(_.getAttribute("Target"))
@@ -124,11 +141,10 @@ object Xlsx {
       val sheetPath = if (relTarget.startsWith("/")) relTarget.drop(1) else s"xl/$relTarget"
       // shared strings (optional part)
       val shared: IndexedSeq[String] = Option(zip.getEntry("xl/sharedStrings.xml")) match {
-        case Some(e) =>
-          elems(parseXml(zip.getInputStream(e)), "si").map(_.getTextContent).toIndexedSeq
+        case Some(e) => elems(parseXml(zip, e.getName), "si").map(_.getTextContent).toIndexedSeq
         case None => IndexedSeq.empty
       }
-      val sheet = parseXml(zip.getInputStream(zip.getEntry(sheetPath)))
+      val sheet = parseXml(zip, sheetPath)
       val rows = elems(sheet, "row").map { rowEl =>
         val cells = {
           val nl = rowEl.getElementsByTagName("c")

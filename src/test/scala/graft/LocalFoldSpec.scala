@@ -1,10 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.plans.LocalFold
 
 /** `LocalFold` against Spark itself: each folded plan gives the same rows
@@ -48,6 +50,9 @@ class LocalFoldSpec extends SparkSpec {
     assert(got.map(_.toSeq.take(2)) == Seq(Seq("a", 3), Seq("a", 1), Seq("b", 2), Seq("b", 1),
       Seq("c", 3), Seq("c", 2), Seq(null, 1)))
     foldsLikeSpark(sales.orderBy($"x".desc, $"n", $"k"))
+    // An expression key, projected once per row: three rows tie on NULL
+    // and two on NaN, one is -0.0; later keys break the ties.
+    foldsLikeSpark(sales.orderBy(when($"k" =!= "a", $"x" * 2).desc_nulls_last, $"n".desc, $"k"))
   }
 
   test("Aggregate folds: grouped sums, averages and counts; -0.0 and 0.0 group together") {
@@ -123,5 +128,63 @@ class LocalFoldSpec extends SparkSpec {
     assert(plan.collectLeaves().exists(_.isInstanceOf[LocalRelation]), plan.treeString)
     val scanOnly = optimized(scan.orderBy("n"))
     assert(LocalFold(scanOnly) eq scanOnly)
+  }
+
+  /** A folded frame over every column type the sinks may meet, in
+    * descending `l` order: the full row is the second. */
+  private def typed: DataFrame = {
+    val schema = StructType(Seq(
+      StructField("l", LongType), StructField("i", IntegerType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(12, 3)), StructField("s", StringType),
+      StructField("day", DateType), StructField("ts", TimestampType),
+      StructField("b", BooleanType), StructField("arr", ArrayType(IntegerType)),
+      StructField("st", StructType(Seq(StructField("name", StringType),
+        StructField("n", LongType)))),
+      StructField("m", MapType(StringType, DoubleType))))
+    val rows = Seq(
+      Row(2L, 1, Double.NaN, new java.math.BigDecimal("12.500"), "caf\u00e9 \ud83d\ude00",
+        java.sql.Date.valueOf("2026-08-14"), java.sql.Timestamp.valueOf("2026-08-14 09:30:00.123"),
+        true, Seq(1, null, 3), Row("x", 7L), Map("a" -> 1.5, "b" -> -2.0)),
+      Row(1L, null, -0.0, null, null, null, null, null, null, null, null),
+      Row(3L, -4, 1e300, new java.math.BigDecimal("-0.001"), "",
+        java.sql.Date.valueOf("1899-12-30"), java.sql.Timestamp.valueOf("1970-01-01 00:00:00"),
+        false, Seq.empty[Int], Row(null, null), Map.empty[String, Double]))
+    spark.createDataFrame(rows.asJava, schema).where($"l" > 0).orderBy($"l".desc)
+  }
+
+  test("LocalFold.collect reads a folded frame's rows as collect() gives them") {
+    val df = typed
+    assert(LocalFold.folded(df).isDefined, optimized(df).treeString)
+    val got = LocalFold.collect(df).toSeq
+    val want = df.collect().toSeq
+    assert(got == want)
+    assert(got.map(_.schema) == want.map(_.schema))
+    def scalarClasses(rs: Seq[Row]) =
+      rs.flatMap(_.toSeq.take(8)).map(v => if (v == null) null else v.getClass)
+    assert(scalarClasses(got) == scalarClasses(want))
+    assert(got.map(r => java.lang.Double.doubleToRawLongBits(r.getAs[Double]("d"))) ==
+      want.map(r => java.lang.Double.doubleToRawLongBits(r.getAs[Double]("d"))))
+    val full = got(1)
+    assert(full.getAs[Row]("st").getAs[String]("name") == "x")
+    assert(full.getAs[Row]("st").getAs[Long]("n") == 7L)
+    assert(full.getString(4).codePointCount(0, full.getString(4).length) == 6)
+  }
+
+  test("LocalFold.collect gives java.time dates and instants under the Java 8 datetime API") {
+    spark.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    try {
+      val df = typed.select("l", "day", "ts")
+      val got = LocalFold.collect(df).toSeq
+      assert(got == df.collect().toSeq)
+      assert(got(1).get(1) == java.time.LocalDate.of(2026, 8, 14))
+      assert(got(1).get(2).isInstanceOf[java.time.Instant])
+    } finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+  }
+
+  test("LocalFold.collect runs a frame over a parquet scan through collect()") {
+    val scan = scanned(sales)
+    assert(LocalFold.folded(scan.orderBy("n", "k", "x")).isEmpty)
+    assert(LocalFold.collect(scan.orderBy("n", "k", "x")).toSeq ==
+      sales.orderBy("n", "k", "x").collect().toSeq)
   }
 }

@@ -3,10 +3,11 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
 import graft.core.SchemaOps
 import graft.pipelines.{AllocationPipeline, DockPipeline, FlipsPipeline, PriceSheetPipeline,
@@ -15,24 +16,32 @@ import graft.sinks.{MacroRenderer, XlsxWriter}
 
 /** A vendor pipeline over a spreadsheet grid is folded on the driver by
   * the optimizer's `LocalFold`: building it and writing its sinks start
-  * no Spark job. A grid derived from a table scan keeps the lazy
-  * distributed plan. Jobs are counted with a `SparkListener`. */
+  * no Spark job, and every eager action reads the folded rows
+  * (`LocalFold.collect`), so none starts a SQL execution either. A grid
+  * derived from a table scan keeps the lazy distributed plan. Jobs and SQL
+  * executions are counted with a `SparkListener`. */
 class LocalRelationSpec extends SparkSpec {
   implicit lazy val s: org.apache.spark.sql.SparkSession = spark
 
-  /** `f`'s result and the number of Spark jobs started while it ran. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
+  /** `f`'s result, the number of Spark jobs and the number of SQL
+    * executions started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
-    val started = new AtomicInteger
+    val jobs = new AtomicInteger
+    val executions = new AtomicInteger
     val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(counter)
     try {
       val a = f
       ListenerBusDrain(sc)
-      (a, started.get)
+      (a, jobs.get, executions.get)
     } finally sc.removeSparkListener(counter)
   }
 
@@ -48,8 +57,8 @@ class LocalRelationSpec extends SparkSpec {
   test("a gridFromRows grid is a LocalRelation: header promotion starts no job") {
     val grid = SchemaOps.gridFromRows(spark, allocationRows)
     assert(optimized(grid).isInstanceOf[LocalRelation])
-    val (promoted, jobs) = jobsDuring(SchemaOps.promoteHeaders(grid, headerIdx = 1))
-    assert(jobs == 0)
+    val (promoted, jobs, executions) = jobsDuring(SchemaOps.promoteHeaders(grid, headerIdx = 1))
+    assert(jobs == 0 && executions == 0)
     assert(promoted.columns.contains("Item Description"))
   }
 
@@ -64,21 +73,21 @@ class LocalRelationSpec extends SparkSpec {
   test("allocation over a driver grid returns a LocalRelation; the Mega-Script " +
       "workbook and the ADPO X macro read it with zero jobs") {
     val grid = SchemaOps.gridFromRows(spark, allocationRows)
-    val ((out, text), jobs) = jobsDuring {
+    val ((out, text), jobs, executions) = jobsDuring {
       val out = AllocationPipeline.run(grid, edd = Some("8/14/2026"))
       (out, canonicalSinks(out))
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(optimized(out).isInstanceOf[LocalRelation], optimized(out).treeString)
     assert(text.split("\n").contains("Type  142-1234567"))
     assert(rows(out.select("Branch", "Item", "Distro Size")) == Seq(
       Seq(114L, 1234567L, 3L), Seq(123L, 2345678L, 4L), Seq(142L, 1234567L, 2L)))
-    val (leavins, leavinsJobs) = jobsDuring {
+    val (leavins, leavinsJobs, leavinsExecutions) = jobsDuring {
       val out = AllocationPipeline.run(grid, VendorConfig.Leavins, edd = Some("8/14/2026"))
       canonicalSinks(out)
       out
     }
-    assert(leavinsJobs == 0)
+    assert(leavinsJobs == 0 && leavinsExecutions == 0)
     assert(leavins.head().getLong(4) == 79906L)
   }
 
@@ -91,13 +100,13 @@ class LocalRelationSpec extends SparkSpec {
       Seq("junk", "dock", "Branch", "Item", "Description", "Distro Size", "x"),
       Seq("a", "436", "86", "111", "A", "2", "z"),
       Seq("b", "436", "87", "222", "B", "4", "z")))
-    val ((a, p), jobs) = jobsDuring {
+    val ((a, p), jobs, executions) = jobsDuring {
       val a = DockPipeline.runAcme(acme, "acme il week.xlsx", "9/15/2026")
       val p = DockPipeline.runPhillips(phillips, "phillips 436 export.xlsx", "9/15/2026")
       canonicalSinks(a); canonicalSinks(p)
       (a, p)
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(rows(a.select("Branch", "Item")) == Seq(Seq(114L, 2345678L), Seq(186L, 1234567L)))
     assert(rows(p.select("Branch", "Warehouse")) == Seq(Seq(186L, 436L), Seq(187L, 436L)))
   }
@@ -107,12 +116,12 @@ class LocalRelationSpec extends SparkSpec {
       Seq("Item", "Description", "142.0", "114", "LOT #", "junk"),
       Seq("1234567", "SHRIMP", "3.0", "", "L1", "j"),
       Seq("2345678.0", "SALMON", "n/a", "4", "L3", "j")))
-    val (out, jobs) = jobsDuring {
+    val (out, jobs, executions) = jobsDuring {
       val out = SouthernCrossPipeline.run(grid, edd = "9/15/2026")
       canonicalSinks(out)
       out
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(rows(out.select("Branch", "Item")) == Seq(Seq(114L, 2345678L), Seq(142L, 1234567L)))
   }
 
@@ -121,10 +130,10 @@ class LocalRelationSpec extends SparkSpec {
       Seq("Price Sheet", "", "", "", ""),
       Seq("Item#", "Item Name", "FOB", "490.0", "142"),
       Seq("1234567", "SHRIMP", "9.10", "12.50", "$13.00")))
-    val (text, jobs) = jobsDuring {
+    val (text, jobs, executions) = jobsDuring {
       MacroRenderer.dlpm(PriceSheetPipeline.run(grid), initials = "p.y", dateText = "08/12/26")
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(text.split("\n").contains("Type 498-1234567"))
   }
 
@@ -144,7 +153,7 @@ class LocalRelationSpec extends SparkSpec {
     val po = Seq(("114", "114-57466")).toDF("Store", "PO #")
     val carrier = Seq(("114", 8)).toDF("Store", "carrier code")
     val dir = Files.createTempDirectory("flips").toString
-    val ((bigOut, babyOut), jobs) = jobsDuring {
+    val ((bigOut, babyOut), jobs, executions) = jobsDuring {
       val bigOut = FlipsPipeline.outputBig(
         FlipsPipeline.pivotBig(FlipsPipeline.cleanBig(spark, big)),
         FlipsPipeline.storeDim(spark, big), edd = "8/14/26")
@@ -156,7 +165,7 @@ class LocalRelationSpec extends SparkSpec {
         cleaned, pivot, po, carrier)
       (bigOut, babyOut)
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(rows(bigOut.select("Branch", "XDCK", "FOB")) == Seq(Seq(114L, 7.0, 12.5)))
     assert(rows(babyOut.select("Store", "PO #", "weight")) == Seq(Seq(114L, "114-57466", 6L)))
   }
@@ -164,11 +173,11 @@ class LocalRelationSpec extends SparkSpec {
   test("a grid holding only its header rows runs and writes its sinks with no " +
       "Spark job and no rows") {
     val grid = SchemaOps.gridFromRows(spark, allocationRows.take(2))
-    val ((out, text), jobs) = jobsDuring {
+    val ((out, text), jobs, executions) = jobsDuring {
       val out = AllocationPipeline.run(grid, edd = Some("8/14/2026"))
       (out, canonicalSinks(out))
     }
-    assert(jobs == 0)
+    assert(jobs == 0 && executions == 0)
     assert(out.collect().isEmpty)
     assert(text.trim.isEmpty)
   }

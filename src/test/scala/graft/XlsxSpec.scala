@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+import scala.jdk.CollectionConverters._
 import graft.sources.Xlsx
 import graft.sinks.XlsxWriter
 import graft.sinks.XlsxWriter.Sheet
@@ -26,13 +29,40 @@ class XlsxSpec extends SparkSpec {
       Sheet("data", Seq(
         Seq("Item#", "Item Description", "114.0", "Total"),
         Seq("1234567", "FROZEN <SHRIMP> & \"CO\"", 3, 5),
-        Seq("2345678", null, 4.5, null)))))
+        Seq("2345678", null, 4.5, null),
+        Seq("line one\n  |line two")))))
     val grid = Xlsx.readSheetGrid(path)
     assert(grid(0) == Seq("Item#", "Item Description", "114.0", "Total"))
     assert(grid(1) == Seq("1234567", "FROZEN <SHRIMP> & \"CO\"", "3", "5"))
     assert(grid(2)(0) == "2345678")
     assert(grid(2)(1) == null)
     assert(grid(2)(2) == "4.5")
+    assert(grid(3) == Seq("line one\n  |line two"))
+  }
+
+  test("a sheet part that declares a DOCTYPE is refused: no external entity is read") {
+    val dir = tmpDir()
+    val secret = Files.writeString(Paths.get(s"$dir/secret.txt"), "TOP-SECRET")
+    val plain = s"$dir/plain.xlsx"
+    XlsxWriter.write(plain, Seq(Sheet("data", Seq(Seq("x")))))
+    val sheetPart = "xl/worksheets/sheet1.xml"
+    val hostile = s"$dir/hostile.xlsx"
+    val in = new ZipFile(plain)
+    val out = new ZipOutputStream(Files.newOutputStream(Paths.get(hostile)))
+    try in.entries.asScala.foreach { e =>
+      out.putNextEntry(new ZipEntry(e.getName))
+      out.write(
+        if (e.getName != sheetPart) in.getInputStream(e).readAllBytes()
+        else ("""<?xml version="1.0" encoding="UTF-8"?>""" +
+          s"""<!DOCTYPE worksheet [<!ENTITY xxe SYSTEM "${secret.toUri}">]>""" +
+          """<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>&xxe;</t>""" +
+          """</is></c></row></sheetData></worksheet>""").getBytes(StandardCharsets.UTF_8))
+      out.closeEntry()
+    } finally { out.close(); in.close() }
+    val err = intercept[IllegalArgumentException](Xlsx.readSheetGrid(hostile))
+    assert(err.getMessage.contains(sheetPart) && err.getMessage.contains("DOCTYPE"),
+      err.getMessage)
+    assert(!err.getMessage.contains("TOP-SECRET"))
   }
 
   test("sheet selection: by name, and active-visible default") {
